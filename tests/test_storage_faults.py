@@ -175,40 +175,69 @@ def test_catalog_sees_transient_as_failure_not_empty(catalog):
         st._fs = orig
 
 
-def test_catalog_retries_torn_manifest_read(catalog):
-    """Both filesystem backends make a version file VISIBLE at
-    create() and write the payload after, so a reader landing inside
-    that window sees an empty JSON doc (the observed stream-poll
-    flake). The versioned read must retry — the in-flight writer
-    closes within milliseconds — and only a doc that STAYS
-    unparseable (a writer that died mid-create) may raise."""
+def test_manifest_publish_is_whole_or_absent(catalog, monkeypatch):
+    """Both backends publish a manifest version by writing a temp file
+    and then linking/renaming it into place, so a reader never sees a
+    version file empty or half-written. A writer that dies mid-write
+    leaves no version file (and no temp file) behind, a second publish
+    of the same version loses without touching the winner, and a
+    latest doc that does not parse is corrupt and fails loudly."""
+    import toshokan_spark.storage as storage
     from toshokan_spark.catalog import CatalogError
 
-    catalog._st.mkdirs(catalog._manifest_dir("torn"))
-    assert catalog._try_write_version("torn", 1, [])
-
     st = catalog._st
-    orig = st.read_text
-    calls = {"n": 0}
+    d = catalog._manifest_dir("pub")
+    st.mkdirs(d)
+    path = catalog._version_path("pub", 1)
 
-    def torn_once(path):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            return ""  # reader inside the create()..write window
-        return orig(path)
+    def died(*_a, **_k):
+        raise OSError("writer died mid-write")
 
-    st.read_text = torn_once
-    try:
-        assert catalog.segments("torn") == []
-        assert calls["n"] >= 2, "torn read was not retried"
-    finally:
-        st.read_text = orig
+    with monkeypatch.context() as m:
+        if isinstance(st, HadoopStorage):
+            m.setattr(storage, "bytearray", died, raising=False)
+        else:
+            m.setattr(storage.os, "fsync", died)
+        with pytest.raises(Exception, match="writer died"):
+            st.write_text_exclusive(path, '{"segments":[]}')
+    assert not st.exists(path)
+    assert catalog.segments("pub") == []
 
-    # a permanently torn latest must still fail loudly, not read as
-    # an empty manifest
-    st.read_text = lambda path: ""
-    try:
-        with pytest.raises(CatalogError):
-            catalog.segments("torn")
-    finally:
-        st.read_text = orig
+    assert st.write_text_exclusive(path, '{"segments":[]}')
+    assert not st.write_text_exclusive(path, '{"segments":[{"id":"x"}]}')
+    assert st.read_text(path) == '{"segments":[]}'
+    assert not [n for n in st.list_names(d) if ".tmp." in n]
+
+    # a permanently torn latest fails loudly, never reads as empty
+    monkeypatch.setattr(st, "read_text", lambda path: "")
+    with pytest.raises(CatalogError):
+        catalog.segments("pub")
+
+
+def test_local_exclusive_publish_has_one_winner(tmp_path):
+    """Concurrent publishes of one version: exactly one writer wins,
+    and the file holds the winner's whole payload."""
+    import threading
+
+    from toshokan_spark.storage import LocalStorage
+
+    st = LocalStorage()
+    path = str(tmp_path / "v1.json")
+    payloads = [f'{{"w":{i},"pad":"{"x" * 65536}"}}' for i in range(8)]
+    won: list = []
+    start = threading.Barrier(len(payloads))
+
+    def publish(p):
+        start.wait()
+        if st.write_text_exclusive(path, p):
+            won.append(p)
+
+    threads = [threading.Thread(target=publish, args=(p,)) for p in payloads]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert len(won) == 1
+    assert st.read_text(path) == won[0]
+    assert sorted(st.list_names(str(tmp_path))) == ["v1.json"]

@@ -19,9 +19,10 @@ Guarantees preserved from the reference:
 * **atomic manifest updates with optimistic concurrency**: the
   manifest is a versioned log (``manifests/<index>/v<N>.json``, each
   file a full snapshot — manifests are tiny); every mutation
-  compare-and-swaps the next version via exclusive create (O_EXCL
-  locally, ``create(overwrite=false)`` on Hadoop — atomic on HDFS,
-  Delta-on-S3-grade best-effort on object stores) and retries on
+  compare-and-swaps the next version via exclusive create (a fully
+  written temp file hard-linked into place locally, renamed without
+  overwrite on Hadoop — atomic on HDFS, Delta-on-S3-grade best-effort
+  on object stores; never visible half-written) and retries on
   conflict by re-reading and re-applying. Two concurrent ingest jobs
   can commit segments to the same index without losing either (the
   reference gets this from Postgres transactions);
@@ -30,13 +31,15 @@ Guarantees preserved from the reference:
   every index, `src/commands/mod.rs:107` has no WHERE clause; SURVEY
   §3.1 flags it as a latent bug — we fix it and regression-test it).
 
-At 100 TB the manifest stays tiny (one JSON line per segment, i.e.
-per committed write batch), and listing is O(manifest), never a
-recursive object-store LIST.
+At 100 TB the manifest stays tiny (one compact JSON object per
+segment, i.e. per committed write batch, plus each distinct segment
+schema once), and listing is O(manifest), never a recursive
+object-store LIST.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import secrets
 import time
@@ -75,6 +78,53 @@ def uuid7() -> str:
     ) + ((0b10 << 62 | rand_b).to_bytes(8, "big"))
     h = b.hex()
     return f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:]}"
+
+
+def _schema_id(schema: dict) -> str:
+    """Short content hash of a recorded segment schema: its key in a
+    manifest version's ``schemas`` map."""
+    canon = json.dumps(schema, sort_keys=True, separators=(",", ":"))
+    return hashlib.sha256(canon.encode("utf-8")).hexdigest()[:16]
+
+
+def _encode_manifest(
+    segs: "list[SegmentEntry]", deletes: "Optional[list[DeleteEntry]]"
+) -> str:
+    """One manifest version as compact JSON. Each distinct segment
+    schema is stored once, in ``schemas``; an entry holds its id."""
+    schemas: dict = {}
+    ids: dict = {}  # id(schema object) -> content id; entries share objects
+    out = []
+    for s in segs:
+        d = asdict(s)
+        if s.schema is not None:
+            sid = ids.get(id(s.schema))
+            if sid is None:
+                sid = ids[id(s.schema)] = _schema_id(s.schema)
+            schemas[sid] = s.schema
+            d["schema"] = sid
+        out.append(d)
+    doc: dict = {"segments": out}
+    if schemas:
+        doc["schemas"] = schemas
+    if deletes:
+        doc["deletes"] = [asdict(d) for d in deletes]
+    return json.dumps(doc, separators=(",", ":"))
+
+
+def _decode_manifest(
+    doc: dict,
+) -> "tuple[list[SegmentEntry], list[DeleteEntry]]":
+    """Entries of one manifest version, schemas expanded inline. An id
+    missing from ``schemas`` reads as no recorded schema (the scan
+    infers it), never as an error."""
+    schemas = doc.get("schemas", {})
+    segs = []
+    for s in doc.get("segments", []):
+        if isinstance(s.get("schema"), str):
+            s = dict(s, schema=schemas.get(s["schema"]))
+        segs.append(SegmentEntry(**s))
+    return segs, [DeleteEntry(**d) for d in doc.get("deletes", [])]
 
 
 @dataclass
@@ -135,6 +185,17 @@ class SegmentEntry:
     #: recorded width is then a MANIFEST-ONLY read. None = field not
     #: configured (``FieldConfig.histogram_bin``) or old manifest.
     field_histograms: Optional[dict] = None
+    #: the Spark schema a parquet read of this segment resolves to
+    #: (``StructType.jsonValue()``, ``__day`` partition column
+    #: included), recorded at commit from the read the writer already
+    #: makes. Search builds the segment's scan from it instead of
+    #: inferring it from the parquet footers, which costs one Spark
+    #: job per segment per query (`search.read_segments`). On storage
+    #: each distinct schema is written once per manifest version, in
+    #: the version's ``schemas`` map, and the entry holds its content
+    #: id; reads expand it back, so callers always see the schema
+    #: itself. None = old manifest: the scan infers the schema.
+    schema: Optional[dict] = None
 
 
 @dataclass
@@ -211,7 +272,7 @@ class FsCatalog:
         self._st.write_text_atomic(p, json.dumps(config.to_dict(), indent=2))
         self._st.mkdirs(self._manifest_dir(config.name))
         self._st.write_text_exclusive(
-            self._version_path(config.name, 1), json.dumps({"segments": []})
+            self._version_path(config.name, 1), _encode_manifest([], None)
         )
 
     def update_index(self, config: IndexConfig) -> None:
@@ -435,15 +496,27 @@ class FsCatalog:
         return ver, segs
 
     def snapshot(
-        self, name: str
+        self, name: str, at_version: Optional[int] = None
     ) -> "tuple[int, list[SegmentEntry], list[DeleteEntry]]":
-        """One CONSISTENT ``(version, segments, deletes)`` read of the
-        latest manifest. Callers that need both lists (merge) must use
-        this instead of separate ``segments()`` + ``deletes()`` calls —
-        two reads can straddle a concurrent commit, so the deletes
-        list would be from a different snapshot than the segment list
-        that chose what to rewrite."""
-        return self._read_versioned_full(name)
+        """One CONSISTENT ``(version, segments, deletes)`` read — of the
+        latest manifest, or of the retained version ``at_version``.
+        Callers that need both lists (search, merge) must use this
+        instead of separate ``segments()`` + ``deletes()`` calls — two
+        reads can straddle a concurrent commit, so the deletes list
+        would be from a different snapshot than the segment list that
+        chose what to scan or rewrite."""
+        if at_version is None:
+            return self._read_versioned_full(name)
+        try:
+            doc = json.loads(
+                self._st.read_text(self._version_path(name, at_version))
+            )
+        except StorageNotFound:
+            raise CatalogError(
+                f"manifest version {at_version} of {name!r} is GC'd or "
+                f"never existed (retained: {self.versions(name)})"
+            ) from None
+        return (at_version, *_decode_manifest(doc))
 
     def _read_versioned_full(
         self, name: str
@@ -452,18 +525,12 @@ class FsCatalog:
         empty manifest (``StorageNotFound``); any other storage
         failure propagates — a transient auth/network error must not
         silently turn ``segments()`` into 0 rows. The list->read pair
-        retries two transient races: a reader stalled more than
+        retries one transient race: a reader stalled more than
         KEEP_VERSIONS commits between listing and reading can find its
-        listed latest GC'd (re-listing observes a strictly newer
-        latest), and on filesystem backends ``write_text_exclusive``
-        makes the version file VISIBLE at create() with the payload
-        written after — a reader landing inside that window sees an
-        empty/partial JSON doc (observed as a suite flake: json
-        ``Expecting value`` on a manifest the stream was committing
-        that instant). The in-flight writer closes within
-        milliseconds, so a short backoff and re-read resolves it; a
-        doc still unparseable after the retries (a writer that died
-        mid-create) raises, exactly as it always did."""
+        listed latest GC'd, and re-listing observes a strictly newer
+        latest. Version files are published whole
+        (``Storage.write_text_exclusive``), so a doc that does not
+        parse is corrupt, not in flight, and raises."""
         d = self._manifest_dir(name)
         last_exc: Optional[Exception] = None
         for attempt in range(5):
@@ -481,21 +548,20 @@ class FsCatalog:
             latest = versions[-1]
             ver = int(latest[1:-5])
             try:
-                doc = json.loads(self._st.read_text(join_path(d, latest)))
+                text = self._st.read_text(join_path(d, latest))
             except StorageNotFound as e:
                 last_exc = e
                 continue
+            try:
+                doc = json.loads(text)
             except json.JSONDecodeError as e:
-                last_exc = e
-                continue
-            return (
-                ver,
-                [SegmentEntry(**s) for s in doc.get("segments", [])],
-                [DeleteEntry(**d) for d in doc.get("deletes", [])],
-            )
+                raise CatalogError(
+                    f"manifest {latest} of {name!r} is not valid JSON"
+                ) from e
+            return (ver, *_decode_manifest(doc))
         raise CatalogError(
             f"manifest for {name!r} stayed unreadable across retries "
-            f"(GC race, or a torn concurrent write that never completed)"
+            f"(its latest version was GC'd under every read)"
         ) from last_exc
 
     def _try_write_version(
@@ -505,12 +571,8 @@ class FsCatalog:
         segs: list[SegmentEntry],
         deletes: "Optional[list[DeleteEntry]]" = None,
     ) -> bool:
-        doc: dict = {"segments": [asdict(s) for s in segs]}
-        if deletes:
-            doc["deletes"] = [asdict(d) for d in deletes]
         ok = self._st.write_text_exclusive(
-            self._version_path(name, version),
-            json.dumps(doc, indent=1),
+            self._version_path(name, version), _encode_manifest(segs, deletes)
         )
         if ok:
             self._gc_versions(name, version)
@@ -560,36 +622,14 @@ class FsCatalog:
         replaced segments' data, invalidating OLDER snapshots that
         reference them (the Delta-VACUUM caveat) — the manifest read
         still succeeds, the scan fails."""
-        if at_version is None:
-            return self._read_versioned(name)[1]
-        try:
-            doc = json.loads(
-                self._st.read_text(self._version_path(name, at_version))
-            )
-        except StorageNotFound:
-            raise CatalogError(
-                f"manifest version {at_version} of {name!r} is GC'd or "
-                f"never existed (retained: {self.versions(name)})"
-            ) from None
-        return [SegmentEntry(**s) for s in doc.get("segments", [])]
+        return self.snapshot(name, at_version)[1]
 
     def deletes(
         self, name: str, at_version: Optional[int] = None
     ) -> "list[DeleteEntry]":
         """Pending delete tombstones — latest, or those of a retained
         snapshot (time travel applies the deletes OF that version)."""
-        if at_version is None:
-            return self._read_versioned_full(name)[2]
-        try:
-            doc = json.loads(
-                self._st.read_text(self._version_path(name, at_version))
-            )
-        except StorageNotFound:
-            raise CatalogError(
-                f"manifest version {at_version} of {name!r} is GC'd or "
-                f"never existed (retained: {self.versions(name)})"
-            ) from None
-        return [DeleteEntry(**d) for d in doc.get("deletes", [])]
+        return self.snapshot(name, at_version)[2]
 
     def add_delete(
         self, name: str, query: str, *, entry: "DeleteEntry | None" = None

@@ -25,11 +25,23 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from toshokan_spark.functions.tokenizers import analyze_term, tokenize
 
 K1 = 1.2
 B = 0.75
+
+#: schema of the per-segment stats parquets :func:`segment_field_stats`
+#: writes. Readers pass it to ``spark.read.schema`` so a scored query
+#: reads no parquet footer to learn it (inference runs a Spark job).
+STATS_SCHEMA = StructType([
+    StructField("field", StringType()),
+    StructField("term", StringType()),
+    StructField("df", LongType()),
+    StructField("n_docs", LongType()),
+    StructField("sum_dl", LongType()),
+])
 
 
 def with_bm25(
@@ -193,7 +205,7 @@ def merged_stats_provider(spark, stats_paths: list[str], score_field: str):
 
     def provide(terms: list[str]) -> DataFrame:
         sdf = (
-            spark.read.parquet(*stats_paths)
+            spark.read.schema(STATS_SCHEMA).parquet(*stats_paths)
             .filter(F.col("field") == F.lit(score_field))
             .filter(F.col("term").isNull() | F.col("term").isin(list(terms)))
         )

@@ -275,7 +275,8 @@ def build_segment(
     } or None
 
     # stats are derived data: write them BEFORE the manifest commit so
-    # a manifested segment always has its stats sibling
+    # a manifested segment always has its stats sibling. The read's
+    # schema is recorded on the entry, so searches never infer it.
     written = df.sparkSession.read.parquet(seg_path)
     write_segment_stats(config, seg_name, written)
 
@@ -317,6 +318,7 @@ def build_segment(
         token_blooms=token_blooms or None,
         field_sums=field_sums,
         field_histograms=field_histograms,
+        schema=written.schema.jsonValue(),
     )
     return entry, seg_path, seg_name
 

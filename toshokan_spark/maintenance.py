@@ -85,7 +85,10 @@ def merge_segments(
 
     from toshokan_spark.search import read_segments
 
-    df = read_segments(spark, paths, partitioned=config.time_field is not None)
+    df = read_segments(
+        spark, paths, partitioned=config.time_field is not None,
+        schemas=[s.schema for s in segs],
+    )
     # materialize pending delete tombstones while rewriting (the merge
     # IS the physical delete): survivors only. Tombstones clear from
     # the manifest ONLY when this merge covered every segment — a
@@ -257,11 +260,12 @@ def merge_segments(
     # bins count rows the rewrite dropped)
     from toshokan_spark.indexer import compute_field_histograms
 
+    # one read of the merged segment serves the stats recompute below
+    # and records the schema searches build its scan from
+    written = spark.read.parquet(seg_path)
     field_histograms = None
     if deletes:
-        field_histograms = compute_field_histograms(
-            config, spark.read.parquet(seg_path)
-        )
+        field_histograms = compute_field_histograms(config, written)
     elif all(s.field_histograms for s in segs):
         names = set(segs[0].field_histograms)
         for s in segs[1:]:
@@ -282,7 +286,7 @@ def merge_segments(
     # manifested (stats follow data through compaction)
     from toshokan_spark.indexer import stats_path, write_segment_stats
 
-    write_segment_stats(config, seg_name, spark.read.parquet(seg_path))
+    write_segment_stats(config, seg_name, written)
 
     # token blooms union by bitwise OR when every input recorded the
     # field with the same geometry; otherwise the merged segment drops
@@ -305,7 +309,7 @@ def merge_segments(
         created_at_ms=int(time.time() * 1000),
         min_day=min_day, max_day=max_day, field_stats=field_stats,
         token_blooms=token_blooms, field_sums=field_sums,
-        field_histograms=field_histograms,
+        field_histograms=field_histograms, schema=written.schema.jsonValue(),
     )
     # one atomic manifest write: new in, old out (`merge.rs:63-66`);
     # tombstones this merge materialized clear in the same write
@@ -372,7 +376,8 @@ def cluster_merge_segments(
     config = catalog.get_index(index_name)
     paths = [join_path(config.path, s.file_name) for s in segs]
     df = read_segments(
-        spark, paths, partitioned=config.time_field is not None
+        spark, paths, partitioned=config.time_field is not None,
+        schemas=[s.schema for s in segs],
     )
     if deletes:
         df = df.filter(
@@ -691,11 +696,11 @@ def snapshot_index(
     from dataclasses import asdict
 
     from toshokan_spark.indexer import STATS_DIR, stats_path
+    from toshokan_spark.search import read_segments
     from toshokan_spark.storage import storage_for
 
     config = catalog.get_index(index_name)
-    segs = catalog.segments(index_name)
-    dels = catalog.deletes(index_name)
+    _ver, segs, dels = catalog.snapshot(index_name)
     st_src = catalog.data_storage(config)
     st_dst = storage_for(dest_root, spark)
     st_dst.mkdirs(dest_root)
@@ -704,7 +709,7 @@ def snapshot_index(
     for s in segs:
         src = join_path(config.path, s.file_name)
         dst = join_path(dest_root, s.file_name)
-        df = spark.read.parquet(src)
+        df = read_segments(spark, [src], partitioned, schemas=[s.schema])
         w = df.write.mode("overwrite")
         if partitioned and "__day" in df.columns:
             w = w.partitionBy("__day")
@@ -744,6 +749,7 @@ def restore_snapshot(
 
     from toshokan_spark.catalog import CatalogError, DeleteEntry
     from toshokan_spark.indexer import STATS_DIR
+    from toshokan_spark.search import read_segments
     from toshokan_spark.storage import storage_for
 
     st_snap = storage_for(snap_root, spark)
@@ -796,7 +802,9 @@ def restore_snapshot(
         # partially failed restore must replace the leftover segment
         # dir, not die on it — restores are idempotent (ADVICE r14)
         try:
-            df = spark.read.parquet(src)
+            df = read_segments(
+                spark, [src], partitioned, schemas=[entry.schema]
+            )
             w = df.write.mode("overwrite")
             if partitioned and "__day" in df.columns:
                 w = w.partitionBy("__day")

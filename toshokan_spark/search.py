@@ -44,27 +44,60 @@ from toshokan_spark.plans.ast import parse_query
 
 
 def read_segments(
-    spark: SparkSession, paths: list[str], partitioned: bool = False
+    spark: SparkSession,
+    paths: list[str],
+    partitioned: bool = False,
+    schemas: "Optional[list]" = None,
 ) -> DataFrame:
     """Scan of all manifested segments (the reference's equivalent is
     the implicit union-of-segments at search, `search.rs:162-204`).
 
-    Unpartitioned indexes get ONE multi-path scan node —
-    ``mergeSchema`` makes cross-segment schema drift behave exactly
-    like ``unionByName(allowMissingColumns=True)`` (missing columns
-    null-fill) while keeping the plan a single scan: a 10k-segment
-    index analyzes in O(1) plan nodes instead of a 10k-arm union
-    (footer reads for the merged schema run as one distributed job).
+    ``schemas`` lists each segment's recorded schema
+    (``SegmentEntry.schema``, parallel to *paths*). When every segment
+    has one, the scan is built from them and no parquet footer is
+    read while planning; inferring a schema costs one Spark job per
+    read, so a query that keeps k segments would run k jobs before
+    its own. The result is the same frame inference gives: same
+    columns in the same order, same types, same rows.
 
-    Indexes with the ``__day=`` time-partition layout fall back to
-    per-segment scans + ``unionByName``: Spark's partition discovery
-    rejects multiple partitioned roots (CONFLICTING_DIRECTORY_
-    STRUCTURES — the ``seg-*`` level between the roots and the
-    ``__day=`` dirs is not a partition component), and collapsing the
-    layout would forfeit PartitionFilters pruning. The union is a
-    plan-level concat, not a shuffle, and Catalyst still pushes
-    filters/pruning into every arm.
+    Unpartitioned indexes get ONE multi-path scan node. Its schema is
+    the recorded schemas folded in Python, before any Spark call, the
+    way ``mergeSchema`` folds footers: in file-path order (the order
+    Spark sorts the files in, not the manifest's), first-seen column
+    order, new columns appended. A column missing from a segment null-fills,
+    exactly like ``unionByName(allowMissingColumns=True)``, so a
+    10k-segment index analyzes in O(1) plan nodes instead of a
+    10k-arm union.
+
+    Indexes with the ``__day=`` time-partition layout read each
+    segment on its own and ``unionByName`` the reads: Spark's
+    partition discovery rejects multiple partitioned roots
+    (CONFLICTING_DIRECTORY_STRUCTURES — the ``seg-*`` level between
+    the roots and the ``__day=`` dirs is not a partition component),
+    and collapsing the layout would forfeit PartitionFilters pruning.
+    The union is a plan-level concat, not a shuffle, and Catalyst
+    still pushes filters/pruning into every arm.
+
+    A segment without a recorded schema (old manifests), or recorded
+    types the fold cannot reconcile, sends the read down the
+    inference path: ``mergeSchema`` over the footers for unpartitioned
+    indexes, a footer read per segment otherwise.
     """
+    pinned = _recorded_schemas(schemas, len(paths))
+    if pinned is not None and (partitioned or len(paths) == 1):
+        return _union_segments(
+            [spark.read.schema(t).parquet(p) for t, p in zip(pinned, paths)]
+        )
+    if pinned is not None:
+        # every file of a segment shares its schema, so the files'
+        # path order is the order of the segment paths plus "/"
+        by_path = sorted(range(len(paths)), key=lambda i: paths[i].rstrip("/") + "/")
+        merged = merge_schemas([pinned[i] for i in by_path])
+        if merged is not None:
+            try:
+                return spark.read.schema(merged).parquet(*paths)
+            except Exception:
+                pass  # unexpected layout: the inference path decides
     if len(paths) == 1:
         return spark.read.parquet(paths[0])
     if not partitioned:
@@ -74,11 +107,85 @@ def read_segments(
             # unexpected layout (e.g. partition dirs without the
             # partitioned hint) — per-segment fallback below
             pass
-    dfs = [spark.read.parquet(p) for p in paths]
+    return _union_segments([spark.read.parquet(p) for p in paths])
+
+
+def _union_segments(dfs: "list[DataFrame]") -> DataFrame:
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d, allowMissingColumns=True)
     return out
+
+
+def _recorded_schemas(schemas, n: int):
+    """Each segment's recorded schema as a StructType, or None when
+    any segment has none."""
+    from pyspark.sql.types import StructType
+
+    if schemas is None or len(schemas) != n or any(s is None for s in schemas):
+        return None
+    parsed: dict = {}  # segments of one manifest share schema objects
+    out = []
+    for s in schemas:
+        t = parsed.get(id(s))
+        if t is None:
+            t = parsed[id(s)] = StructType.fromJson(s)
+        out.append(t)
+    return out
+
+
+def merge_schemas(schemas: list) -> "Optional[StructType]":
+    """Fold segment schemas the way a ``mergeSchema`` parquet read
+    folds its files' footers: left to right, a column keeps its
+    first-seen position and new columns are appended; nested structs
+    merge the same way. Returns None when two schemas disagree on a
+    column's type or metadata, or name columns that differ only in
+    case: Spark settles those itself, so the caller falls back to
+    inference rather than guess its answer."""
+    out = schemas[0]
+    for s in schemas[1:]:
+        out = _merge_type(out, s)
+        if out is None:
+            return None
+    return out
+
+
+def _merge_type(a, b):
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if a == b:
+        return a
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        fields = list(a.fields)
+        at = {f.name: i for i, f in enumerate(fields)}
+        lower = {f.name.lower() for f in fields}
+        for f in b.fields:
+            i = at.get(f.name)
+            if i is None:
+                if f.name.lower() in lower:
+                    return None
+                at[f.name] = len(fields)
+                lower.add(f.name.lower())
+                fields.append(f)
+                continue
+            left = fields[i]
+            t = _merge_type(left.dataType, f.dataType)
+            if t is None or left.metadata != f.metadata:
+                return None
+            fields[i] = StructField(
+                left.name, t, left.nullable or f.nullable, left.metadata
+            )
+        return StructType(fields)
+    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
+        t = _merge_type(a.elementType, b.elementType)
+        return None if t is None else ArrayType(t, a.containsNull or b.containsNull)
+    if isinstance(a, MapType) and isinstance(b, MapType):
+        k = _merge_type(a.keyType, b.keyType)
+        v = _merge_type(a.valueType, b.valueType)
+        if k is None or v is None:
+            return None
+        return MapType(k, v, a.valueContainsNull or b.valueContainsNull)
+    return None
 
 
 def _pruned_segments(config, segs, node, verdict_sink=None):
@@ -210,6 +317,50 @@ def apply_deletes(pred, config: IndexConfig, columns: set, deletes) -> "object":
     return pred
 
 
+def _filtered_scan(
+    spark: SparkSession,
+    catalog: FsCatalog,
+    index_name: str,
+    node,
+    at_version: Optional[int],
+    compile_pred,
+):
+    """The scan every index search shares: one manifest snapshot, its
+    segments pruned against *node*, the survivors' scan, the compiled
+    query (``compile_pred(config, columns)``) with the snapshot's
+    delete tombstones masked out, and the query's time bounds pushed
+    onto the ``__day`` layout. Returns ``(config, segments, scan,
+    predicate)``; scan and predicate are None when pruning kept no
+    segment."""
+    from toshokan_spark.storage import join_path
+
+    config = catalog.get_index(index_name)
+    _ver, segs, deletes = catalog.snapshot(index_name, at_version=at_version)
+    lo, hi, segs = _pruned_segments(config, segs, node)
+    if not segs:
+        return config, segs, None, None
+    df = read_segments(
+        spark,
+        [join_path(config.path, s.file_name) for s in segs],
+        partitioned=config.time_field is not None,
+        schemas=[s.schema for s in segs],
+    )
+    columns = set(df.columns)
+    pred = apply_deletes(
+        compile_pred(config, columns), config, columns, deletes
+    )
+    # resurrect the reference's dead time_field as real partition
+    # pruning: a range/cmp on the time field also constrains the
+    # ``__day`` layout, so whole day-directories (and at 100 TB,
+    # whole object-store prefixes) drop out of the scan
+    if config.time_field and "__day" in columns:
+        if lo is not None:
+            pred = pred & (F.col("__day") >= F.lit(lo.date()))
+        if hi is not None:
+            pred = pred & (F.col("__day") <= F.lit(hi.date()))
+    return config, segs, df, pred
+
+
 def search_df(
     spark: SparkSession,
     catalog: FsCatalog,
@@ -221,44 +372,28 @@ def search_df(
 ) -> DataFrame:
     """The distributed part: scan manifested segments, filter, limit.
     ``at_version`` time-travels the scan to a retained manifest
-    snapshot (`catalog.segments`) — the query plan, pruning and all,
+    snapshot (`catalog.snapshot`) — the query plan, pruning and all,
     is built against exactly the segments manifested then."""
-    from toshokan_spark.storage import join_path
-
-    config = catalog.get_index(index_name)
-    segs = catalog.segments(index_name, at_version=at_version)
     node = parse_query(query)
-    lo, hi, segs = _pruned_segments(config, segs, node)
-    paths = [join_path(config.path, s.file_name) for s in segs]
-    if not paths:
-        return spark.createDataFrame([], config.spark_schema())
-    df = read_segments(spark, paths, partitioned=config.time_field is not None)
-    # SQL-text compile from the ALREADY-parsed node (r15 directive 4,
-    # finished r17): one F.expr py4j round trip instead of one per
-    # operator node — the Column backend stays the semantics of
-    # record and the fallback for shapes the renderer declines
-    # (equivalence pinned row-for-row by tests/test_query_sql.py)
-    from toshokan_spark.query_sql import render_node_sql
 
-    sql = render_node_sql(node, config, set(df.columns))
-    pred = (
-        F.expr(sql)
-        if sql is not None
-        else QueryCompiler(config, set(df.columns)).compile(node)
+    def compile_pred(config, columns):
+        # SQL-text compile from the ALREADY-parsed node: one F.expr
+        # py4j round trip instead of one per operator node — the
+        # Column backend stays the semantics of record and the
+        # fallback for shapes the renderer declines (equivalence
+        # pinned row-for-row by tests/test_query_sql.py)
+        from toshokan_spark.query_sql import render_node_sql
+
+        sql = render_node_sql(node, config, columns)
+        if sql is not None:
+            return F.expr(sql)
+        return QueryCompiler(config, columns).compile(node)
+
+    config, _segs, df, pred = _filtered_scan(
+        spark, catalog, index_name, node, at_version, compile_pred
     )
-    pred = apply_deletes(
-        pred, config, set(df.columns),
-        catalog.deletes(index_name, at_version=at_version),
-    )
-    # resurrect the reference's dead time_field as real partition
-    # pruning: a range/cmp on the time field also constrains the
-    # ``__day`` layout, so whole day-directories (and at 100 TB,
-    # whole object-store prefixes) drop out of the scan
-    if config.time_field and "__day" in df.columns:
-        if lo is not None:
-            pred = pred & (F.col("__day") >= F.lit(lo.date()))
-        if hi is not None:
-            pred = pred & (F.col("__day") <= F.lit(hi.date()))
+    if df is None:
+        return spark.createDataFrame([], config.spark_schema())
     out = df.filter(pred)
     if sort_by:
         out = out.orderBy(*sort_by)
@@ -473,14 +608,13 @@ def scored_search_df(
     from toshokan_spark.functions.bm25 import merged_stats_provider, with_bm25
     from toshokan_spark.indexer import stats_path, text_stat_fields
     from toshokan_spark.plans import ast
-    from toshokan_spark.storage import join_path
 
-    config = catalog.get_index(index_name)
-    segs = catalog.segments(index_name, at_version=at_version)
     node = parse_query(query)
-    lo, hi, segs = _pruned_segments(config, segs, node)
-    paths = [join_path(config.path, s.file_name) for s in segs]
-    if not paths:
+    config, segs, df, pred = _filtered_scan(
+        spark, catalog, index_name, node, at_version,
+        lambda config, columns: compile_query_fast(query, config, columns),
+    )
+    if df is None:
         # keep the scored shape (schema + _score) even when pruning
         # eliminates every segment
         return (
@@ -500,23 +634,9 @@ def scored_search_df(
             return out
         return []
 
-    terms = " ".join(positive_terms(ast.parse_query(query)))
+    terms = " ".join(positive_terms(node))
     fld = next((f for f in config.fields if f.name == score_field), None)
     tokenizer = getattr(fld, "tokenizer", None) or "default"
-
-    df = read_segments(spark, paths, partitioned=config.time_field is not None)
-    pred = compile_query_fast(query, config, set(df.columns))
-    pred = apply_deletes(
-        pred, config, set(df.columns),
-        catalog.deletes(index_name, at_version=at_version),
-    )
-    # same partition-level pruning as unscored search: the query's
-    # time bounds also constrain the __day layout inside survivors
-    if config.time_field and "__day" in df.columns:
-        if lo is not None:
-            pred = pred & (F.col("__day") >= F.lit(lo.date()))
-        if hi is not None:
-            pred = pred & (F.col("__day") <= F.lit(hi.date()))
     matched = df.filter(pred)
 
     provider = None
@@ -901,12 +1021,12 @@ def manifest_stats(
     construction, not by luck."""
     from pyspark.sql import types as T
 
-    if catalog.deletes(config.name, at_version=at_version):
+    _ver, segs, deletes = catalog.snapshot(config.name, at_version=at_version)
+    if deletes:
         # pending tombstones are invisible to commit-time stats — the
         # panel would count deleted rows; fall back to the scan (which
         # applies them) until a merge materializes the deletes
         return None
-    segs = catalog.segments(config.name, at_version=at_version)
     if any(s.field_sums is None or field not in s.field_sums for s in segs):
         return None
     n_hits = sum(s.num_rows for s in segs)
@@ -1157,7 +1277,9 @@ def significant_terms_from_stats(
     the HIT SET is tokenized: at 100 TB the background side is a
     metadata-sized aggregation over vocabulary rows, not a corpus
     pass."""
-    sdf = spark.read.parquet(*stats_paths).where(
+    from toshokan_spark.functions.bm25 import STATS_SCHEMA
+
+    sdf = spark.read.schema(STATS_SCHEMA).parquet(*stats_paths).where(
         F.col("field") == F.lit(field)
     )
     bg = (
@@ -1758,9 +1880,9 @@ def manifest_histogram(
     value-identical by construction."""
     from pyspark.sql import types as T
 
-    if catalog.deletes(config.name, at_version=at_version):
+    _ver, segs, deletes = catalog.snapshot(config.name, at_version=at_version)
+    if deletes:
         return None
-    segs = catalog.segments(config.name, at_version=at_version)
     if not segs:
         rows: list = []
     else:
@@ -3471,30 +3593,22 @@ def mlt_search_df(
     from toshokan_spark.functions.bm25 import merged_stats_provider
     from toshokan_spark.indexer import stats_path, text_stat_fields
     from toshokan_spark.operators.relevance import more_like_this
-    from toshokan_spark.storage import join_path
 
-    config = catalog.get_index(index_name)
-    segs = catalog.segments(index_name, at_version=at_version)
+    config, segs, df, pred = _filtered_scan(
+        spark, catalog, index_name, parse_query("*"), at_version,
+        lambda config, columns: compile_query_fast("*", config, columns),
+    )
     id_col = config.fields[0].name
     fld = mlt_field or next(
         (f.name for f in config.fields if f.type == "text"), None
     )
     if fld is None:
         raise ValueError(f"index {index_name!r} has no text field")
-    paths = [join_path(config.path, s.file_name) for s in segs]
-    if not paths:
+    if df is None:
         return (
             spark.createDataFrame([], config.spark_schema())
             .withColumn("_score", F.lit(0.0))
         )
-    df = read_segments(
-        spark, paths, partitioned=config.time_field is not None
-    )
-    pred = compile_query_fast("*", config, set(df.columns))
-    pred = apply_deletes(
-        pred, config, set(df.columns),
-        catalog.deletes(index_name, at_version=at_version),
-    )
     live = df.filter(pred)
 
     provider = None

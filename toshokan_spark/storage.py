@@ -17,8 +17,10 @@ Spark build:
 
 Atomicity contract per backend:
 
-* LocalStorage: temp file + ``os.replace`` — atomic replace.
-* HadoopStorage: a single ``create(overwrite=true)`` stream ("PUT").
+* LocalStorage: temp file + ``os.replace`` — atomic replace; temp
+  file + ``os.link`` for the exclusive (create-if-absent) write.
+* HadoopStorage: a single ``create(overwrite=true)`` stream ("PUT");
+  temp file + rename-without-overwrite for the exclusive write.
   On S3/GCS/ABFS a PUT is atomic — readers see the old or the new
   manifest, never a torn one (the object materializes only at close).
   On hierarchical stores (hdfs) a concurrent reader could in theory
@@ -86,8 +88,9 @@ class Storage(ABC):
     @abstractmethod
     def write_text_exclusive(self, path: str, payload: str) -> bool:
         """Create *path* with *payload* only if it does not already
-        exist; returns False (writing nothing) when it does. The CAS
-        primitive for the versioned manifest log."""
+        exist; returns False (writing nothing) when it does. The file
+        is published whole: a reader never sees it empty or partly
+        written. The CAS primitive for the versioned manifest log."""
 
     @abstractmethod
     def delete_file(self, path: str) -> None: ...
@@ -133,19 +136,27 @@ class LocalStorage(Storage):
         os.replace(tmp, path)
 
     def write_text_exclusive(self, path: str, payload: str) -> bool:
-        # O_EXCL create: atomic on POSIX — exactly one concurrent
-        # writer wins a given version file
+        # write the whole payload to a temp file, then hard-link it to
+        # the version path: link() is atomic create-if-absent on POSIX,
+        # so exactly one concurrent writer wins a given version file,
+        # and a reader never sees it empty or half-written (a writer
+        # that dies before the link leaves only the temp file behind)
+        path = strip_file_scheme(path)
+        tmp = f"{path}.tmp.{secrets.token_hex(4)}"
         try:
-            fd = os.open(
-                strip_file_scheme(path), os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644
-            )
+            with open(tmp, "x", encoding="utf-8") as f:
+                f.write(payload)
+                f.flush()
+                os.fsync(f.fileno())
+            os.link(tmp, path)
+            return True
         except FileExistsError:
             return False
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
-        return True
+        finally:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
 
     def delete_file(self, path: str) -> None:
         os.remove(strip_file_scheme(path))
@@ -189,6 +200,7 @@ class HadoopStorage(Storage):
                     "(its JVM hosts the Hadoop FileSystem connectors)"
                 )
         self._jvm = spark._jvm
+        self._gateway = spark.sparkContext._gateway
         self._conf = spark._jsc.hadoopConfiguration()
 
     def _fs(self, path: str):
@@ -256,28 +268,46 @@ class HadoopStorage(Storage):
             out.close()
 
     def write_text_exclusive(self, path: str, payload: str) -> bool:
-        # create(overwrite=false): atomic create-if-absent on HDFS.
-        # On S3A it is check-then-put, NOT atomic: two concurrent
-        # committers can both win the same manifest version and one
-        # commit is silently lost — so object-store indexes require
-        # a single writer per index (the reference relied on Postgres
-        # transactions for the same guarantee), or a backend with
-        # conditional PUT (If-None-Match) wired in here. Only the
-        # already-exists failure may report False; anything else
-        # (auth, network, quota) must propagate, or an infrastructure
-        # outage shows up as 50 bogus "CAS contention" retries.
+        # temp file, then rename WITHOUT overwrite (FileContext rename
+        # with Options.Rename.NONE): the version file appears whole or
+        # not at all, and on HDFS the rename is an atomic
+        # create-if-absent. On S3A rename is copy + delete and the
+        # existence check is not atomic, so two concurrent committers
+        # can both win the same manifest version and one commit is
+        # silently lost: object-store indexes require a single writer
+        # per index (the reference relied on Postgres transactions for
+        # the same guarantee), or a backend with conditional PUT
+        # (If-None-Match) wired in here. Only the already-exists
+        # failure may report False; anything else (auth, network,
+        # quota) must propagate, or an infrastructure outage shows up
+        # as 50 bogus "CAS contention" retries.
         fs, p = self._fs(path)
+        tmp = self._jvm.org.apache.hadoop.fs.Path(
+            p.getParent(), f".{p.getName()}.tmp.{secrets.token_hex(4)}"
+        )
+        rename = self._jvm.org.apache.hadoop.fs.Options.Rename
+        opts = self._gateway.new_array(rename, 1)
+        opts[0] = rename.NONE
         try:
-            out = fs.create(p, False)
+            out = fs.create(tmp, False)
+            try:
+                out.write(bytearray(payload.encode("utf-8")))
+            finally:
+                out.close()
+            fc = self._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+                p.toUri(), self._conf
+            )
+            fc.rename(tmp, p, opts)
+            return True
         except Exception as e:
             if self._java_is(e, "FileAlreadyExistsException", "AlreadyExists"):
                 return False
             raise
-        try:
-            out.write(bytearray(payload.encode("utf-8")))
         finally:
-            out.close()
-        return True
+            try:
+                fs.delete(tmp, False)
+            except Exception:
+                pass  # best-effort: a leaked temp file is never read
 
     def delete_file(self, path: str) -> None:
         fs, p = self._fs(path)
