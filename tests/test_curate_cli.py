@@ -168,6 +168,42 @@ def test_curate_cli_minhash_dedup_path(spark, curated, capsys):
     assert "exact_kept" in out and "packed_rows" in out
 
 
+def test_curate_checkpoints_every_stage(spark, curated):
+    """Counter test (no wall clock): each curate stage is
+    checkpointed, never persisted, so the pass leaves nothing in the
+    CacheManager and every SQL execution plans (and prints) only its
+    own stage — no plan carries a cached subtree of the pipeline
+    above it."""
+    from toshokan_spark.catalog import FsCatalog
+    from toshokan_spark.pipeline import curate
+
+    cat_root, _ = curated
+    jss = spark._jsparkSession
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = jss.sharedState().statusStore()
+
+    def execution_ids():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return {execs.apply(i).executionId() for i in range(execs.size())}
+
+    spark.catalog.clearCache()  # start from an empty CacheManager
+    before = execution_ids()
+    curate(spark, FsCatalog(cat_root), "curidx", source_field="source",
+           dedup_method="minhash", tail_rate=0.5, seq_len=64)
+    bus.waitUntilEmpty()
+    assert jss.sharedState().cacheManager().isEmpty()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).executionId() not in before
+    ]
+    assert plans, "curate ran no SQL execution"
+    assert not [p for p in plans if "InMemoryRelation" in p]
+    assert max(len(p) for p in plans) < 64 * 1024
+
+
 def test_curate_cli_repeat_and_curriculum(spark, curated, capsys):
     """--repeat-budget expands the train split per the mixture repeat
     plan and --curriculum-stages orders it easy-first; the packed
@@ -1299,6 +1335,56 @@ def test_count_and_validate_commands(spark, tmp_path, capsys):
     assert cli.main(["--catalog", cat, "validate", "cnt", "sev:("]) == 1
     out = _json.loads(capsys.readouterr().out.strip())
     assert out["valid"] is False and "error" in out
+
+
+def test_cli_manifest_commands_read_one_version(spark, tmp_path, capsys,
+                                               monkeypatch):
+    """`stats`, `list`, `count` and `explain` answer from ONE manifest
+    snapshot: a delete committed by another writer right after the
+    command's first manifest read must not make a later read see the
+    newer version (the count fast path would sum a newer version's
+    segments as if nothing were pending)."""
+    import json as _json
+
+    from toshokan_spark import cli
+    from toshokan_spark.catalog import FsCatalog
+
+    cfg = {"name": "one", "path": str(tmp_path / "d" / "one"),
+           "schema": {"fields": [
+               {"name": "id", "type": "number"},
+               {"name": "sev", "type": "text", "tokenizer": "raw"}]}}
+    (tmp_path / "c.json").write_text(_json.dumps(cfg))
+    (tmp_path / "r.jsonl").write_text("".join(
+        _json.dumps({"id": i, "sev": "INFO" if i % 2 else "DEBUG"}) + "\n"
+        for i in range(6)))
+    cat = str(tmp_path / "cat")
+    assert cli.main(["--catalog", cat, "create", str(tmp_path / "c.json")]) == 0
+    assert cli.main(["--catalog", cat, "index", "one",
+                     str(tmp_path / "r.jsonl")]) == 0
+
+    real_snapshot = FsCatalog.snapshot
+    read = []
+
+    def racing_snapshot(self, name, at_version=None):
+        snap = real_snapshot(self, name, at_version)
+        read.append(snap[0])
+        if len(read) == 1:  # a concurrent writer commits a delete
+            FsCatalog(cat).add_delete("one", "sev:DEBUG")
+        return snap
+
+    monkeypatch.setattr(FsCatalog, "snapshot", racing_snapshot)
+    # count first: every command's first read is followed by a delete,
+    # so only count sees a version without pending deletes
+    for argv in (["count", "one"], ["stats", "one"], ["list"],
+                 ["explain", "one", "*"]):
+        read.clear()
+        capsys.readouterr()
+        assert cli.main(["--catalog", cat, *argv]) == 0
+        out = capsys.readouterr().out
+        assert len(set(read)) == 1, (argv, read)
+        if argv[0] == "count":
+            assert _json.loads(out.strip().splitlines()[-1]) == {
+                "count": 6, "source": "manifest"}
 
 
 def test_analyze_fields_msearch_commands(spark, tmp_path, capsys):

@@ -1676,3 +1676,32 @@ def test_moving_fn_and_normalize_one_scan(spark, sf_dir):
         assert phys.count("FileScan") == 1, name
         assert "SortMergeJoin" not in phys, name
         assert "CartesianProduct" not in phys, name
+
+
+def test_local_checkpoint_runs_through_aqe(spark):
+    """``finalize_cached`` and the curate stages materialize with a
+    bare eager ``localCheckpoint()`` on the premise that the
+    checkpoint executes the ADAPTIVE plan: a join + aggregate over 64
+    shuffle partitions must come back as AQE's final plan with its
+    shuffle reads coalesced to a handful of partitions. A Spark
+    upgrade that checkpoints the non-adaptive plan fails here instead
+    of silently running every pair operator at full shuffle width."""
+    from pyspark.sql import functions as F
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force a shuffle join
+    try:
+        a = spark.range(2000).select((F.col("id") % 97).alias("k"), F.col("id").alias("v"))
+        b = spark.range(97).select(F.col("id").alias("k"), (F.col("id") * 2).alias("w"))
+        df = a.join(b, "k").groupBy("w").agg(F.sum("v").alias("s"))
+        cp = df.localCheckpoint()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "AdaptiveSparkPlan isFinalPlan=true" in plan, plan
+        assert "AQEShuffleRead coalesced" in plan, plan
+        assert cp.rdd.getNumPartitions() <= 4
+        assert cp.count() == 97
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -888,11 +888,11 @@ def main(argv: list[str] | None = None) -> int:
                 ).strftime("%Y-%m-%dT%H:%M:%SZ")
             return v
 
-        segs = catalog.segments(a.index)
+        # one manifest snapshot: segments and deletes of one version
+        _ver, segs, dels = catalog.snapshot(a.index)
         total = sum(s.num_rows for s in segs)
         vs = catalog.versions(a.index)
         tt = f", versions v{vs[0]}..v{vs[-1]}" if vs else ""
-        dels = catalog.deletes(a.index)
         dd = f", {len(dels)} pending delete(s)" if dels else ""
         print(f"{a.index}: {len(segs)} segment(s), {total} row(s){tt}{dd}")
         for d in dels:
@@ -2167,8 +2167,7 @@ def main(argv: list[str] | None = None) -> int:
     if a.cmd == "list":
         aliases = catalog.aliases()
         for n in sorted(catalog.list_indexes()):
-            segs = catalog.segments(n)
-            dels = catalog.deletes(n)
+            _ver, segs, dels = catalog.snapshot(n)
             als = sorted(al for al, tgt in aliases.items() if tgt == n)
             doc = {"index": n, "segments": len(segs),
                    "rows": sum(s.num_rows for s in segs)}
@@ -2302,12 +2301,15 @@ def main(argv: list[str] | None = None) -> int:
         from toshokan_spark.plans.ast import All, parse_query
 
         node = parse_query(a.query)
-        dels = catalog.deletes(a.index, at_version=a.at_version)
+        # ONE snapshot decides the path and answers it: a delete
+        # committed between a deletes() and a segments() read would
+        # let the fast path sum a newer version's segments as if
+        # nothing were pending
+        ver, segs, dels = catalog.snapshot(a.index, at_version=a.at_version)
         if isinstance(node, All) and not dels:
             # manifest fast path: commit-time row counts are additive
             # and exact; pending tombstones force the scan path (their
             # mask needs the data)
-            segs = catalog.segments(a.index, at_version=a.at_version)
             print(json.dumps({"count": sum(s.num_rows for s in segs),
                               "source": "manifest"},
                              sort_keys=True, separators=(",", ":")))
@@ -2316,7 +2318,7 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = _spark()
         n = search_df(spark, catalog, a.index, a.query,
-                      limit=None, at_version=a.at_version).count()
+                      limit=None, at_version=ver).count()
         print(json.dumps({"count": n, "source": "scan"},
                          sort_keys=True, separators=(",", ":")))
         return 0
@@ -2412,7 +2414,7 @@ def main(argv: list[str] | None = None) -> int:
         from toshokan_spark.search import _pruned_segments, search_df
 
         config = catalog.get_index(a.index)
-        segs = catalog.segments(a.index)
+        ver, segs, dels = catalog.snapshot(a.index)
         node = parse_query(a.query)
         verdicts = []
         lo, hi, kept = _pruned_segments(config, segs, node, verdict_sink=verdicts)
@@ -2421,7 +2423,6 @@ def main(argv: list[str] | None = None) -> int:
         if lo is not None or hi is not None:
             print(f"time bounds: {lo} .. {hi}")
         print(f"segments: {len(segs)} manifested, {len(kept)} survive pruning")
-        dels = catalog.deletes(a.index)
         if dels:
             print(f"pending deletes: {len(dels)} (compiled as anti-filters "
                   f"into the scan)")
@@ -2439,7 +2440,8 @@ def main(argv: list[str] | None = None) -> int:
                 tiers.append(f"blooms={sorted(s.token_blooms)}")
             print(f"  {mark} {s.file_name} rows={s.num_rows} " + " ".join(tiers))
         spark = _spark()
-        df = search_df(spark, catalog, a.index, a.query, limit=None)
+        df = search_df(spark, catalog, a.index, a.query, limit=None,
+                       at_version=ver)
         print(df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"))
         return 0

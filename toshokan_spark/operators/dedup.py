@@ -1226,23 +1226,27 @@ def minhash_lsh_pairs(
     #   document's shingle set in executor memory: the right default
     #   when candidates are a small fraction of the corpus.
     # * cache_shingles=True: ONE (id, sh, sig) pass (the
-    #   corpus_minhash_signatures shape) is persisted and the verify
-    #   join reads shingles from the cache — no second scan, no second
+    #   corpus_minhash_signatures shape) is checkpointed and the verify
+    #   join reads shingles from it — no second scan, no second
     #   shingle computation, several fewer stages. The right choice
     #   when the candidate fraction is large (dense char-shingle
     #   corpora: ~half the docs are candidates at sf0.1) or the input
     #   is expensive to rescan.
-    # persist either way: the band fan-out references sig 2×bands
-    # times and lambda expressions don't get subexpression elimination
+    # checkpoint either way: the band fan-out references sig 2×bands
+    # times and lambda expressions don't get subexpression elimination;
+    # a checkpoint (not a persist) also keeps the signature plan out
+    # of every later plan that reads it
     if cache_shingles:
         css = corpus_minhash_signatures(
             df, id_col, text_col, num_hashes, k, hash_family, shingle_unit
-        ).persist()
+        ).localCheckpoint()
         sig = css.select("id", "sig")
     else:
         css = None
         sh_df = staged_shingles(df, id_col, text_col, k, shingle_unit)
-        sig = minhash_signatures(sh_df, num_hashes, hash_family=hash_family).persist()
+        sig = minhash_signatures(
+            sh_df, num_hashes, hash_family=hash_family
+        ).localCheckpoint()
     banded = _banded(sig, bands, r, hash_family)
 
     # candidate ids only — shingle arrays never travel through the
@@ -1255,7 +1259,7 @@ def minhash_lsh_pairs(
         _grouped_self_pairs(banded, ["band", "key"], F.col("id"), max_band_freq)
         .select(F.col("p.a").alias("a_id"), F.col("p.b").alias("b_id"))
         .dropDuplicates(["a_id", "b_id"])
-        .persist()  # referenced 3x: candidate-id union + verify join
+        .localCheckpoint()  # referenced 3x: candidate-id union + verify join
     )
     if css is not None:
         sha = css.select(F.col("id").alias("a_id"), F.col("sh").alias("sha"))
@@ -1282,8 +1286,7 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", F.round("jaccard", 6).alias("jaccard"))
     )
-    cached = (cand, sig) if css is None else (cand, css)
-    return finalize_cached(out, *cached)
+    return finalize_cached(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1653,19 +1656,15 @@ def duplicate_clusters(
     Every round is lineage-truncated: iterative DataFrame algorithms
     otherwise DOUBLE their logical plan per round (each iteration
     references the previous twice), and after 10 rounds the driver is
-    analyzing a 1000-scan plan. The truncation runs through the AQE
-    plan (persist → one Dataset action → ``localCheckpoint`` reading
-    the cached blocks → unpersist, the ``finalize_cached`` recipe): a
-    bare eager ``localCheckpoint`` compiles the physical plan WITHOUT
-    adaptive execution, so every round's half-dozen tiny shuffles
-    would run at the full ``spark.sql.shuffle.partitions`` width
-    instead of AQE-coalescing to a handful of tasks — measured ~2×
-    on the whole loop at sf0.1, and at real scale it would also
-    forfeit AQE skew handling. (On a cluster with executor churn,
-    swap localCheckpoint for reliable ``checkpoint()`` — same shape.)
+    analyzing a 1000-scan plan. The truncation is an eager
+    ``localCheckpoint()``, which runs through the adaptive (AQE) plan
+    like any Dataset action, so each round's half-dozen tiny shuffles
+    coalesce to a handful of tasks (the ``finalize_cached``
+    primitive). (On a cluster with executor churn, swap
+    localCheckpoint for reliable ``checkpoint()`` — same shape.)
 
     Convergence is detected by edge-set stability. The per-round
-    probe is O(1): the materializing action already aggregates
+    probe is O(1): one aggregate over the checkpoint computes
     ``(count, bit_xor(xxhash64(u, v)))``, an order-independent
     set signature, and only when the signature repeats does the
     definitive ``exceptAll`` check run (once per call, not per
@@ -1679,17 +1678,14 @@ def duplicate_clusters(
     """
 
     def _materialize(df: DataFrame):
-        """AQE-executed round materialization: returns the
+        """Checkpoint one round's edge set; returns the
         lineage-truncated frame plus its (count, xor-of-hashes) set
-        signature, computed by the same action that fills the cache."""
-        df = df.persist()
-        try:
-            n, sig = df.agg(
-                F.count(F.lit(1)), F.bit_xor(F.xxhash64("u", "v"))
-            ).first()
-            return df.localCheckpoint(), n, sig
-        finally:
-            df.unpersist()
+        signature, read from the checkpoint."""
+        df = df.localCheckpoint()
+        n, sig = df.agg(
+            F.count(F.lit(1)), F.bit_xor(F.xxhash64("u", "v"))
+        ).first()
+        return df, n, sig
 
     spark = pairs.sparkSession
     members = None
@@ -1768,10 +1764,7 @@ def duplicate_clusters(
         converged = True
     else:
         del probe
-        e_dist = e_dist.persist()
-        prev_n = e_dist.count()
-        prev = e_dist.localCheckpoint()
-        e_dist.unpersist()
+        prev, prev_n, _ = _materialize(e_dist)
         prev_sig = object()  # round-0 sentinel: never equals a real signature
         for _ in range(max_iterations + 1):
             cur, cur_n, cur_sig = _materialize(_small_star(_large_star(prev)))

@@ -391,8 +391,7 @@ def apply_mixture(
     # materialize the model-sized weight table once: it is read twice
     # (budget aggregate + rate join) and its lineage is a full corpus
     # token count — without this the composed plan re-scans the corpus
-    # per read (plan-audited: 5 scans -> 3). localCheckpoint's non-AQE
-    # compile is irrelevant for a per-source-row frame.
+    # per read (plan-audited: 5 scans -> 3).
     w = w.localCheckpoint()
     budget = w.agg(F.min(F.col("__t") / F.col("__w")).alias("__b"))
     rates = w.crossJoin(F.broadcast(budget)).select(

@@ -32,9 +32,9 @@ PLAN_SINK: "list[str] | None" = None
 
 
 def finalize_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize *result* now (``localCheckpoint``, one job during
-    which the persisted intermediates give their cache hits), then
-    release every intermediate's cache entry.
+    """Materialize *result* now with an eager ``localCheckpoint()``,
+    then release every intermediate in *cached* (frames the caller
+    persisted because *result* reads them more than once).
 
     Why not just return the lazy plan: ``DataFrame.persist()``
     registers the plan in the session-wide CacheManager, which holds
@@ -42,23 +42,27 @@ def finalize_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
     pipeline service each operator call would leak its cached
     partitions forever. The checkpointed result's blocks are only
     plan-referenced, so the ContextCleaner frees them once the caller
-    drops the returned DataFrame. The results this wraps (candidate /
+    drops the returned DataFrame; its plan is one RDD scan, so a
+    caller composing it pays no analysis or plan-printing cost for
+    the lineage behind it. The results this wraps (candidate /
     duplicate pairs) are output-sized — tiny next to the corpus —
     so eager materialization is the cheap side of the trade.
-    The materialization MUST run through the adaptive (AQE) plan:
-    ``localCheckpoint()`` alone compiles ``queryExecution.toRdd``, a
-    physical plan WITHOUT adaptive execution — no runtime shuffle
-    coalescing, no dynamic broadcast/skew joins — which at sf0.1 made
-    the banded-LSH self-join ~4× slower, and at 100 TB would forfeit
-    the skew handling that matters most. So: persist the result, run
-    ``count()`` (a Dataset action — executes WITH AQE and fills the
-    cache), and only then ``localCheckpoint()`` — whose physical plan
-    is a trivial ``InMemoryTableScan`` over the already-computed
-    blocks instead of a non-adaptive recompute.
+
+    The checkpoint runs through the adaptive (AQE) plan: on PySpark
+    4.1.2 a join + aggregate over 64 shuffle partitions checkpoints
+    through ``AdaptiveSparkPlan isFinalPlan=true`` with coalesced
+    shuffle reads (1 output partition; pinned by
+    ``tests/test_plan_audit.py``). An older recipe ran persist →
+    ``count()`` → ``localCheckpoint()`` on the belief that a bare
+    checkpoint skipped AQE; the cached plan instead pinned the
+    partitioning (``canChangeCachedPlanOutputPartitioning``), which
+    blocked the coalescing and cost extra jobs per call (sf0.01,
+    ``local[2]``: ``dedup_ngram_jaccard`` 14 → 11 jobs;
+    ``dedup_minhash_lsh``, whose intermediates are checkpointed too,
+    23 → 13).
     """
     try:
-        result = result.persist()
-        result.count()
+        out = result.localCheckpoint()
         if PLAN_SINK is not None:
             try:
                 PLAN_SINK.append(
@@ -66,9 +70,8 @@ def finalize_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
                 )
             except Exception:  # diagnostics must never fail the query
                 pass
-        return result.localCheckpoint()
+        return out
     finally:
-        result.unpersist()
         for df in cached:
             df.unpersist()
 

@@ -9,10 +9,14 @@ composed over an ingested index and exposed through the CLI
 Every stage is one of the repo's existing operators; this module only
 sequences them and carries the id/text/source column mapping, so the
 scale properties are the operators' own (bucketed joins, broadcast
-model tables, no windows beyond cluster-sized ones). Intermediate
-frames that feed multiple downstream stages are persisted and
-released in a ``try/finally`` (the CacheManager discipline —
-`operators/util.py:finalize_cached`).
+model tables, no windows beyond cluster-sized ones). Every stage
+frame is materialized with an eager ``localCheckpoint()``: the stage
+count reads the checkpoint, later stages plan over a bare RDD scan
+instead of re-analyzing (and re-printing, per SQL execution) the whole
+pipeline above them, AQE still runs each stage's own shuffles, and the
+blocks are freed by the ContextCleaner once the frame is dropped —
+nothing is registered in the session's CacheManager, so there is
+nothing to unpersist.
 """
 
 from __future__ import annotations
@@ -175,272 +179,248 @@ def curate(
                     F.col("_dynamic").getItem(url_field), "$"
                 ).alias("url")
             )
-    raw = full.select(*sel)  # explicit projection — internals never leak
+    # explicit projection — internals never leak
+    raw = full.select(*sel).localCheckpoint()
+    stage("ingested", raw.count())
 
-    cached: "list[DataFrame]" = []
-    try:
-        raw = raw.persist()
-        cached.append(raw)
-        stage("ingested", raw.count())
+    # 0. URL front gate (FineWeb/C4): domain blocklist then
+    # canonical-URL dedup — whole sites and re-crawled URLs drop
+    # before a single text byte is normalized or shingled
+    if url_field is not None:
+        from toshokan_spark.operators import web
 
-        # 0. URL front gate (FineWeb/C4): domain blocklist then
-        # canonical-URL dedup — whole sites and re-crawled URLs drop
-        # before a single text byte is normalized or shingled
-        if url_field is not None:
-            from toshokan_spark.operators import web
-            from toshokan_spark.operators.util import finalize_cached
-
-            if blocked_domains:
-                dom = spark.createDataFrame(
-                    [(d,) for d in blocked_domains], "domain string"
-                )
-                raw = web.domain_filter(raw, dom, url_col="url",
-                                        mode="block").persist()
-                cached.append(raw)
-                stage("domain_kept", raw.count())
-            # null URLs bypass dedup entirely (ADVICE r12): a null
-            # canonical_url is "unknown provenance", not "duplicate of
-            # every other unknown" — url_dedup's GROUP BY would pool
-            # all nulls into ONE bucket and keep only the min-id doc,
-            # silently discarding most of the null-URL cohort whenever
-            # url_field is sparse (e.g. resolved from _dynamic where
-            # some docs lack the key)
-            with_url = raw.filter(F.col("url").isNotNull())
-            without_url = raw.filter(F.col("url").isNull())
-            keepers = web.url_dedup(with_url).select(
-                F.col("keeper_id").alias("doc_id")
+        if blocked_domains:
+            dom = spark.createDataFrame(
+                [(d,) for d in blocked_domains], "domain string"
             )
-            # finalize_cached, not persist: the gate's canonical-URL
-            # expression tree would otherwise sit at the BASE of every
-            # downstream self-joining stage's logical plan (the
-            # star-contraction rounds double their lineage each pass),
-            # exploding plan strings exponentially; the checkpoint
-            # truncates the lineage to an RDD scan
-            raw = finalize_cached(
-                with_url.join(keepers, "doc_id", "left_semi")
-                .unionByName(without_url)
-                .drop("url")
-            )
-            stage("url_kept", raw.count())
-
-        # 1. canonicalize (NFC, control strip, whitespace collapse)
-        norm = textops.normalize_text(raw)
-        docs = raw.drop("text").join(
-            norm.select("doc_id", F.col("text_norm").alias("text")), "doc_id"
-        ).persist()
-        cached.append(docs)
-        stage("canonicalized", docs.count())
-
-        # 2. exact dedup (min id per content hash)
-        exact = dedup.deduplicate_exact(docs).persist()
-        cached.append(exact)
-        n_exact = exact.count()
-        stage("exact_kept", n_exact)
-
-        # 3. near-dup clusters over the exact-deduped set — the split
-        # stage's leakage fence
-        if dedup_method == "minhash":
-            pairs = dedup.minhash_lsh_pairs(
-                exact, k=jaccard_k, threshold=jaccard_threshold
-            ).select("a_id", "b_id")
-        elif dedup_method == "jaccard":
-            pairs = dedup.ngram_jaccard_pairs(
-                exact, k=jaccard_k, threshold=jaccard_threshold
-            )
-        else:
-            raise ValueError(
-                f"dedup_method must be 'jaccard' or 'minhash', got {dedup_method!r}"
-            )
-        labels = dedup.duplicate_clusters(pairs).persist()
-        cached.append(labels)
-        stage("near_dup_docs", labels.count())
-
-        # 4. Gopher quality gate
-        flags = textops.gopher_rules(exact)
-        quality = exact.join(
-            flags.filter(F.col("passes")).select("doc_id"), "doc_id"
-        ).persist()
-        cached.append(quality)
-        stage("quality_kept", quality.count())
-
-        # 4b. optional model-based quality filter (classifier gate)
-        if quality_model_path is not None:
-            weights = spark.read.parquet(quality_model_path)
-            gated = textops.hashed_linear_score(
-                quality, weights, dim=quality_model_dim
-            )
-            quality = quality.join(
-                gated.filter(F.col("label")).select("doc_id"), "doc_id"
-            ).persist()
-            cached.append(quality)
-            stage("classifier_kept", quality.count())
-
-        # 4b'. self-trained classifier gate (the DCLM loop in one
-        # pipeline): positives = the seed query's matches, train the
-        # hashed linear model here, keep model-positive docs —
-        # pseudo-label expansion past the literal query
-        if train_quality_query is not None:
-            if quality_model_path is not None:
-                raise ValueError(
-                    "train_quality_query and quality_model_path are "
-                    "mutually exclusive"
-                )
-            seed_ids = _logical(
-                search_df(
-                    spark, catalog, index_name, train_quality_query,
-                    limit=None,
-                )
-            ).select(F.col(id_field).alias("doc_id"))
-            labeled = quality.join(
-                seed_ids.withColumn("__pos", F.lit(1.0)), "doc_id", "left"
-            ).withColumn("y", F.coalesce(F.col("__pos"), F.lit(0.0)))
-            w = textops.train_hashed_classifier(
-                labeled, label_col="y", dim=quality_model_dim, iters=3
-            )
-            scored = textops.hashed_linear_score(
-                quality, w, dim=quality_model_dim
-            )
-            # strict positive evidence: s > 0 <=> prob > 0.5. Weights
-            # start at zero and only seed-co-occurring features go
-            # positive, so zero-overlap docs score EXACTLY 0.5 and
-            # drop on the strict compare; magnitudes (which depend on
-            # 1/n_feats^2 scaling) never need calibrating.
-            keep = (
-                F.col("prob") > 0.5
-                if train_quality_threshold is None
-                else F.col("prob") >= train_quality_threshold
-            )
-            quality = quality.join(
-                scored.filter(keep).select("doc_id"),
-                "doc_id",
-            ).persist()
-            cached.append(quality)
-            stage("trained_classifier_kept", quality.count())
-
-        # 4c. optional rank-fusion ensemble gate (threshold on the
-        # fused normalized rank; signals mirror the quality_ensemble
-        # entry: length, lexical diversity, -mean word length)
-        if ensemble_threshold is not None:
-            from toshokan_spark.operators.dedup import words_col
-
-            t = F.coalesce(F.col("text"), F.lit(""))
-            w = words_col(t)
-            div = F.when(
-                F.size(w) > 0, F.size(F.array_distinct(w)) / F.size(w)
-            ).otherwise(F.lit(0.0))
-            mwl = F.when(
-                F.size(w) > 0, F.length(t) / F.size(w)
-            ).otherwise(F.lit(0.0))
-            fused = textops.quality_ensemble(
-                quality,
-                [("len", F.length(t)), ("div", div), ("mwl", -mwl)],
-            )
-            quality = quality.join(
-                fused.filter(
-                    F.col("ensemble") >= ensemble_threshold
-                ).select("doc_id"),
-                "doc_id",
-            ).persist()
-            cached.append(quality)
-            stage("ensemble_kept", quality.count())
-
-        # 5. CCNet tail thinning (head+middle whole, hash-sampled tail)
-        selected = textops.ccnet_select(
-            quality, n_buckets=n_buckets, tail_rate=tail_rate, seed=seed
+            raw = web.domain_filter(raw, dom, url_col="url",
+                                    mode="block").localCheckpoint()
+            stage("domain_kept", raw.count())
+        # null URLs bypass dedup entirely (ADVICE r12): a null
+        # canonical_url is "unknown provenance", not "duplicate of
+        # every other unknown" — url_dedup's GROUP BY would pool
+        # all nulls into ONE bucket and keep only the min-id doc,
+        # silently discarding most of the null-URL cohort whenever
+        # url_field is sparse (e.g. resolved from _dynamic where
+        # some docs lack the key)
+        with_url = raw.filter(F.col("url").isNotNull())
+        without_url = raw.filter(F.col("url").isNull())
+        keepers = web.url_dedup(with_url).select(
+            F.col("keeper_id").alias("doc_id")
         )
-        kept = quality.join(selected.select("doc_id"), "doc_id")
-
-        # 6. optional DSIR ranking against the queried target subset
-        if dsir_target_query is not None:
-            target = _logical(
-                search_df(spark, catalog, index_name, dsir_target_query, limit=None)
-            ).select(
-                F.col(id_field).alias("doc_id"),
-                F.col(text_field).alias("text"),
-            )
-            lw = textops.dsir_log_weights(kept, target, dim=dsir_dim)
-            kept = kept.join(lw.select("doc_id", "log_weight"), "doc_id")
-        kept = kept.persist()
-        cached.append(kept)
-        stage("ccnet_kept", kept.count())
-        if dsir_target_query is not None:
-            stage("dsir_scored", kept.count())
-
-        # 7. leakage-safe split: hash the near-dup CLUSTER id
-        splits = sampling.leakage_safe_split(
-            kept.select("doc_id", "source"), labels, fractions, seed=seed
-        ).persist()
-        cached.append(splits)
-        sizes = {
-            r["split"]: r["n"]
-            for r in splits.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        stage("split_sizes", sizes)
-
-        # 8. optional epoch repetition of the train split (data-
-        # constrained regime): temperature mixture -> repeat plan ->
-        # expansion with per-copy instance keys
-        train = kept.join(
-            splits.filter(F.col("split") == "train").select("doc_id"), "doc_id"
-        ).select(
-            "doc_id",
-            "source",
-            F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens"),
-        )
-        if repeat_budget is not None:
-            # the slim (id, source, tokens) frame is consumed three
-            # times below (mixture, expansion join, packing) with the
-            # WHOLE pipeline's lineage behind it — truncate once, or
-            # the composed plan tree grows multiplicatively
-            train = train.localCheckpoint()
-            weights = sampling.source_mixture(train, alpha=mixture_alpha)
-            plan = sampling.repeat_plan(weights, budget_tokens=repeat_budget)
-            train = sampling.epoch_expand(train, plan, seed=seed).join(
-                train, ["doc_id", "source"]
-            )
-            # copies of a doc are distinct training instances for
-            # ordering/packing purposes
-            train = train.withColumn(
-                "inst_id",
-                F.concat_ws("#", F.col("doc_id").cast("string"), F.col("copy")),
-            ).localCheckpoint()
-            stage("expanded_rows", train.count())
-            order_col = "inst_id"
-        else:
-            order_col = "doc_id"
-
-        # 9. optional curriculum ordering (easy-first by token count,
-        # seeded within-stage shuffle) — packing then consumes the
-        # global position instead of the raw id
-        if curriculum_stages is not None:
-            ordered = sampling.curriculum_order(
-                train.select(order_col, "n_tokens"),
-                F.col("n_tokens").cast("long"),
-                n_stages=curriculum_stages,
-                seed=seed,
-                id_col=order_col,
-            )
-            train = train.join(
-                ordered.select(order_col, "position"), order_col
-            )
-            order_col = "position"
-            stage("curriculum_stages", curriculum_stages)
-
-        # 10. pack the (expanded, ordered) train stream
-        packed = sampling.pack_training_sequences(
-            train, seq_len=seq_len, order_col=order_col
-        )
-        packed = packed.localCheckpoint()
-        stage("packed_rows", packed.count())
-
-        res.documents = kept.join(splits.select("doc_id", "split"), "doc_id") \
+        raw = (
+            with_url.join(keepers, "doc_id", "left_semi")
+            .unionByName(without_url)
+            .drop("url")
             .localCheckpoint()
-        res.splits = splits.localCheckpoint()
-        res.packed = packed
-        return res
-    finally:
-        for c in cached:
-            c.unpersist()
+        )
+        stage("url_kept", raw.count())
+
+    # 1. canonicalize (NFC, control strip, whitespace collapse)
+    norm = textops.normalize_text(raw)
+    docs = raw.drop("text").join(
+        norm.select("doc_id", F.col("text_norm").alias("text")), "doc_id"
+    ).localCheckpoint()
+    stage("canonicalized", docs.count())
+
+    # 2. exact dedup (min id per content hash)
+    exact = dedup.deduplicate_exact(docs).localCheckpoint()
+    n_exact = exact.count()
+    stage("exact_kept", n_exact)
+
+    # 3. near-dup clusters over the exact-deduped set — the split
+    # stage's leakage fence
+    if dedup_method == "minhash":
+        pairs = dedup.minhash_lsh_pairs(
+            exact, k=jaccard_k, threshold=jaccard_threshold
+        ).select("a_id", "b_id")
+    elif dedup_method == "jaccard":
+        pairs = dedup.ngram_jaccard_pairs(
+            exact, k=jaccard_k, threshold=jaccard_threshold
+        )
+    else:
+        raise ValueError(
+            f"dedup_method must be 'jaccard' or 'minhash', got {dedup_method!r}"
+        )
+    labels = dedup.duplicate_clusters(pairs).localCheckpoint()
+    stage("near_dup_docs", labels.count())
+
+    # 4. Gopher quality gate
+    flags = textops.gopher_rules(exact)
+    quality = exact.join(
+        flags.filter(F.col("passes")).select("doc_id"), "doc_id"
+    ).localCheckpoint()
+    stage("quality_kept", quality.count())
+
+    # 4b. optional model-based quality filter (classifier gate)
+    if quality_model_path is not None:
+        weights = spark.read.parquet(quality_model_path)
+        gated = textops.hashed_linear_score(
+            quality, weights, dim=quality_model_dim
+        )
+        quality = quality.join(
+            gated.filter(F.col("label")).select("doc_id"), "doc_id"
+        ).localCheckpoint()
+        stage("classifier_kept", quality.count())
+
+    # 4b'. self-trained classifier gate (the DCLM loop in one
+    # pipeline): positives = the seed query's matches, train the
+    # hashed linear model here, keep model-positive docs —
+    # pseudo-label expansion past the literal query
+    if train_quality_query is not None:
+        if quality_model_path is not None:
+            raise ValueError(
+                "train_quality_query and quality_model_path are "
+                "mutually exclusive"
+            )
+        seed_ids = _logical(
+            search_df(
+                spark, catalog, index_name, train_quality_query,
+                limit=None,
+            )
+        ).select(F.col(id_field).alias("doc_id"))
+        labeled = quality.join(
+            seed_ids.withColumn("__pos", F.lit(1.0)), "doc_id", "left"
+        ).withColumn("y", F.coalesce(F.col("__pos"), F.lit(0.0)))
+        w = textops.train_hashed_classifier(
+            labeled, label_col="y", dim=quality_model_dim, iters=3
+        )
+        scored = textops.hashed_linear_score(
+            quality, w, dim=quality_model_dim
+        )
+        # strict positive evidence: s > 0 <=> prob > 0.5. Weights
+        # start at zero and only seed-co-occurring features go
+        # positive, so zero-overlap docs score EXACTLY 0.5 and
+        # drop on the strict compare; magnitudes (which depend on
+        # 1/n_feats^2 scaling) never need calibrating.
+        keep = (
+            F.col("prob") > 0.5
+            if train_quality_threshold is None
+            else F.col("prob") >= train_quality_threshold
+        )
+        quality = quality.join(
+            scored.filter(keep).select("doc_id"),
+            "doc_id",
+        ).localCheckpoint()
+        stage("trained_classifier_kept", quality.count())
+
+    # 4c. optional rank-fusion ensemble gate (threshold on the
+    # fused normalized rank; signals mirror the quality_ensemble
+    # entry: length, lexical diversity, -mean word length)
+    if ensemble_threshold is not None:
+        from toshokan_spark.operators.dedup import words_col
+
+        t = F.coalesce(F.col("text"), F.lit(""))
+        w = words_col(t)
+        div = F.when(
+            F.size(w) > 0, F.size(F.array_distinct(w)) / F.size(w)
+        ).otherwise(F.lit(0.0))
+        mwl = F.when(
+            F.size(w) > 0, F.length(t) / F.size(w)
+        ).otherwise(F.lit(0.0))
+        fused = textops.quality_ensemble(
+            quality,
+            [("len", F.length(t)), ("div", div), ("mwl", -mwl)],
+        )
+        quality = quality.join(
+            fused.filter(
+                F.col("ensemble") >= ensemble_threshold
+            ).select("doc_id"),
+            "doc_id",
+        ).localCheckpoint()
+        stage("ensemble_kept", quality.count())
+
+    # 5. CCNet tail thinning (head+middle whole, hash-sampled tail)
+    selected = textops.ccnet_select(
+        quality, n_buckets=n_buckets, tail_rate=tail_rate, seed=seed
+    )
+    kept = quality.join(selected.select("doc_id"), "doc_id")
+
+    # 6. optional DSIR ranking against the queried target subset
+    if dsir_target_query is not None:
+        target = _logical(
+            search_df(spark, catalog, index_name, dsir_target_query, limit=None)
+        ).select(
+            F.col(id_field).alias("doc_id"),
+            F.col(text_field).alias("text"),
+        )
+        lw = textops.dsir_log_weights(kept, target, dim=dsir_dim)
+        kept = kept.join(lw.select("doc_id", "log_weight"), "doc_id")
+    kept = kept.localCheckpoint()
+    stage("ccnet_kept", kept.count())
+    if dsir_target_query is not None:
+        stage("dsir_scored", kept.count())
+
+    # 7. leakage-safe split: hash the near-dup CLUSTER id
+    splits = sampling.leakage_safe_split(
+        kept.select("doc_id", "source"), labels, fractions, seed=seed
+    ).localCheckpoint()
+    sizes = {
+        r["split"]: r["n"]
+        for r in splits.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    stage("split_sizes", sizes)
+
+    # 8. optional epoch repetition of the train split (data-
+    # constrained regime): temperature mixture -> repeat plan ->
+    # expansion with per-copy instance keys
+    train = kept.join(
+        splits.filter(F.col("split") == "train").select("doc_id"), "doc_id"
+    ).select(
+        "doc_id",
+        "source",
+        F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens"),
+    )
+    if repeat_budget is not None:
+        # the slim (id, source, tokens) frame is consumed three
+        # times below (mixture, expansion join, packing) —
+        # materialize the kept ⋈ splits join once
+        train = train.localCheckpoint()
+        weights = sampling.source_mixture(train, alpha=mixture_alpha)
+        plan = sampling.repeat_plan(weights, budget_tokens=repeat_budget)
+        train = sampling.epoch_expand(train, plan, seed=seed).join(
+            train, ["doc_id", "source"]
+        )
+        # copies of a doc are distinct training instances for
+        # ordering/packing purposes
+        train = train.withColumn(
+            "inst_id",
+            F.concat_ws("#", F.col("doc_id").cast("string"), F.col("copy")),
+        ).localCheckpoint()
+        stage("expanded_rows", train.count())
+        order_col = "inst_id"
+    else:
+        order_col = "doc_id"
+
+    # 9. optional curriculum ordering (easy-first by token count,
+    # seeded within-stage shuffle) — packing then consumes the
+    # global position instead of the raw id
+    if curriculum_stages is not None:
+        ordered = sampling.curriculum_order(
+            train.select(order_col, "n_tokens"),
+            F.col("n_tokens").cast("long"),
+            n_stages=curriculum_stages,
+            seed=seed,
+            id_col=order_col,
+        )
+        train = train.join(
+            ordered.select(order_col, "position"), order_col
+        )
+        order_col = "position"
+        stage("curriculum_stages", curriculum_stages)
+
+    # 10. pack the (expanded, ordered) train stream
+    packed = sampling.pack_training_sequences(
+        train, seq_len=seq_len, order_col=order_col
+    )
+    packed = packed.localCheckpoint()
+    stage("packed_rows", packed.count())
+
+    res.documents = kept.join(splits.select("doc_id", "split"), "doc_id") \
+        .localCheckpoint()
+    res.splits = splits
+    res.packed = packed
+    return res
 
 
 def write_outputs(result: CurateResult, output_dir: str) -> None:
