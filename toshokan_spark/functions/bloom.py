@@ -12,9 +12,13 @@ query token whose bits are not all set CANNOT be in the segment.
 
 Design points:
 
-* built DURING segment commit from the just-written data (one
-  tokenize+distinct job per text field — the same pay-once-at-commit
-  trade as the BM25 ``_stats`` sidecar);
+* built DURING segment commit with no job of its own for scalar
+  fields: the BM25 ``_stats`` sidecar's per-term rows ARE the
+  segment's distinct tokens, so the sidecar write observes each
+  field's token count and bit positions (mod ``MAX_BITS``) and the
+  driver folds them (:func:`build_token_bloom`). Array text fields
+  (not in the sidecar) take one explode+distinct aggregate of the
+  same ``(count, positions)`` over the written data;
 * sized from the observed vocabulary (~10 bits/token, k=4 ⇒ ~1-2%
   false positives), power-of-two capped at 2^18 bits = 32 KB; a
   segment whose vocabulary exceeds ``MAX_VOCAB`` records no bloom
@@ -39,7 +43,7 @@ from __future__ import annotations
 
 import base64
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from toshokan_spark.operators.dedup import _poly_fold_py, poly_hash
@@ -67,48 +71,71 @@ def _next_pow2(n: int) -> int:
     return p
 
 
+def token_position_aggs(token: Column, alias: str) -> list[Column]:
+    """Aggregates over rows of DISTINCT tokens (null rows skipped) that
+    :func:`observed_positions` reads back: the token count and each
+    hash's set of bit positions mod ``MAX_BITS`` — the Spark twin of
+    :func:`token_positions`. The sets are ints, at most ``MAX_BITS``
+    each whatever the vocabulary, and fold to any power-of-two
+    ``m <= MAX_BITS`` on the driver: the hashes are non-negative and
+    ``m`` divides ``MAX_BITS``, so ``(h % MAX_BITS) % m == h % m``."""
+    h1 = poly_hash(token, *_H1[:2], _H1[2], _H1[3])
+    h2 = poly_hash(token, *_H2[:2], _H2[2], _H2[3])
+    return [F.count(token).alias(f"{alias}_n")] + [
+        F.collect_set(((h1 + i * h2) % MAX_BITS).cast("int")).alias(f"{alias}_p{i}")
+        for i in range(K_HASHES)
+    ]
+
+
+def observed_positions(row, alias: str) -> tuple[int, list[int]]:
+    """``(n, positions)`` from a row holding :func:`token_position_aggs`."""
+    return int(row[f"{alias}_n"]), [
+        p for i in range(K_HASHES) for p in row[f"{alias}_p{i}"]
+    ]
+
+
 def build_token_bloom(
-    written: DataFrame, col_name: str, tokenizer: str, is_array: bool = False
+    written: DataFrame,
+    col_name: str,
+    tokenizer: str,
+    is_array: bool = False,
+    observed: tuple[int, list[int]] | None = None,
 ) -> dict | None:
     """Bloom over the DISTINCT analyzed tokens of *col_name* in a
     just-written segment; ``{"m": bits, "k": hashes, "b64": bitset}``
     or None (empty column / vocabulary over cap).
 
-    The heavy work (explode, distinct) is distributed; only the
-    distinct BIT POSITIONS are collected — bounded by ``m`` (≤ 2^18),
-    never by the corpus. When the segment carries the ingest-time
-    ``__tokens__<field>`` shadow column the build explodes it
-    directly instead of re-tokenizing the text."""
-    from toshokan_spark.ingest import TOKENS_PREFIX
+    *observed* is the ``(n, positions)`` of :func:`token_position_aggs`
+    when another pass already saw the distinct tokens (the commit's
+    BM25 sidecar write, for scalar fields); without it one
+    explode+distinct aggregate over *written* computes the same pair.
+    Either way only the token count and the bit positions reach the
+    driver — bounded by ``MAX_BITS``, never by the vocabulary. When
+    the segment carries the ingest-time ``__tokens__<field>`` shadow
+    column the aggregate explodes it directly instead of re-tokenizing
+    the text."""
+    if observed is None:
+        from toshokan_spark.ingest import TOKENS_PREFIX
 
-    shadow = f"{TOKENS_PREFIX}{col_name}"
-    if shadow in written.columns:
-        src = F.col(shadow)
-    elif is_array:
-        src = F.flatten(
-            F.transform(F.col(col_name), lambda e: tokenize(e, tokenizer))
-        )
-    else:
-        src = tokenize(F.col(col_name), tokenizer)
-    toks = (
-        written.select(F.explode(src).alias("t"))
-        .where(F.col("t").isNotNull())
-        .distinct()
-    )
-    n = toks.count()
+        shadow = f"{TOKENS_PREFIX}{col_name}"
+        if shadow in written.columns:
+            src = F.col(shadow)
+        elif is_array:
+            src = F.flatten(
+                F.transform(F.col(col_name), lambda e: tokenize(e, tokenizer))
+            )
+        else:
+            src = tokenize(F.col(col_name), tokenizer)
+        toks = written.select(F.explode(src).alias("t")).distinct()
+        row = toks.agg(*token_position_aggs(F.col("t"), "t")).collect()[0]
+        observed = observed_positions(row, "t")
+    n, positions = observed
     if n == 0 or n > MAX_VOCAB:
         return None
     m = min(MAX_BITS, max(MIN_BITS, _next_pow2(n * BITS_PER_TOKEN)))
-    h1 = poly_hash(F.col("t"), *_H1[:2], _H1[2], _H1[3])
-    h2 = poly_hash(F.col("t"), *_H2[:2], _H2[2], _H2[3])
-    pos = toks.select(
-        F.explode(
-            F.array(*[((h1 + i * h2) % m).cast("int") for i in range(K_HASHES)])
-        ).alias("p")
-    ).agg(F.collect_set("p").alias("ps"))
-    positions = pos.collect()[0]["ps"]
     bits = bytearray(m // 8)
     for p in positions:
+        p %= m
         bits[p >> 3] |= 1 << (p & 7)
     return {"m": m, "k": K_HASHES, "b64": base64.b64encode(bytes(bits)).decode()}
 

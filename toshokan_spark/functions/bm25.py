@@ -157,43 +157,49 @@ def segment_field_stats(df: DataFrame, fields: list[tuple[str, str]]) -> DataFra
     (null text contributes no dl, as there), ``df = #docs whose token
     array contains the term``.
 
+    One grouped pass for every field: each field is tokenized once,
+    each doc contributes per field one NULL-term row (its dl) plus one
+    row per distinct term, and a single ``groupBy(field, term)``
+    exchange counts them — the NULL-term group is the summary. An
+    empty *df* therefore yields no rows (commits never describe an
+    empty segment).
+
     *fields* is ``[(name, tokenizer), ...]`` for the scalar text
     fields; returns None when empty.
     """
-    frames = []
-    for name, tok in fields:
-        toks = tokenize(F.col(name), tok)
-        proj = df.select(
-            F.array_distinct(toks).alias("__t"), F.size(toks).alias("__dl")
-        )
-        summary = proj.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("__dl").alias("sum_dl")
-        ).select(
-            F.lit(name).alias("field"),
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("long").alias("df"),
-            F.col("n_docs"),
-            F.col("sum_dl"),
-        )
-        per_term = (
-            proj.select(F.explode("__t").alias("term"))
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .select(
-                F.lit(name).alias("field"),
-                F.col("term"),
-                F.col("df"),
-                F.lit(None).cast("long").alias("n_docs"),
-                F.lit(None).cast("long").alias("sum_dl"),
-            )
-        )
-        frames.append(summary.unionAll(per_term))
-    if not frames:
+    if not fields:
         return None
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionAll(fr)
-    return out
+    toks = df.select(*[
+        tokenize(F.col(name), tok).alias(f"__t{i}")
+        for i, (name, tok) in enumerate(fields)
+    ])
+    no_terms = F.array().cast("array<string>")
+    per_field = F.array(*[
+        F.struct(
+            F.lit(name).alias("field"),
+            F.concat(
+                F.array(F.lit(None).cast("string")),
+                F.coalesce(F.array_distinct(F.col(f"__t{i}")), no_terms),
+            ).alias("terms"),
+            F.size(F.col(f"__t{i}")).alias("dl"),
+        )
+        for i, (name, _tok) in enumerate(fields)
+    ])
+    rows = toks.select(F.inline(per_field)).select(
+        "field", F.explode("terms").alias("term"), "dl"
+    )
+    summary = F.col("term").isNull()
+    counted = rows.groupBy("field", "term").agg(
+        F.count(F.lit(1)).alias("__c"),
+        F.sum(F.when(summary, F.col("dl"))).alias("sum_dl"),
+    )
+    return counted.select(
+        "field",
+        "term",
+        F.when(~summary, F.col("__c")).alias("df"),
+        F.when(summary, F.col("__c")).alias("n_docs"),
+        "sum_dl",
+    )
 
 
 def merged_stats_provider(spark, stats_paths: list[str], score_field: str):

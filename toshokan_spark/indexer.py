@@ -97,22 +97,51 @@ def stats_path(config: IndexConfig, seg_name: str) -> str:
     return join_path(config.path, STATS_DIR, seg_name)
 
 
-def write_segment_stats(config: IndexConfig, seg_name: str, written: DataFrame) -> None:
+def write_segment_stats(
+    config: IndexConfig, seg_name: str, written: DataFrame, observe_blooms: bool = False
+) -> dict:
     """Compute + write the segment's BM25 corpus stats (see
-    `functions/bm25.py:segment_field_stats`): one extra pass over the
-    segment's text columns at write time buys scored search a
-    metadata-sized stats read instead of a per-query full-corpus
-    tokenize+agg — the pay-once-at-commit trade every index format
-    makes (the reference's tantivy segments store term dictionaries
-    for the same reason)."""
+    `functions/bm25.py:segment_field_stats`): one grouped aggregate
+    over every scalar text field (one exchange, two Spark jobs) buys
+    scored search a metadata-sized stats read instead of a per-query
+    full-corpus tokenize+agg — the pay-once-at-commit trade every
+    index format makes (the reference's tantivy segments store term
+    dictionaries for the same reason).
+
+    The sidecar is one file sorted by ``(field, term)``: deterministic
+    row order, and row-group ``field``/``term`` statistics that prune
+    large sidecars. With *observe_blooms* the write also observes, for
+    each scalar tokenized (non-raw) field, the ``(n, positions)`` its
+    token bloom folds from (`functions/bloom.py:token_position_aggs`)
+    — the per-term rows are the distinct tokens, so the blooms cost no
+    job. Returns ``{field: (n, positions)}`` (empty without
+    *observe_blooms*)."""
+    from pyspark.sql import Observation
+
+    from toshokan_spark.functions.bloom import observed_positions, token_position_aggs
     from toshokan_spark.functions.bm25 import segment_field_stats
 
     fields = [(n, t) for n, t in text_stat_fields(config) if n in written.columns]
-    stats = segment_field_stats(written, fields) if fields else None
-    if stats is not None:
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            stats_path(config, seg_name)
-        )
+    stats = segment_field_stats(written, fields)
+    if stats is None:
+        return {}
+    out = stats.coalesce(1).sortWithinPartitions("field", "term")
+    bloom_fields = [n for n, t in fields if t != "raw"] if observe_blooms else []
+    obs = None
+    if bloom_fields:
+        obs = Observation(f"stats_blooms_{seg_name}")
+        out = out.observe(obs, *[
+            agg
+            for i, n in enumerate(bloom_fields)
+            for agg in token_position_aggs(
+                F.when(F.col("field") == F.lit(n), F.col("term")), f"__b{i}"
+            )
+        ])
+    out.write.mode("overwrite").parquet(stats_path(config, seg_name))
+    if obs is None:
+        return {}
+    row = obs.get
+    return {n: observed_positions(row, f"__b{i}") for i, n in enumerate(bloom_fields)}
 
 
 def index_batch(
@@ -278,7 +307,7 @@ def build_segment(
     # a manifested segment always has its stats sibling. The read's
     # schema is recorded on the entry, so searches never infer it.
     written = df.sparkSession.read.parquet(seg_path)
-    write_segment_stats(config, seg_name, written)
+    observed = write_segment_stats(config, seg_name, written, observe_blooms=True)
 
     # fixed-width histogram stats for configured number fields — the
     # distribution twin of field_sums (manifest-only match-all
@@ -287,7 +316,8 @@ def build_segment(
 
     # token Bloom filters for TOKENIZED text fields — the term-query
     # analog of the zone maps above (raw fields already have string
-    # zone maps): one tokenize+distinct job per field at commit buys
+    # zone maps): scalar fields fold what the stats write observed (no
+    # job), array fields run one aggregate each; either buys
     # manifest-level segment skipping for every future term query
     # (functions/bloom.py has the sizing/caps/conservatism story)
     from toshokan_spark.functions.bloom import build_token_bloom
@@ -302,7 +332,10 @@ def build_segment(
             and (f.tokenizer != "raw" or f.array)
             and f.name in written.columns
         ):
-            b = build_token_bloom(written, f.name, f.tokenizer, is_array=f.array)
+            b = build_token_bloom(
+                written, f.name, f.tokenizer, is_array=f.array,
+                observed=observed.get(f.name),
+            )
             if b is not None:
                 token_blooms[f.name] = b
 
@@ -329,7 +362,7 @@ def compute_field_histograms(config, df) -> "dict | None":
     distribution stats (`catalog.SegmentEntry.field_histograms`).
 
     One bucket-count-sized groupBy+collect per configured field at
-    commit/merge time (same cost class as the token blooms); the
+    commit/merge time (two Spark jobs each); the
     bucket expression is byte-identical to
     ``search.histogram_agg``'s, so the manifest-served panel is
     value-identical to the scan-served one by construction. Bin keys
