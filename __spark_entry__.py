@@ -1128,7 +1128,6 @@ def q_search_bm25(spark, sf_dir):
     )
     df = read_segments(
         spark, [join_path(config.path, s.file_name) for s in segs],
-        partitioned=False,
     )
     out = with_bm25(
         df.select(F.col("doc_id").alias("id"), "text"),
@@ -3866,7 +3865,6 @@ def q_search_more_like_this(spark, sf_dir):
     )
     docs = read_segments(
         spark, [join_path(config.path, s.file_name) for s in segs],
-        partitioned=False,
     )
     return more_like_this(
         docs, 7, max_query_terms=5, min_term_freq=2, min_doc_freq=5,
@@ -3900,7 +3898,6 @@ def q_search_multi_match(spark, sf_dir):
     }
     docs = read_segments(
         spark, [join_path(config.path, s.file_name) for s in segs],
-        partitioned=False,
     )
     return multi_match(
         docs, "spark src3", [("text", "default"), ("source", "default")],
@@ -3929,7 +3926,6 @@ def q_search_dis_max(spark, sf_dir):
     )
     docs = read_segments(
         spark, [join_path(config.path, s.file_name) for s in segs],
-        partitioned=False,
     )
     return dis_max(
         docs, ["spark table", "query filter"], tie_breaker=0.2, k=10,

@@ -3882,9 +3882,9 @@ def test_percentiles_by_group_discrete(spark):
 
 
 def test_delete_merge_materializes_partitioned_layout(spark, tmp_path):
-    """Delete materialization through the PARTITIONED merge branch
-    (__day repartition + partitionBy write): survivors only, layout
-    preserved, tombstone cleared, pruning still works post-merge."""
+    """Delete materialization by a merge of a ``time_field`` index:
+    survivors only, written as one flat segment of time-sorted files,
+    tombstone cleared, day-bounded queries still answer post-merge."""
     from datetime import datetime
 
     from toshokan_spark.catalog import FsCatalog
@@ -3916,13 +3916,20 @@ def test_delete_merge_materializes_partitioned_layout(spark, tmp_path):
     cat.add_delete("pdel", "sev:ERROR")
     entry = merge_segments(spark, cat, "pdel")
     assert entry.num_rows == 2 and cat.deletes("pdel") == []
-    # the merged segment keeps the __day layout (both days present)
-    from toshokan_spark.storage import join_path
+    # the merged segment is flat: its files sit in the segment dir,
+    # rows time-sorted, and it records both days
+    import glob
+    import os
 
-    raw = spark.read.parquet(join_path(cfg.path, entry.file_name))
-    assert "__day" in raw.columns
-    assert sorted(str(r["__day"]) for r in raw.select("__day").collect()) \
-        == ["2016-04-13", "2016-04-14"]
+    seg_dir = os.path.join(cfg.path, entry.file_name)
+    assert not [d for d in os.listdir(seg_dir) if os.path.isdir(os.path.join(seg_dir, d))]
+    files = glob.glob(os.path.join(seg_dir, "*.parquet"))
+    assert files
+    for f in files:
+        ts = [r["ts"] for r in spark.read.parquet(f).select("ts").collect()]
+        assert ts == sorted(ts)
+    assert sorted(r["id"] for r in spark.read.parquet(seg_dir).collect()) == [1, 4]
+    assert (entry.min_day, entry.max_day) == ("2016-04-13", "2016-04-14")
     # day-bounded search post-merge still prunes/answers correctly
     out = search_df(
         spark, cat, "pdel",

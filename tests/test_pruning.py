@@ -1,9 +1,11 @@
-"""Partition pruning on the time_field ``__day`` layout: a range query
-on the time field must reach the Parquet source as a PartitionFilter
-(the scale lever the reference's dead ``time_field`` config promised —
-SURVEY §1.1, `/root/reference/src/config/mod.rs:229-231`)."""
+"""Time pruning on ``time_field`` indexes: the manifest's per-segment
+day ranges drop whole segments, and a range query on the time field
+reaches the Parquet source of the one flat scan as a pushed filter over
+time-sorted files (the scale lever the reference's dead ``time_field``
+config promised — SURVEY §1.1, `/root/reference/src/config/mod.rs:229-231`)."""
 
 import json
+import os
 
 from toshokan_spark.config import FieldConfig, IndexConfig
 from toshokan_spark.indexer import index_batch
@@ -33,6 +35,13 @@ def _setup(spark, catalog, tmp_path):
     return config
 
 
+def _pushed_filters(df) -> str:
+    """The PushedFilters list of the plan's one scan node."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1, plan
+    return plan.split("PushedFilters: ")[1]
+
+
 def test_day_partition_pruning_in_plan(spark, catalog, tmp_path):
     _setup(spark, catalog, tmp_path)
     df = search_df(
@@ -42,9 +51,11 @@ def test_day_partition_pruning_in_plan(spark, catalog, tmp_path):
         "ts:[2024-01-02T00:00:00Z TO 2024-01-02T23:59:59Z]",
         limit=None,
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__day" in plan
-    # the pruned scan must read exactly the one matching day
+    assert _pushed_filters(df).startswith(
+        "[IsNotNull(ts), GreaterThanOrEqual(ts,2024-01-02 00:00:00.0), "
+        "LessThanOrEqual(ts,2024-01-02 23:59"
+    )
+    # the scan must return exactly the one matching day
     assert [r.level for r in df.collect()] == ["B"]
 
 
@@ -61,13 +72,16 @@ def test_one_sided_and_disjunctive_bounds(spark, catalog, tmp_path):
     )
     df = search_df(spark, catalog, "tsidx", q, limit=None)
     assert sorted(r.level for r in df.collect()) == ["A", "C"]
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__day" in plan
+    assert _pushed_filters(df).startswith(
+        "[Or(And(GreaterThanOrEqual(ts,2024-01-01 00:00:00.0),"
+        "LessThanOrEqual(ts,2024-01-01 12:00:00.0)),"
+    )
 
 
 def test_merge_preserves_partition_layout(spark, catalog, tmp_path):
-    """Compaction must not flatten the __day layout — pruning still
-    works on the merged segment."""
+    """The layout a merge writes: one flat segment directory, like
+    every segment, and a time range still reaches its scan as a pushed
+    filter."""
     from toshokan_spark.maintenance import merge_segments
 
     _setup(spark, catalog, tmp_path)
@@ -76,14 +90,17 @@ def test_merge_preserves_partition_layout(spark, catalog, tmp_path):
     p.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
     index_batch(spark, catalog, "tsidx", jsonl_path=str(p))
     merge_segments(spark, catalog, "tsidx")
-    assert len(catalog.segments("tsidx")) == 1
+    (seg,) = catalog.segments("tsidx")
+    seg_dir = os.path.join(str(tmp_path / "data" / "tsidx"), seg.file_name)
+    assert not [d for d in os.listdir(seg_dir) if os.path.isdir(os.path.join(seg_dir, d))]
 
     df = search_df(
         spark, catalog, "tsidx",
         "ts:[2024-01-02T00:00:00Z TO 2024-01-02T23:59:59Z]", limit=None,
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__day" in plan
+    assert _pushed_filters(df).startswith(
+        "[IsNotNull(ts), GreaterThanOrEqual(ts,2024-01-02 00:00:00.0), "
+    )
     assert [r.level for r in df.collect()] == ["B"]
     assert len(search(spark, catalog, "tsidx", "*", limit=10)) == 4
 
@@ -146,30 +163,12 @@ def test_unpartitioned_index_single_scan_node(spark, catalog, tmp_path):
     assert merged.filter(merged.new_col.isNull()).count() >= 3
 
 
-def test_read_segments_partitioned_without_hint_falls_back(spark, catalog, tmp_path):
-    """Passing day-partitioned segment roots WITHOUT the partitioned
-    hint must transparently fall back to per-segment scans (the
-    single multi-path read raises CONFLICTING_DIRECTORY_STRUCTURES
-    internally) and still return every row."""
-    from toshokan_spark.search import read_segments
-
-    _setup(spark, catalog, tmp_path)  # 3 rows, one partitioned segment
-    rows = [{"ts": "2024-02-01T10:00:00Z", "level": "Z"}]
-    p = tmp_path / "more.jsonl"
-    p.write_text(json.dumps(rows[0]) + "\n")
-    index_batch(spark, catalog, "tsidx", jsonl_path=str(p))
-    paths = catalog.segment_paths("tsidx")
-    assert len(paths) == 2
-    df = read_segments(spark, paths)  # no partitioned=True hint
-    assert df.count() == 4 and "__day" in df.columns
-
-
 def test_manifest_level_segment_pruning(spark, catalog, tmp_path):
     """Per-segment day-range stats in the manifest prune whole
     segments BEFORE any Spark plan exists: a one-day query over an
     index of three single-day segments must plan exactly ONE scan
     (the Delta/Iceberg file-statistics pattern — at 10k segments this
-    is what keeps the partitioned-index union narrow)."""
+    is what keeps the scan's path list short)."""
     from toshokan_spark.maintenance import merge_segments
 
     config = IndexConfig(
@@ -269,7 +268,8 @@ def test_manifest_pruning_at_10k_segments(spark, catalog, tmp_path):
     # + a 2-path scan build; without manifest pruning this would open
     # 9,998 nonexistent paths and fail outright
     assert planning_s < 15.0, f"planning took {planning_s:.1f}s"
-    assert plan.count("Scan parquet") == 2, plan
+    assert plan.count("Scan parquet") == 1, plan
+    assert "InMemoryFileIndex(2 paths)" in plan, plan
     assert sorted(r.level for r in df.collect()) == ["R0", "R1"]
 
 
@@ -348,10 +348,9 @@ def test_scored_search_prunes_stats_read(spark, catalog, tmp_path, monkeypatch):
 
 
 def test_segment_files_time_sorted_within_day(spark, catalog, tmp_path):
-    """Rows inside each written segment file are time-ordered (the
-    within-file analog of __day pruning): parquet row-group min/max
-    on a sorted column lets time-range predicates skip row groups
-    a day partition would otherwise scan whole."""
+    """Rows inside each written segment file are time-ordered: parquet
+    row-group min/max on a sorted column lets time-range predicates
+    skip row groups inside the segments the manifest keeps."""
     import glob as _glob
 
     config = IndexConfig(
@@ -374,7 +373,7 @@ def test_segment_files_time_sorted_within_day(spark, catalog, tmp_path):
     index_batch(spark, catalog, "sortidx", jsonl_path=str(p))
 
     files = _glob.glob(
-        str(tmp_path / "data" / "sortidx" / "seg-*" / "__day=*" / "*.parquet")
+        str(tmp_path / "data" / "sortidx" / "seg-*" / "*.parquet")
     )
     assert files
     for f in files:
@@ -882,3 +881,176 @@ def test_prefix_query_prunes_segments_by_zone_map(spark, tmp_path):
     assert survivors("sev:al*a") == 1        # prunes the w/z segment
     assert survivors("sev:*arn") == 2        # leading star: keep all
     assert survivors("sev:q*") == 0          # nothing in [q, r)
+
+
+def _commit_day_directory_segment(spark, catalog, config, rows):
+    """Commit a segment the way the old ``time_field`` layout wrote it:
+    ``seg-X/__day=YYYY-MM-DD/part-*.parquet``, recorded with the schema
+    a read of it resolves to, ``__day`` included."""
+    from pyspark.sql import functions as F
+
+    from toshokan_spark.catalog import SegmentEntry, uuid7
+    from toshokan_spark.ingest import ingest_projection
+    from toshokan_spark.storage import join_path
+
+    seg_id = uuid7()
+    seg_path = join_path(config.path, f"seg-{seg_id}")
+    lines = spark.createDataFrame([(json.dumps(r),) for r in rows], "value string")
+    typed = ingest_projection(lines, config)
+    typed.withColumn("__day", F.to_date("ts")).write.partitionBy("__day").parquet(seg_path)
+    schema = spark.read.parquet(seg_path).schema
+    assert schema.fieldNames()[-1] == "__day"
+    days = sorted(r["ts"][:10] for r in rows)
+    assert catalog.commit_segment(config.name, SegmentEntry(
+        id=seg_id, file_name=f"seg-{seg_id}", num_rows=len(rows), created_at_ms=0,
+        min_day=days[0], max_day=days[-1], schema=schema.jsonValue(),
+    ))
+
+
+def test_day_directory_segments_read_in_the_one_scan(spark, catalog, tmp_path):
+    """Segments written in the old day-directory layout answer exactly
+    like flat ones, through the same single scan, alone or mixed with
+    flat segments, with or without recorded schemas; a merge rewrites
+    them flat."""
+    from dataclasses import replace
+
+    from toshokan_spark.maintenance import merge_segments
+    from toshokan_spark.search import read_segments
+
+    def config(name):
+        return IndexConfig(
+            name=name, path=str(tmp_path / "data" / name), time_field="ts",
+            fields=[
+                FieldConfig(name="id", type="number", number_type="i64"),
+                FieldConfig(name="ts", type="datetime"),
+                FieldConfig(name="level", type="text", tokenizer="raw"),
+                FieldConfig(name="msg", type="text"),
+            ],
+        )
+
+    batches = [
+        [{"id": 10 * d + i, "ts": f"2024-08-0{d}T{3 * i:02d}:00:00Z",
+          "level": ["INFO", "WARN"][i % 2], "msg": f"disk {['full', 'ok'][d % 2]} {i}"}
+         for d in days for i in range(4)]
+        for days in ((1, 2), (3,), (4, 5))
+    ]
+    old, flat = config("oldidx"), config("flatidx")
+    for c in (old, flat):
+        create_index(catalog, c)
+    for i, rows in enumerate(batches):
+        p = tmp_path / f"b{i}.jsonl"
+        p.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
+        index_batch(spark, catalog, "flatidx", jsonl_path=str(p))
+        if i < 2:
+            _commit_day_directory_segment(spark, catalog, old, rows)
+        else:
+            index_batch(spark, catalog, "oldidx", jsonl_path=str(p))  # a flat one
+    assert [s.schema["fields"][-1]["name"] for s in catalog.segments("oldidx")][:2] == [
+        "__day", "__day"]
+
+    queries = [
+        "*", "level:WARN", "msg:full", "id:>=30",
+        "ts:[2024-08-02T00:00:00Z TO 2024-08-04T06:00:00Z}",
+        "ts:>2024-08-02T05:00:00Z AND NOT msg:ok",
+    ]
+
+    def ids(name, q):
+        df = search_df(spark, catalog, name, q, limit=None)
+        return sorted(r.id for r in df.select("id").collect())
+
+    def check():
+        for q in queries:
+            assert ids("oldidx", q) == ids("flatidx", q), q
+
+    # old segments alone: one scan node, no union, no __day column
+    df = search_df(spark, catalog, "oldidx", "ts:<2024-08-04T00:00:00Z", limit=None)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1 and "Union" not in plan, plan
+    assert "__day" not in df.columns
+    check()  # mixed: two old segments and one flat
+
+    # without recorded schemas the same scan infers them from the footers
+    segs = catalog.segments("oldidx")
+    paths = [os.path.join(old.path, s.file_name) for s in segs]
+    inferred = read_segments(spark, paths)
+    pinned = read_segments(spark, paths, schemas=[s.schema for s in segs])
+    assert inferred.schema == pinned.schema and "__day" not in inferred.columns
+    def rows(df):
+        return sorted((r.id, r.ts, r.msg) for r in df.collect())
+
+    assert rows(inferred) == rows(pinned) and len(rows(pinned)) == 20
+    ver, segs, dels = catalog.snapshot("oldidx")
+    assert catalog._try_write_version(
+        "oldidx", ver + 1, [replace(s, schema=None) for s in segs], dels)
+    check()
+
+    merge_segments(spark, catalog, "oldidx")
+    (merged,) = catalog.segments("oldidx")
+    seg_dir = os.path.join(old.path, merged.file_name)
+    assert not [d for d in os.listdir(seg_dir) if os.path.isdir(os.path.join(seg_dir, d))]
+    assert "__day" not in json.dumps(merged.schema)
+    assert (merged.min_day, merged.max_day) == ("2024-08-01", "2024-08-05")
+    check()
+
+
+def test_64_one_day_segments_plan_one_scan(spark, tmp_path):
+    """64 one-day segments, every one kept: ``search_df`` plans ONE
+    scan node and no union, and planning plus execution run a pinned
+    number of Spark jobs (counts, not wall time). A scan over more
+    than 32 paths (``parallelPartitionDiscovery.threshold``) lists
+    them in one Spark job while planning; at 32 paths or fewer it
+    runs none."""
+    from dataclasses import replace
+    from datetime import datetime, timedelta, timezone
+
+    from toshokan_spark.catalog import FsCatalog, SegmentEntry, uuid7
+
+    from test_segment_schema import _count_jobs
+
+    catalog = FsCatalog(str(tmp_path / "catalog"))
+    config = IndexConfig(
+        name="days64", path=str(tmp_path / "data" / "days64"), time_field="ts",
+        fields=[
+            FieldConfig(name="ts", type="datetime"),
+            FieldConfig(name="level", type="text", tokenizer="raw"),
+        ],
+    )
+    create_index(catalog, config)
+    # one write job lays out 64 day directories; each becomes a segment
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    rows = [(t0 + timedelta(days=d, hours=6 * i + 1), f"L{i}", d)
+            for d in range(64) for i in range(4)]
+    stage = tmp_path / "stage"
+    spark.createDataFrame(rows, "ts timestamp, level string, d int").write.partitionBy(
+        "d").parquet(str(stage))
+    os.makedirs(config.path, exist_ok=True)
+    entries = []
+    for d in range(64):
+        seg_id = uuid7()
+        os.rename(stage / f"d={d}", os.path.join(config.path, f"seg-{seg_id}"))
+        day = (t0 + timedelta(days=d)).date().isoformat()
+        entries.append(SegmentEntry(
+            id=seg_id, file_name=f"seg-{seg_id}", num_rows=4, created_at_ms=0,
+            min_day=day, max_day=day,
+        ))
+    schema = spark.read.parquet(os.path.join(config.path, entries[0].file_name)).schema
+    ver, _ = catalog._read_versioned("days64")
+    assert catalog._try_write_version(
+        "days64", ver + 1, [replace(e, schema=schema.jsonValue()) for e in entries])
+
+    def run(q):
+        return search_df(spark, catalog, "days64", q, limit=None).collect()
+
+    df = search_df(spark, catalog, "days64", "level:L1", limit=None)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1 and "Union" not in plan, plan
+    assert "InMemoryFileIndex(64 paths)" in plan, plan
+    assert len(df.collect()) == 64
+
+    run("level:L1")  # first-use warm-up
+    # 64 paths: the listing job, then the scan
+    assert _count_jobs(spark, lambda: run("level:L1")) == 2
+    # 16 kept segments: no listing job
+    bounded = "ts:[2024-01-11T00:00:00Z TO 2024-01-27T00:00:00Z} AND level:L1"
+    assert len(run(bounded)) == 16
+    assert _count_jobs(spark, lambda: run(bounded)) == 1

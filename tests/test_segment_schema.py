@@ -1,7 +1,7 @@
 """Recorded segment schemas: every committed segment carries the schema
 a parquet read of it resolves to, and search builds its scan from the
-recorded schemas instead of inferring them from the footers (one Spark
-job per segment per query). The pinned scan must be the inferred scan:
+recorded schemas instead of inferring them from the footers (a Spark
+job per query). The pinned scan must be the inferred scan:
 same columns in the same order, same types, same rows. Segments
 without a recorded schema, and recorded schemas that conflict, fall
 back to inference."""
@@ -32,11 +32,11 @@ FIELDS = [
 WORDS = ["alpha", "beta", "gamma", "delta", "omega"]
 
 
-def _config(tmp_path, name, partitioned, fields=FIELDS):
+def _config(tmp_path, name, timed, fields=FIELDS):
     return IndexConfig(
         name=name,
         path=str(tmp_path / "data" / name),
-        time_field="ts" if partitioned else None,
+        time_field="ts" if timed else None,
         fields=list(fields),
     )
 
@@ -58,8 +58,8 @@ def _batch(spark, catalog, tmp_path, name, day, n=5, extra=None):
     index_batch(spark, catalog, name, jsonl_path=str(p))
 
 
-def _build(spark, catalog, tmp_path, name, partitioned, days=(1, 2, 3, 4), n=5):
-    cfg = _config(tmp_path, name, partitioned)
+def _build(spark, catalog, tmp_path, name, timed, days=(1, 2, 3, 4), n=5):
+    cfg = _config(tmp_path, name, timed)
     create_index(catalog, cfg)
     for d in days:
         _batch(spark, catalog, tmp_path, name, d, n=n)
@@ -104,12 +104,12 @@ def _count_jobs(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("partitioned", [True, False])
+@pytest.mark.parametrize("timed", [True, False])
 def test_pinned_scan_equals_inferred_scan_with_alter_drift(
-    spark, catalog, tmp_path, partitioned
+    spark, catalog, tmp_path, timed
 ):
-    name = f"drift{int(partitioned)}"
-    cfg = _build(spark, catalog, tmp_path, name, partitioned, days=(1, 2))
+    name = f"drift{int(timed)}"
+    cfg = _build(spark, catalog, tmp_path, name, timed, days=(1, 2))
     cfg = _alter_add_tag(spark, catalog, tmp_path, name, cfg, days=(3,))
     segs = catalog.segments(name)
     assert len(segs) == 3 and all(s.schema is not None for s in segs)
@@ -126,21 +126,21 @@ def test_pinned_scan_equals_inferred_scan_with_alter_drift(
     # then first — the fold must reproduce mergeSchema's column order
     for order in (slice(None), slice(None, None, -1)):
         _assert_same_scan(
-            read_segments(spark, paths[order], partitioned, schemas=schemas[order]),
-            read_segments(spark, paths[order], partitioned),
+            read_segments(spark, paths[order], schemas=schemas[order]),
+            read_segments(spark, paths[order]),
         )
     hits = search(spark, catalog, name, "tag:tag1", limit=10)
     assert [json.loads(h)["id"] for h in hits] == [301]
 
 
-@pytest.mark.parametrize("partitioned", [True, False])
+@pytest.mark.parametrize("timed", [True, False])
 def test_segment_without_recorded_schema_falls_back(
-    spark, catalog, tmp_path, partitioned
+    spark, catalog, tmp_path, timed
 ):
     """A pre-change manifest entry (no ``schema``) must still search
     correctly: the scan infers the schema, as before."""
-    name = f"old{int(partitioned)}"
-    cfg = _build(spark, catalog, tmp_path, name, partitioned, days=(1, 2, 3))
+    name = f"old{int(timed)}"
+    cfg = _build(spark, catalog, tmp_path, name, timed, days=(1, 2, 3))
     want = sorted(json.loads(h)["id"] for h in search(spark, catalog, name, "*", limit=100))
     ver, segs, dels = catalog.snapshot(name)
     old = [replace(segs[0], schema=None)] + segs[1:]
@@ -151,9 +151,8 @@ def test_segment_without_recorded_schema_falls_back(
     assert got == want and len(got) == 15
     segs = catalog.segments(name)
     _assert_same_scan(
-        read_segments(spark, _paths(catalog, cfg, segs), partitioned,
-                      schemas=[s.schema for s in segs]),
-        read_segments(spark, _paths(catalog, cfg, segs), partitioned),
+        read_segments(spark, _paths(catalog, cfg, segs), schemas=[s.schema for s in segs]),
+        read_segments(spark, _paths(catalog, cfg, segs)),
     )
 
 
@@ -181,20 +180,19 @@ def test_conflicting_recorded_types_fall_back(spark, catalog, tmp_path):
     )
 
 
-@pytest.mark.parametrize("partitioned", [True, False])
-def test_merged_segment_records_its_schema(spark, catalog, tmp_path, partitioned):
+@pytest.mark.parametrize("timed", [True, False])
+def test_merged_segment_records_its_schema(spark, catalog, tmp_path, timed):
     from toshokan_spark.maintenance import merge_segments
 
-    name = f"mrg{int(partitioned)}"
-    cfg = _build(spark, catalog, tmp_path, name, partitioned, days=(1, 2))
+    name = f"mrg{int(timed)}"
+    cfg = _build(spark, catalog, tmp_path, name, timed, days=(1, 2))
     cfg = _alter_add_tag(spark, catalog, tmp_path, name, cfg, days=(3,))
     before = sorted(search(spark, catalog, name, "*", limit=100))
     entry = merge_segments(spark, catalog, name)
     inferred = spark.read.parquet(join_path(cfg.path, entry.file_name))
     assert entry.schema == inferred.schema.jsonValue()
     assert catalog.segments(name)[0].schema == entry.schema
-    pinned = read_segments(spark, [join_path(cfg.path, entry.file_name)], partitioned,
-                           schemas=[entry.schema])
+    pinned = read_segments(spark, [join_path(cfg.path, entry.file_name)], schemas=[entry.schema])
     _assert_same_scan(pinned, inferred)
     assert sorted(search(spark, catalog, name, "*", limit=100)) == before
 
@@ -293,12 +291,13 @@ def test_search_job_budgets_on_four_segment_time_index(spark, tmp_path):
     ).collect()
     scored()
     assert _count_jobs(spark, scored) == SCORED_JOBS
-    # the inference path, for contrast: one footer read per kept segment
+    # the inference path, for contrast: one mergeSchema job reads the
+    # footers of every kept segment
     ver, segs, dels = catalog.snapshot("budget")
     catalog._try_write_version("budget", ver + 1, [replace(s, schema=None) for s in segs], dels)
     assert _count_jobs(
         spark, lambda: search(spark, catalog, "budget", "*", limit=10)
-    ) == 1 + len(segs)
+    ) == 2
 
 
 #: jobs one scored (BM25) search over the four-segment index runs:

@@ -1729,3 +1729,36 @@ def test_stream_percolates_stored_monitors(spark, catalog, tmp_path):
     assert {r["query_id"] for r in got.collect()} == {"errs", "warns"}
     # segments unaffected by the alert sink
     assert [s.num_rows for s in catalog.segments("stream-logs")] == [2, 1]
+
+
+def test_declared_value_field_is_stored_by_batch_and_stream(spark, tmp_path):
+    """A declared field named ``value`` — the name of the raw line
+    column of ``spark.read.text`` and of the stream source — is stored,
+    not dropped with the line."""
+    from toshokan_spark.catalog import FsCatalog
+    from toshokan_spark.indexer import index_batch
+
+    catalog = FsCatalog(str(tmp_path / "catalog"))
+    config = IndexConfig(
+        name="stream-logs",
+        path=str(tmp_path / "data" / "stream-logs"),
+        fields=[
+            FieldConfig(name="id", type="number", number_type="i64"),
+            FieldConfig(name="value", type="number", number_type="f64"),
+        ],
+    )
+    create_index(catalog, config)
+    batch = tmp_path / "batch.jsonl"
+    batch.write_text(
+        json.dumps({"id": 1, "value": 2.5}) + "\n" + json.dumps({"id": 2}) + "\n"
+    )
+    index_batch(spark, catalog, "stream-logs", jsonl_path=str(batch))
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "b1.jsonl").write_text(json.dumps({"id": 3, "value": -7.0}) + "\n")
+    _drain(spark.readStream.text(str(indir)), catalog, str(tmp_path / "ckpt"))
+
+    assert [s.num_rows for s in catalog.segments("stream-logs")] == [2, 1]
+    assert all("value" in json.dumps(s.schema) for s in catalog.segments("stream-logs"))
+    hits = [json.loads(h) for h in search(spark, catalog, "stream-logs", "value:*", limit=10)]
+    assert sorted((h["id"], h["value"]) for h in hits) == [(1, 2.5), (3, -7.0)]

@@ -147,9 +147,9 @@ class SegmentEntry:
     #: inclusive), recorded at write time. Enables MANIFEST-LEVEL
     #: pruning: a time-bounded query drops non-overlapping segments
     #: before any Spark plan is built — at 10k segments this collapses
-    #: the per-segment-scan union for partitioned indexes to just the
-    #: overlapping few (the Delta/Iceberg file-statistics pattern;
-    #: Catalyst partition pruning still prunes WITHIN survivors).
+    #: the scan to just the overlapping few paths (the Delta/Iceberg
+    #: file-statistics pattern; the time-sorted files' row-group stats
+    #: still prune WITHIN survivors).
     min_day: Optional[str] = None
     max_day: Optional[str] = None
     #: per-NUMBER-field [min, max] zone maps recorded at write time
@@ -186,15 +186,16 @@ class SegmentEntry:
     #: configured (``FieldConfig.histogram_bin``) or old manifest.
     field_histograms: Optional[dict] = None
     #: the Spark schema a parquet read of this segment resolves to
-    #: (``StructType.jsonValue()``, ``__day`` partition column
-    #: included), recorded at commit from the read the writer already
-    #: makes. Search builds the segment's scan from it instead of
-    #: inferring it from the parquet footers, which costs one Spark
-    #: job per segment per query (`search.read_segments`). On storage
-    #: each distinct schema is written once per manifest version, in
-    #: the version's ``schemas`` map, and the entry holds its content
-    #: id; reads expand it back, so callers always see the schema
-    #: itself. None = old manifest: the scan infers the schema.
+    #: (``StructType.jsonValue()``), recorded at commit from the read
+    #: the writer already makes. Search builds the scan from it
+    #: instead of inferring it from the parquet footers, which costs a
+    #: Spark job per query (`search.read_segments`, which also drops
+    #: the day column that segments of the old day-directory layout
+    #: recorded). On storage each distinct schema is written once per
+    #: manifest version, in the version's ``schemas`` map, and the
+    #: entry holds its content id; reads expand it back, so callers
+    #: always see the schema itself. None = old manifest: the scan
+    #: infers the schema.
     schema: Optional[dict] = None
 
 

@@ -197,8 +197,9 @@ class IndexConfig:
     """An index (≈ table): name + storage path + schema
     (`src/config/mod.rs:234-244`). ``time_field`` is dead config in the
     reference (never read — verified by grep, SURVEY §1.1); here it is
-    *live*: ingestion partitions output Parquet by its date, giving
-    real partition pruning at 100 TB scale.
+    *live*: each segment records its day range and sorts its rows by
+    the field, so time-bounded queries prune whole segments at the
+    manifest and row groups inside the files they keep.
     """
 
     name: str

@@ -10,10 +10,12 @@ machinery (SURVEY §2.3) and the memory budget is Spark's executor
 memory management.
 
 Scale notes (100 TB):
-* the write is a single narrow stage (parse -> coerce -> write);
-  no shuffle unless a ``time_field`` partition layout is requested,
-  in which case we hash-repartition by the partition value first so
-  each task writes few files (avoids the small-files explosion);
+* the write is a single narrow stage (parse -> coerce -> write) into
+  one flat directory per segment, ``seg-X/part-*.parquet``; no
+  shuffle unless ``target_files`` asks for a file count. Time pruning
+  needs no directory layout: the manifest records each segment's day
+  range and time zone map, and rows are sorted by the time field
+  inside each file, so parquet row-group min/max skip within a file;
 * empty batches write nothing (`index.rs:164-170` suppression).
 """
 
@@ -30,7 +32,6 @@ from toshokan_spark.config import IndexConfig
 from toshokan_spark.ingest import ingest_projection
 from toshokan_spark.storage import join_path
 
-PARTITION_COL = "__day"
 #: per-segment BM25 stats live under <index path>/_stats/<seg name>;
 #: the underscore prefix keeps Spark's file-listing from ever treating
 #: them as data
@@ -212,25 +213,19 @@ def build_segment(
     seg_path = join_path(config.path, seg_name)
 
     df = typed
-    partition_cols: list[str] = []
-    if config.time_field and config.time_field in df.columns:
-        # resurrect the reference's dead `time_field`
-        # (`src/config/mod.rs:229-231`, never read — SURVEY §1.1) as a
-        # real date partition: range queries on the time field prune
-        # whole partitions at the Parquet source.
-        df = df.withColumn(PARTITION_COL, F.to_date(F.col(config.time_field)))
-        partition_cols = [PARTITION_COL]
+    # the reference's dead `time_field` (`src/config/mod.rs:229-231`,
+    # never read — SURVEY §1.1) is live here: the day range observed
+    # below prunes whole segments at the manifest
+    timed = bool(config.time_field) and config.time_field in df.columns
     if target_files:
         df = df.repartition(target_files)
-    if partition_cols:
-        # cluster rows by time WITHIN each task's output files (no
+    if timed:
+        # cluster rows by time WITHIN each task's output file (no
         # extra shuffle): parquet records per-row-group min/max for
-        # the sorted column, so a time-range predicate inside a day
-        # skips whole row groups — the within-file analog of the
-        # __day partition pruning above (SURVEY §7 item 7's
-        # "Z-order-ish sort"; one sort column, so a plain sort is
-        # strictly better than an actual Z-curve here)
-        df = df.sortWithinPartitions(PARTITION_COL, config.time_field)
+        # the sorted column, so a time-range predicate skips whole row
+        # groups (SURVEY §7 item 7's "Z-order-ish sort"; one sort
+        # column, so a plain sort is strictly better than a Z-curve)
+        df = df.sortWithinPartitions(config.time_field)
 
     # Row count + day range + per-field zone maps are OBSERVED during
     # the write itself (df.observe piggybacks aggregates on the write
@@ -249,8 +244,9 @@ def build_segment(
 
     stat_cols = zone_map_cols(config, set(df.columns))
     aggs = [F.count(F.lit(1)).alias("__n")]
-    if partition_cols:
-        aggs += [F.min(PARTITION_COL).alias("__dlo"), F.max(PARTITION_COL).alias("__dhi")]
+    if timed:
+        tcol = F.col(config.time_field)
+        aggs += [F.to_date(F.min(tcol)).alias("__dlo"), F.to_date(F.max(tcol)).alias("__dhi")]
     for name, src in stat_cols:
         aggs += [F.min(src).alias(f"__lo_{name}"), F.max(src).alias(f"__hi_{name}")]
     # additive stats (non-null count + decimal(38,6)-exact sum) for
@@ -271,10 +267,7 @@ def build_segment(
     obs = Observation(f"seg_stats_{seg_id}")
     df = df.observe(obs, *aggs)
 
-    writer = df.write.mode("error")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(seg_path)
+    df.write.mode("error").parquet(seg_path)
 
     r = obs.get
     num_rows = int(r["__n"])
@@ -284,7 +277,7 @@ def build_segment(
         return None
 
     min_day = max_day = None
-    if partition_cols and r["__dlo"] is not None:
+    if timed and r["__dlo"] is not None:
         min_day, max_day = str(r["__dlo"]), str(r["__dhi"])
 
     _plain = plain_stat_value

@@ -234,6 +234,10 @@ def _bad(
 # the full projection
 # ---------------------------------------------------------------------------
 
+#: the raw JSON line while a batch is projected (dropped at the end)
+_LINE_COL = "__line"
+
+
 def ingest_projection(
     lines: DataFrame,
     config: IndexConfig,
@@ -244,8 +248,10 @@ def ingest_projection(
 
     One narrow stage: parse JSON twice (typed raw-leaf struct + a
     map<string,string> for the dynamic remainder), coerce, tokenize.
+    The line is carried under an internal name, so a declared field
+    may share *value_col*'s name (``value``, the default).
     """
-    v = F.col(value_col)
+    v = F.col(_LINE_COL)
     raw = F.from_json(v, raw_schema(config)).alias("__raw")
     # map<string,variant> -> to_json keeps the *exact* raw JSON text of
     # every value (strings stay quoted), so the _dynamic splice at
@@ -258,7 +264,7 @@ def ingest_projection(
     have_strict = any(_needs_strict(f) for f in config.fields)
     if have_strict:
         extra["__rawb"] = F.from_json(v, strict_schema(config)).alias("__rawb")
-    df = lines.select(v.alias(value_col)).withColumns(extra)
+    df = lines.select(F.col(value_col).alias(_LINE_COL)).withColumns(extra)
 
     declared = [f.name for f in config.fields]
     cols: dict[str, Column] = {}
@@ -287,7 +293,7 @@ def ingest_projection(
         reject = reject | b
 
     out = df.withColumns(cols).withColumn(REJECT_COL, F.coalesce(reject, F.lit(False)))
-    out = out.drop("__raw", "__all", "__rawb", value_col)
+    out = out.drop("__raw", "__all", "__rawb", _LINE_COL)
 
     # index shadow columns
     shadows: dict[str, Column] = {}

@@ -85,10 +85,7 @@ def merge_segments(
 
     from toshokan_spark.search import read_segments
 
-    df = read_segments(
-        spark, paths, partitioned=config.time_field is not None,
-        schemas=[s.schema for s in segs],
-    )
+    df = read_segments(spark, paths, schemas=[s.schema for s in segs])
     # materialize pending delete tombstones while rewriting (the merge
     # IS the physical delete): survivors only. Tombstones clear from
     # the manifest ONLY when this merge covered every segment — a
@@ -145,20 +142,14 @@ def merge_segments(
     seg_id = uuid7()
     seg_name = f"seg-{seg_id}"
     seg_path = join_path(config.path, seg_name)
-    if "__day" in df.columns:
-        # preserve the time_field partition layout (and its pruning)
-        # across compaction: repartition on the partition value so each
-        # task writes few files, then write partitioned. The
-        # within-file time sort survives compaction too (same
-        # row-group-skipping rationale as the initial segment write,
+    out = df.coalesce(nfiles)
+    if config.time_field and config.time_field in df.columns:
+        # the within-file time sort survives compaction (same
+        # row-group-skipping rationale as the segment write,
         # indexer.py) — without it a merge would silently degrade
-        # time-range scans over merged segments.
-        out = df.repartition(nfiles, "__day")
-        if config.time_field and config.time_field in df.columns:
-            out = out.sortWithinPartitions("__day", config.time_field)
-        out.write.mode("error").partitionBy("__day").parquet(seg_path)
-    else:
-        df.coalesce(nfiles).write.mode("error").parquet(seg_path)
+        # time-range scans over merged segments
+        out = out.sortWithinPartitions(config.time_field)
+    out.write.mode("error").parquet(seg_path)
 
     obs_row = None
     if n_obs is not None:
@@ -167,8 +158,7 @@ def merge_segments(
         obs_row = n_obs.get
         total = int(obs_row["__n"])
         if total == 0:
-            # the tombstones wiped everything this merge covered: a
-            # zero-row partitioned write leaves no readable footer, so
+            # the tombstones wiped everything this merge covered:
             # materialize the wipe as segment REMOVAL — old segments
             # out, nothing in, tombstones cleared if fully covered
             st0 = catalog.data_storage(config)
@@ -375,18 +365,13 @@ def cluster_merge_segments(
         raise MergeError("n_clusters must be >= 2")
     config = catalog.get_index(index_name)
     paths = [join_path(config.path, s.file_name) for s in segs]
-    df = read_segments(
-        spark, paths, partitioned=config.time_field is not None,
-        schemas=[s.schema for s in segs],
-    )
+    df = read_segments(spark, paths, schemas=[s.schema for s in segs])
     if deletes:
         df = df.filter(
             apply_deletes(F.lit(True), config, set(df.columns), deletes)
         )
     if cluster_by not in df.columns:
         raise MergeError(f"unknown cluster field {cluster_by!r}")
-    # the indexer re-derives __day from the time field; feed it rows
-    df = df.drop("__day")
 
     cuts = [i / n_clusters for i in range(1, n_clusters)]
     if exact_bounds:
@@ -464,8 +449,7 @@ def _newest_mtime(st, path: str, depth: int = 6) -> float | None:
     """Newest store-reported mtime across the WHOLE tree under *path*
     (depth-capped). Recursion matters: an active Spark write touches
     only deep entries — ``seg-X/_temporary/<job>/<attempt>/part-...``
-    and, for partitioned indexes, ``seg-X/__day=.../part-*.parquet`` —
-    while POSIX/HDFS only bump a directory's mtime when its IMMEDIATE
+    — while POSIX/HDFS only bump a directory's mtime when its IMMEDIATE
     entries change, so a direct-children-only probe would let vacuum
     reap a long-running write mid-flight. None when the path is gone."""
     from toshokan_spark.storage import StorageNotFound
@@ -683,11 +667,10 @@ def snapshot_index(
 
     The copy is semantic, not byte-level: each segment is read and
     rewritten through Spark (a DISTRIBUTED copy — at 100 TB the
-    cluster moves the data, never the driver), preserving the
-    ``__day=`` partition layout so restored manifests prune exactly
-    like the originals. Manifest metadata (row counts, day ranges,
-    zone maps, blooms, decimal sums, histograms) describes CONTENT,
-    not file bytes, so it transfers verbatim.
+    cluster moves the data, never the driver) into the flat segment
+    layout, rows in their stored order. Manifest metadata (row
+    counts, day ranges, zone maps, blooms, decimal sums, histograms)
+    describes CONTENT, not file bytes, so it transfers verbatim.
 
     Snapshot layout: ``snapshot.json`` (config + entries + deletes)
     beside one directory per segment plus its ``_stats`` twin.
@@ -705,15 +688,12 @@ def snapshot_index(
     st_dst = storage_for(dest_root, spark)
     st_dst.mkdirs(dest_root)
 
-    partitioned = config.time_field is not None
     for s in segs:
         src = join_path(config.path, s.file_name)
         dst = join_path(dest_root, s.file_name)
-        df = read_segments(spark, [src], partitioned, schemas=[s.schema])
-        w = df.write.mode("overwrite")
-        if partitioned and "__day" in df.columns:
-            w = w.partitionBy("__day")
-        w.parquet(dst)
+        read_segments(spark, [src], schemas=[s.schema]).write.mode(
+            "overwrite"
+        ).parquet(dst)
         sp = stats_path(config, s.file_name)
         if st_src.exists(sp):
             spark.read.parquet(sp).coalesce(1).write.mode(
@@ -790,7 +770,6 @@ def restore_snapshot(
         have_segs = {s.id for s in catalog.segments(config.name)}
         have_dels = {d.id for d in catalog.deletes(config.name)}
     st_dst = catalog.data_storage(config)
-    partitioned = config.time_field is not None
     total = 0
     for sdoc in doc["segments"]:
         entry = SegmentEntry(**sdoc)
@@ -802,13 +781,9 @@ def restore_snapshot(
         # partially failed restore must replace the leftover segment
         # dir, not die on it — restores are idempotent (ADVICE r14)
         try:
-            df = read_segments(
-                spark, [src], partitioned, schemas=[entry.schema]
-            )
-            w = df.write.mode("overwrite")
-            if partitioned and "__day" in df.columns:
-                w = w.partitionBy("__day")
-            w.parquet(join_path(config.path, entry.file_name))
+            read_segments(spark, [src], schemas=[entry.schema]).write.mode(
+                "overwrite"
+            ).parquet(join_path(config.path, entry.file_name))
             ssrc = join_path(snap_root, STATS_DIR, entry.file_name)
             if st_snap.exists(ssrc):
                 spark.read.parquet(ssrc).coalesce(1).write.mode(

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 #: internal columns the indexer adds that curation must not see
 _INTERNAL_PREFIXES = ("__tokens__",)
-_INTERNAL_COLS = ("__day", "_dynamic")
+_INTERNAL_COLS = ("_dynamic",)
 
 
 def _logical(df: DataFrame) -> DataFrame:

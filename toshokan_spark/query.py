@@ -984,9 +984,9 @@ def time_bounds(
     node: Node, time_field: str
 ) -> tuple[Optional[datetime], Optional[datetime]]:
     """Conservative (lo, hi) datetime bounds on *time_field*, for
-    ``__day`` partition + manifest pruning (see _interval_bounds for
-    the algebra; terms excluded — a datetime equality literal is
-    already covered by the range syntax)."""
+    manifest pruning by day range and time zone map (see
+    _interval_bounds for the algebra; terms excluded — a datetime
+    equality literal is already covered by the range syntax)."""
     return _interval_bounds(
         node, time_field, _range_cmp_leaf(QueryCompiler._datetime_lit)
     )

@@ -6,8 +6,9 @@ declarative plan::
 
     spark.read.parquet(*manifested_segments).filter(pred).limit(k)
 
-Catalyst/Parquet give predicate pushdown, column pruning, partition
-pruning (on the time_field layout) and a short-circuiting global
+The manifest prunes whole segments first (day ranges, zone maps,
+token blooms); Catalyst/Parquet then give predicate pushdown,
+row-group skipping, column pruning and a short-circuiting global
 limit. Two deliberate deviations from the reference, both stricter
 (SURVEY §2.5, §3.1):
 
@@ -46,75 +47,49 @@ from toshokan_spark.plans.ast import parse_query
 def read_segments(
     spark: SparkSession,
     paths: list[str],
-    partitioned: bool = False,
     schemas: "Optional[list]" = None,
 ) -> DataFrame:
-    """Scan of all manifested segments (the reference's equivalent is
-    the implicit union-of-segments at search, `search.rs:162-204`).
+    """ONE multi-path scan node over the manifested segments (the
+    reference's equivalent is the implicit union-of-segments at search,
+    `search.rs:162-204`), so a query that keeps 10k segments analyzes
+    in O(1) plan nodes, not a 10k-arm union.
 
     ``schemas`` lists each segment's recorded schema
     (``SegmentEntry.schema``, parallel to *paths*). When every segment
-    has one, the scan is built from them and no parquet footer is
-    read while planning; inferring a schema costs one Spark job per
-    read, so a query that keeps k segments would run k jobs before
-    its own. The result is the same frame inference gives: same
-    columns in the same order, same types, same rows.
+    has one, the scan's schema is the recorded schemas folded in
+    Python, before any Spark call, the way ``mergeSchema`` folds
+    footers: in file-path order (the order Spark sorts the files in,
+    not the manifest's), first-seen column order, new columns
+    appended. No parquet footer is read while planning; inferring a
+    schema costs a Spark job. A column missing from a segment
+    null-fills, exactly like ``unionByName(allowMissingColumns=True)``.
 
-    Unpartitioned indexes get ONE multi-path scan node. Its schema is
-    the recorded schemas folded in Python, before any Spark call, the
-    way ``mergeSchema`` folds footers: in file-path order (the order
-    Spark sorts the files in, not the manifest's), first-seen column
-    order, new columns appended. A column missing from a segment null-fills,
-    exactly like ``unionByName(allowMissingColumns=True)``, so a
-    10k-segment index analyzes in O(1) plan nodes instead of a
-    10k-arm union.
-
-    Indexes with the ``__day=`` time-partition layout read each
-    segment on its own and ``unionByName`` the reads: Spark's
-    partition discovery rejects multiple partitioned roots
-    (CONFLICTING_DIRECTORY_STRUCTURES — the ``seg-*`` level between
-    the roots and the ``__day=`` dirs is not a partition component),
-    and collapsing the layout would forfeit PartitionFilters pruning.
-    The union is a plan-level concat, not a shuffle, and Catalyst
-    still pushes filters/pruning into every arm.
+    Files are listed recursively, so segments written in the old
+    ``seg-X/__day=YYYY-MM-DD/part-*.parquet`` layout read in the same
+    scan: their day directories are not partition columns, and the
+    ``__day`` their recorded schemas name is dropped.
 
     A segment without a recorded schema (old manifests), or recorded
-    types the fold cannot reconcile, sends the read down the
-    inference path: ``mergeSchema`` over the footers for unpartitioned
-    indexes, a footer read per segment otherwise.
+    types the fold cannot reconcile, sends the read down the inference
+    path: ``mergeSchema`` over the footers.
     """
+    reader = spark.read.option("recursiveFileLookup", "true")
     pinned = _recorded_schemas(schemas, len(paths))
-    if pinned is not None and (partitioned or len(paths) == 1):
-        return _union_segments(
-            [spark.read.schema(t).parquet(p) for t, p in zip(pinned, paths)]
-        )
     if pinned is not None:
         # every file of a segment shares its schema, so the files'
         # path order is the order of the segment paths plus "/"
         by_path = sorted(range(len(paths)), key=lambda i: paths[i].rstrip("/") + "/")
         merged = merge_schemas([pinned[i] for i in by_path])
         if merged is not None:
-            try:
-                return spark.read.schema(merged).parquet(*paths)
-            except Exception:
-                pass  # unexpected layout: the inference path decides
-    if len(paths) == 1:
-        return spark.read.parquet(paths[0])
-    if not partitioned:
-        try:
-            return spark.read.option("mergeSchema", "true").parquet(*paths)
-        except Exception:
-            # unexpected layout (e.g. partition dirs without the
-            # partitioned hint) — per-segment fallback below
-            pass
-    return _union_segments([spark.read.parquet(p) for p in paths])
+            return reader.schema(merged).parquet(*paths)
+    if len(paths) > 1:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*paths)
 
 
-def _union_segments(dfs: "list[DataFrame]") -> DataFrame:
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
+#: the day-directory column of segments written in the old
+#: ``seg-X/__day=.../`` layout; a recursive listing never reads it
+_OLD_LAYOUT_DAY_COL = "__day"
 
 
 def _recorded_schemas(schemas, n: int):
@@ -129,7 +104,10 @@ def _recorded_schemas(schemas, n: int):
     for s in schemas:
         t = parsed.get(id(s))
         if t is None:
-            t = parsed[id(s)] = StructType.fromJson(s)
+            t = parsed[id(s)] = StructType([
+                f for f in StructType.fromJson(s).fields
+                if f.name != _OLD_LAYOUT_DAY_COL
+            ])
         out.append(t)
     return out
 
@@ -194,10 +172,10 @@ def _pruned_segments(config, segs, node, verdict_sink=None):
     day range against the query's time bounds, and each NUMBER
     field's [min, max] zone map (``SegmentEntry.field_stats``)
     against the query's numeric bounds. At 10k segments this
-    collapses the per-segment union to the overlapping few; Catalyst
-    partition pruning and parquet row-group stats then prune WITHIN
-    the survivors. Segments without recorded stats are conservatively
-    kept. Returns ``(lo, hi, surviving_segments)``.
+    collapses the scan to the overlapping few paths; pushed filters
+    and parquet row-group stats then prune WITHIN the survivors.
+    Segments without recorded stats are conservatively kept. Returns
+    ``(lo, hi, surviving_segments)``.
 
     ``verdict_sink``: optional list; when given, one
     ``(segment_id, rule)`` tuple is appended per segment — the rule
@@ -328,36 +306,25 @@ def _filtered_scan(
     """The scan every index search shares: one manifest snapshot, its
     segments pruned against *node*, the survivors' scan, the compiled
     query (``compile_pred(config, columns)``) with the snapshot's
-    delete tombstones masked out, and the query's time bounds pushed
-    onto the ``__day`` layout. Returns ``(config, segments, scan,
+    delete tombstones masked out. Returns ``(config, segments, scan,
     predicate)``; scan and predicate are None when pruning kept no
     segment."""
     from toshokan_spark.storage import join_path
 
     config = catalog.get_index(index_name)
     _ver, segs, deletes = catalog.snapshot(index_name, at_version=at_version)
-    lo, hi, segs = _pruned_segments(config, segs, node)
+    _lo, _hi, segs = _pruned_segments(config, segs, node)
     if not segs:
         return config, segs, None, None
     df = read_segments(
         spark,
         [join_path(config.path, s.file_name) for s in segs],
-        partitioned=config.time_field is not None,
         schemas=[s.schema for s in segs],
     )
     columns = set(df.columns)
     pred = apply_deletes(
         compile_pred(config, columns), config, columns, deletes
     )
-    # resurrect the reference's dead time_field as real partition
-    # pruning: a range/cmp on the time field also constrains the
-    # ``__day`` layout, so whole day-directories (and at 100 TB,
-    # whole object-store prefixes) drop out of the scan
-    if config.time_field and "__day" in columns:
-        if lo is not None:
-            pred = pred & (F.col("__day") >= F.lit(lo.date()))
-        if hi is not None:
-            pred = pred & (F.col("__day") <= F.lit(hi.date()))
     return config, segs, df, pred
 
 
