@@ -1487,40 +1487,38 @@ def test_concurrent_percolator_registrations_both_survive(spark, tmp_path):
     assert c.percolators("conc")["m0_0"] == "id:>999"
 
 
-def test_percolator_registration_warns_without_session(
-        spark, tmp_path, monkeypatch):
-    """A session-less (library) registration can only syntax-check
-    the monitor — the schema compilation the docstring promises needs
-    a JVM. That downgrade must be LOUD (ADVICE r14): silent
-    syntax-only acceptance lets an uncompilable monitor through to
-    halt the first percolation or the ingest stream carrying it."""
+def test_percolator_registration_validates_without_session(tmp_path):
+    """Registration compiles the monitor by rendering its SQL text,
+    which needs no Spark session: a fresh process that never starts a
+    JVM rejects a bad field path and records a good monitor."""
     import json as _json
-    import warnings as _warnings
+    import os
+    import subprocess
+    import sys
 
-    from pyspark.sql import SparkSession
-
-    from toshokan_spark import cli
-    from toshokan_spark.catalog import FsCatalog
-
-    cfg = {"name": "warny", "path": str(tmp_path / "d" / "warny"),
+    cfg = {"name": "noses", "path": str(tmp_path / "d" / "noses"),
            "schema": {"fields": [{"name": "id", "type": "number"}]}}
     (tmp_path / "c.json").write_text(_json.dumps(cfg))
     cat = str(tmp_path / "cat")
-    assert cli.main(["--catalog", cat, "create",
-                     str(tmp_path / "c.json")]) == 0
-    c = FsCatalog(cat)
-    monkeypatch.setattr(
-        SparkSession, "getActiveSession", classmethod(lambda cls: None))
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        c.register_percolator("warny", "m1", "id:>5")
-    assert any("compilation SKIPPED" in str(w.message) for w in caught)
-    # with the session visible again, full compilation runs silently
-    monkeypatch.undo()
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        c.register_percolator("warny", "m2", "id:>6")
-    assert not [w for w in caught if "SKIPPED" in str(w.message)]
+    script = f"""
+import json, pytest
+from pyspark import SparkContext
+from toshokan_spark.catalog import FsCatalog
+from toshokan_spark.config import IndexConfig
+from toshokan_spark.maintenance import create_index
+from toshokan_spark.query import CompileError
+c = FsCatalog({cat!r})
+create_index(c, IndexConfig.from_dict(json.load(open({str(tmp_path / "c.json")!r}))))
+with pytest.raises(CompileError):
+    c.register_percolator("noses", "bad", "id.x:1")
+c.register_percolator("noses", "good", "id:>5")
+assert c.percolators("noses") == {{"good": "id:>5"}}
+assert SparkContext._active_spark_context is None
+"""
+    r = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                       text=True, cwd=os.path.dirname(os.path.dirname(
+                           os.path.abspath(__file__))))
+    assert r.returncode == 0, r.stderr[-2000:]
 
 
 def test_snapshot_restore_across_catalogs(spark, tmp_path, capsys):

@@ -470,8 +470,12 @@ def test_phrase_slop_long_phrase_compiles_fast(spark):
     ~2.8e11 tuples: a query-of-death)."""
     import time
     from pyspark.sql import Row
-    from toshokan_spark.query import CompileError, _token_seq_match
     from pyspark.sql import functions as F
+    from toshokan_spark.query import CompileError
+    from toshokan_spark.query_sql import _token_seq_match_sql
+
+    def fold(words, slop):
+        return F.expr(_token_seq_match_sql("toks", words, slop))
 
     words = [f"w{i}" for i in range(13)]
     toks = (
@@ -481,7 +485,7 @@ def test_phrase_slop_long_phrase_compiles_fast(spark):
         [Row(toks=toks), Row(toks=["w0", "pad"] + words[2:])]
     )
     t0 = time.monotonic()
-    col = _token_seq_match(F.col("toks"), words, slop=8)
+    col = fold(words, 8)
     compile_s = time.monotonic() - t0
     assert compile_s < 2.0, f"slop compile took {compile_s:.1f}s"
     got = [r.m for r in df.select(col.alias("m")).collect()]
@@ -491,15 +495,11 @@ def test_phrase_slop_long_phrase_compiles_fast(spark):
     # dead-ends but slop 2 reaches past it
     df2 = spark.createDataFrame([Row(toks=["a", "b", "b", "c"])])
     abc = ["a", "b", "c"]
-    assert not df2.select(
-        _token_seq_match(F.col("toks"), abc, slop=0).alias("m")
-    ).first().m
-    assert df2.select(
-        _token_seq_match(F.col("toks"), abc, slop=1).alias("m")
-    ).first().m
+    assert not df2.select(fold(abc, 0).alias("m")).first().m
+    assert df2.select(fold(abc, 1).alias("m")).first().m
 
     with pytest.raises(CompileError):
-        _token_seq_match(F.col("toks"), [f"x{i}" for i in range(200)], slop=1)
+        _token_seq_match_sql("toks", [f"x{i}" for i in range(200)], 1)
 
 
 def test_phrase_huge_slop_no_overflow(spark):
@@ -508,13 +508,13 @@ def test_phrase_huge_slop_no_overflow(spark):
     is clamped at compile time, and clamping is semantically exact
     (any slop wider than the doc is 'in order anywhere')."""
     from pyspark.sql import Row
-    from toshokan_spark.query import _token_seq_match
     from pyspark.sql import functions as F
+    from toshokan_spark.query_sql import _token_seq_match_sql
 
     df = spark.createDataFrame(
         [Row(toks=["a", "x", "x", "b"]), Row(toks=["b", "x", "a"])]
     )
-    col = _token_seq_match(F.col("toks"), ["a", "b"], slop=3_000_000_000)
+    col = F.expr(_token_seq_match_sql("toks", ["a", "b"], 3_000_000_000))
     got = [r.m for r in df.select(col.alias("m")).collect()]
     assert got == [True, False]
 

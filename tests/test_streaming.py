@@ -1762,3 +1762,60 @@ def test_declared_value_field_is_stored_by_batch_and_stream(spark, tmp_path):
     assert all("value" in json.dumps(s.schema) for s in catalog.segments("stream-logs"))
     hits = [json.loads(h) for h in search(spark, catalog, "stream-logs", "value:*", limit=10)]
     assert sorted((h["id"], h["value"]) for h in hits) == [(1, 2.5), (3, -7.0)]
+
+
+def test_stream_percolation_calls_named_functions_like_batch(spark, tmp_path):
+    """Streaming percolation (``alerts_dir``) of monitors on
+    static-object leaves, which have no shadow columns: an ip range
+    and an en_stem term and phrase compile to calls of the named
+    stemmer and ip-key functions. Each micro-batch is analyzed in the
+    stream's cloned session, so the functions are dropped from this
+    session first: the stream must register them where it analyzes.
+    Its alerts equal a batch ``percolate`` of the same rows."""
+    from toshokan_spark.catalog import FsCatalog
+    from toshokan_spark.ingest import ingest_projection
+    from toshokan_spark.query_sql import SQL_FUNCTIONS
+    from toshokan_spark.search import percolate
+
+    catalog = FsCatalog(str(tmp_path / "catalog"))
+    config = IndexConfig(
+        name="stream-logs",
+        path=str(tmp_path / "data" / "stream-logs"),
+        fields=[
+            FieldConfig(name="id", type="number", number_type="i64"),
+            FieldConfig(name="obj", type="static_object", fields=[
+                FieldConfig(name="addr", type="ip"),
+                FieldConfig(name="note", type="text", tokenizer="en_stem"),
+            ]),
+        ],
+    )
+    create_index(catalog, config)
+    monitors = {"net": "obj.addr:[10.0.0.0 TO 10.0.0.255]",
+                "stem": "obj.note:running",
+                "phrase": 'obj.note:"run total"'}
+    for qid, q in monitors.items():
+        catalog.register_percolator("stream-logs", qid, q)
+    rows = [{"id": 1, "obj": {"addr": "10.0.0.7", "note": "Running totals"}},
+            {"id": 2, "obj": {"addr": "192.168.1.1", "note": "runs"}},
+            {"id": 3, "obj": {"addr": "10.0.1.1", "note": "a total run"}},
+            {"id": 4}]
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "b1.jsonl").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
+    for name in SQL_FUNCTIONS:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+    alerts = str(tmp_path / "alerts")
+    q = stream_index(
+        spark.readStream.text(str(indir)), catalog, "stream-logs",
+        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
+        alerts_dir=alerts,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    streamed = {(r.id, r.query_id) for r in spark.read.parquet(alerts).collect()}
+    typed = ingest_projection(spark.read.text(str(indir / "b1.jsonl")), config)
+    batch = percolate(typed, list(catalog.percolators("stream-logs").items()),
+                      config, "id")
+    assert streamed == {(r.id, r.query_id) for r in batch.collect()}
+    assert streamed == {(1, "net"), (1, "stem"), (1, "phrase"), (2, "stem"),
+                        (3, "stem")}

@@ -357,38 +357,14 @@ class FsCatalog:
         if "/" in query_id or query_id in ("", ".", ".."):
             raise CatalogError(f"bad percolator id {query_id!r}")
         config = self.get_index(resolved)
-        from toshokan_spark.plans.ast import parse_query
+        from toshokan_spark.query_sql import render_query_sql
 
-        parse_query(query)  # syntax always checked
-        # FULL compilation against the index's column set — the same
-        # environment percolate() evaluates in — so a monitor that can
-        # never compile (range on an object field, bad value coercion)
-        # fails HERE, not by halting the first percolation or the
-        # ingest stream carrying it. Column construction needs a JVM:
-        # callers with a session (the CLI starts one for registration)
-        # get the full check; session-less library callers get syntax
-        # only.
-        from pyspark.sql import SparkSession
-
-        if SparkSession.getActiveSession() is not None:
-            from toshokan_spark.query import compile_query
-
-            cols = set(config.spark_schema().fieldNames())
-            compile_query(query, config, cols)  # raises on compile errors
-        else:
-            # a session-less registration got syntax-only validation:
-            # say so loudly, because a monitor that parses but can
-            # never COMPILE (range on an object field, bad coercion)
-            # will otherwise surface by halting the first percolation
-            # or the ingest stream carrying it (ADVICE r14)
-            import warnings
-
-            warnings.warn(
-                f"percolator {query_id!r} on {name!r}: no active Spark "
-                "session, schema compilation SKIPPED — the query was "
-                "only syntax-checked and may still fail at percolation",
-                stacklevel=2,
-            )
+        # compile against the index's column set — the environment
+        # percolate() evaluates in — so a monitor that can never
+        # compile (a bad field path, an over-long phrase) fails HERE,
+        # not by halting the first percolation or the ingest stream
+        # carrying it. A text render: no Spark session needed.
+        render_query_sql(query, config, set(config.spark_schema().fieldNames()))
         self._st.mkdirs(self._percolator_dir(resolved))
         self._st.write_text_atomic(
             join_path(self._percolator_dir(resolved), f"{query_id}.json"),

@@ -823,16 +823,13 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if a.cmd == "delete":
-        from toshokan_spark.query import compile_query
+        from toshokan_spark.query_sql import render_query_sql
 
         # fail fast on syntax AND compilation before recording: a
         # tombstone that parses but cannot compile against the schema
-        # would brick every read and merge of the index. Compilation
-        # builds Column expressions, which needs an active session —
-        # without one, a _dynamic-routed field crashed here with a
-        # bare AssertionError instead of validating (verify-found r10)
-        _spark()
-        compile_query(a.query, catalog.get_index(a.index))
+        # would brick every read and merge of the index (a text
+        # render: no Spark session needed)
+        render_query_sql(a.query, catalog.get_index(a.index))
         d = catalog.add_delete(a.index, a.query)
         print(f"recorded delete {d.id}: {a.query}")
         return 0
@@ -2373,7 +2370,6 @@ def main(argv: list[str] | None = None) -> int:
                 print("error: percolator wants QUERY_ID QUERY, --drop "
                       "QUERY_ID, or --list", file=sys.stderr)
                 return 2
-            _spark()  # registration compiles the monitor (needs a JVM)
             catalog.register_percolator(a.index, a.query_id, a.query)
             print(f"registered percolator {a.query_id}")
             return 0

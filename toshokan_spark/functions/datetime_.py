@@ -13,7 +13,7 @@ their unit inferred by magnitude (`datetime.rs:16-46`):
 (i.e. 13 Apr 1972 23:59:55 GMT .. 16 Mar 2242 12:56:31 GMT).
 The ranges are positive-only — `datetime.rs:30-40` matches the RAW
 i64 against them, so a negative epoch is a parse error and the
-document is skipped (query-side numeric literals, `query.py
+document is skipped (query-side numeric literals, `query_sql.py
 _datetime_lit`, are symmetric).
 
 All pure Column expressions — no UDFs.

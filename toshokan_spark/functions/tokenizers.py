@@ -402,6 +402,15 @@ def _stem_tokens_udf(tokens: pd.Series) -> pd.Series:
     )
 
 
+@F.pandas_udf(ArrayType(ArrayType(StringType())))
+def _stem_elements_udf(elements: pd.Series) -> pd.Series:
+    return elements.map(
+        lambda es: None if es is None else [
+            None if ts is None else [snowball_stem(t) for t in ts] for ts in es
+        ]
+    )
+
+
 def tokenize(col: Column, tokenizer: str = "default") -> Column:
     """Return an ``array<string>`` of analyzed tokens for *col*.
 
@@ -419,6 +428,17 @@ def tokenize(col: Column, tokenizer: str = "default") -> Column:
     if tokenizer == "en_stem":
         return _stem_tokens_udf(_default_tokens(col))
     raise ValueError(f"unknown tokenizer {tokenizer!r}")
+
+
+def tokenize_elements(col: Column, tokenizer: str = "default") -> Column:
+    """One analyzed token array per element of an ``array<string>``
+    column. Spark rejects a Python UDF inside a higher-order-function
+    lambda (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF), so
+    ``en_stem`` elements are tokenized by the JVM ``default`` chain and
+    the nested array is then stemmed once, outside the lambda."""
+    if tokenizer == "en_stem":
+        return _stem_elements_udf(F.transform(col, _default_tokens))
+    return F.transform(col, lambda e: tokenize(e, tokenizer))
 
 
 def analyze_term(term: str, tokenizer: str = "default") -> list[str]:

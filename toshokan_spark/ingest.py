@@ -53,7 +53,7 @@ from pyspark.sql import types as T
 from toshokan_spark.config import DYNAMIC_FIELD_NAME, FieldConfig, IndexConfig
 from toshokan_spark.functions.datetime_ import parse_datetime
 from toshokan_spark.functions.ip import ip_sort_key, ip_sort_key_array
-from toshokan_spark.functions.tokenizers import tokenize
+from toshokan_spark.functions.tokenizers import tokenize, tokenize_elements
 
 #: u64 bounds (`src/config/number.rs:8-14`: parse::<u64> — negatives
 #: and values > 2^64-1 are parse errors)
@@ -302,7 +302,7 @@ def ingest_projection(
             base = F.col(fc.name)
             if fc.array:
                 shadows[tokens_col(fc.name)] = F.array_distinct(
-                    F.flatten(F.transform(base, lambda e: tokenize(e, fc.tokenizer)))
+                    F.flatten(tokenize_elements(base, fc.tokenizer))
                 )
             else:
                 shadows[tokens_col(fc.name)] = tokenize(base, fc.tokenizer)

@@ -39,8 +39,8 @@ from pyspark.sql.window import Window
 from toshokan_spark.catalog import FsCatalog
 from toshokan_spark.config import DYNAMIC_FIELD_NAME, IndexConfig
 from toshokan_spark.ingest import is_internal
-from toshokan_spark.query import QueryCompiler, time_bounds
-from toshokan_spark.query_sql import compile_query_fast
+from toshokan_spark.query import time_bounds
+from toshokan_spark.query_sql import compile_query_fast, sql_expr
 from toshokan_spark.plans.ast import parse_query
 
 
@@ -282,7 +282,7 @@ def apply_deletes(pred, config: IndexConfig, columns: set, deletes) -> "object":
     tombstone is coalesced to FALSE before negation, so a row where
     the delete predicate is UNKNOWN survives — SQL ``DELETE WHERE p``
     semantics (only TRUE rows go), and consistent with the compiler's
-    own absent-field rule (query.py: an `alter`-added field absent
+    own absent-field rule (query_sql.py: an `alter`-added field absent
     from every scanned segment compiles to a typed NULL that "matches
     nothing"). Without the coalesce, a tombstone on such a field
     would mask — and at merge time physically destroy — EVERY row.
@@ -344,17 +344,10 @@ def search_df(
     node = parse_query(query)
 
     def compile_pred(config, columns):
-        # SQL-text compile from the ALREADY-parsed node: one F.expr
-        # py4j round trip instead of one per operator node — the
-        # Column backend stays the semantics of record and the
-        # fallback for shapes the renderer declines (equivalence
-        # pinned row-for-row by tests/test_query_sql.py)
+        # compile the ALREADY-parsed node: one F.expr py4j round trip
         from toshokan_spark.query_sql import render_node_sql
 
-        sql = render_node_sql(node, config, columns)
-        if sql is not None:
-            return F.expr(sql)
-        return QueryCompiler(config, columns).compile(node)
+        return sql_expr(render_node_sql(node, config, columns), spark)
 
     config, _segs, df, pred = _filtered_scan(
         spark, catalog, index_name, node, at_version, compile_pred
@@ -2353,18 +2346,14 @@ def percolate(
     doc matching nothing costs zero output rows. Per-batch streaming
     percolation is this exact function inside ``foreachBatch``.
 
-    Plan CONSTRUCTION detail (VERDICT r14 directive 5): building Q
-    Column trees pays ~Q·50 py4j round trips — measured 27 s of pure
-    construction at Q=500 against 1.5 s of execution. Queries the
-    SQL-text backend covers (:mod:`toshokan_spark.query_sql` — the
-    WHOLE language since r15, slop phrases/regexp/wildcard/
-    unqualified fan-outs included; bit-equivalence pinned by
-    ``tests/test_query_sql.py``) render driver-side into ONE SQL
-    string parsed by a single ``F.expr`` call; only the
-    environment-driven remainder (en_stem / ip without shadow
-    columns) builds Columns. The Q=500 profile after this change is
-    recorded in ``tests/test_operators.py``'s width test."""
-    from toshokan_spark.query import compile_query
+    Plan CONSTRUCTION detail: building Q Column trees pays ~Q·50 py4j
+    round trips — measured 27 s of pure construction at Q=500 against
+    1.5 s of execution. Every query renders driver-side to SQL text
+    (:mod:`toshokan_spark.query_sql`), and all of them are parsed by a
+    single ``F.expr`` call, which registers any named function they
+    call on the documents' own session (a stream's micro-batch runs in
+    a clone). The Q=500 profile is recorded in
+    ``tests/test_operators.py``'s width test."""
     from toshokan_spark.query_sql import render_query_sql
 
     # Stage each analyzed text field's token array ONCE per document
@@ -2372,9 +2361,9 @@ def percolate(
     # documents lack the ingest shadow columns, so every
     # phrase/slop/fuzzy monitor would otherwise re-tokenize the same
     # cell inline — and tokenize is an interpreted HOF chain, paid
-    # per monitor per row. Both compile backends prefer the shadow
-    # array when it is in available_columns; Catalyst prunes the
-    # staged column away when no monitor reads it.
+    # per monitor per row. The compiler prefers the shadow array
+    # when it is in available_columns; Catalyst prunes the staged
+    # column away when no monitor reads it.
     from toshokan_spark.functions.tokenizers import tokenize
     from toshokan_spark.ingest import tokens_col
 
@@ -2389,36 +2378,15 @@ def percolate(
                 tokenize(F.col(f.name), f.tokenizer),
             )
     cols = set(docs.columns)
-    rendered: "list[tuple[str, str]]" = []
-    fallback: "list" = []
+    cases = []
     for qid, q in queries:
-        sql = render_query_sql(q, config, cols)  # raises on bad syntax
-        if sql is None:
-            # the Column backend is the semantics of record — it also
-            # raises the user-facing CompileError for truly bad queries
-            fallback.append(
-                F.when(
-                    F.coalesce(compile_query(q, config, cols),
-                               F.lit(False)),
-                    F.lit(qid),
-                )
-            )
-        else:
-            esc = qid.replace("\\", "\\\\").replace("'", "\\'")
-            rendered.append((esc, sql))
-    parts = []
-    if rendered:
-        parts.append(F.expr(
-            "array(" + ",".join(
-                f"CASE WHEN coalesce(({sql}), false) THEN '{esc}' END"
-                for esc, sql in rendered
-            ) + ")"
-        ))
-    if fallback:
-        parts.append(F.array(*fallback))
-    if not parts:
-        parts.append(F.array().cast("array<string>"))
-    arr = parts[0] if len(parts) == 1 else F.concat(*parts)
+        sql = render_query_sql(q, config, cols)  # raises on bad queries
+        esc = qid.replace("\\", "\\\\").replace("'", "\\'")
+        cases.append(f"CASE WHEN coalesce(({sql}), false) THEN '{esc}' END")
+    if cases:
+        arr = sql_expr("array(" + ",".join(cases) + ")", docs.sparkSession)
+    else:
+        arr = F.array().cast("array<string>")
     matched = F.array_compact(arr)
     return docs.select(
         F.col(id_col), F.explode(matched).alias("query_id")
