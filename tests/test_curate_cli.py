@@ -9,14 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 
-@pytest.fixture(scope="module")
-def curated(spark, tmp_path_factory):
-    """Create + ingest the e2e corpus, run `curate` once with
-    --output, return (report stdout lines, output dir)."""
-    from toshokan_spark import cli
-    from toshokan_spark.catalog import FsCatalog
-
-    tmp = tmp_path_factory.mktemp("curate_cli")
+def _corpus_rows():
+    """The e2e corpus: unicode twins, a near-dup, symbol soup and 40
+    filler documents over two sources."""
     rows = []
     base = ("the quick brown fox jumps over the lazy dog and then "
             "runs far away into the quiet green forest tonight")
@@ -32,25 +27,60 @@ def curated(spark, tmp_path_factory):
         src = "web" if i % 2 == 0 else "books"
         text = " ".join(words[(i + j) % len(words)] for j in range(30))
         rows.append({"doc_id": i, "source": src, "text": text + f" tail{i}"})
-    jsonl = tmp / "corpus.jsonl"
-    jsonl.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
+    return rows
 
+
+def _create_and_index(tmp, name, rows):
+    """Create index *name* under catalog ``tmp/cat`` and ingest *rows*;
+    returns the catalog root."""
+    from toshokan_spark import cli
+
+    jsonl = tmp / f"{name}.jsonl"
+    jsonl.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
     cfg = {
-        "name": "curidx",
-        "path": str(tmp / "data"),
+        "name": name,
+        "path": str(tmp / f"data-{name}"),
         "schema": {"fields": [
             {"name": "doc_id", "type": "number"},
             {"name": "source", "type": "text"},
             {"name": "text", "type": "text"},
         ]},
     }
-    cfg_path = tmp / "config.json"
+    cfg_path = tmp / f"{name}.json"
     cfg_path.write_text(json.dumps(cfg))
     cat_root = str(tmp / "cat")
-    out_dir = str(tmp / "out")
     assert cli.main(["--catalog", cat_root, "create", str(cfg_path)]) == 0
-    assert cli.main(["--catalog", cat_root, "index", "curidx", str(jsonl)]) == 0
-    return cat_root, out_dir
+    assert cli.main(["--catalog", cat_root, "index", name, str(jsonl)]) == 0
+    return cat_root
+
+
+@pytest.fixture(scope="module")
+def curated(spark, tmp_path_factory):
+    """Create + ingest the e2e corpus as ``curidx``; return (catalog
+    root, output dir)."""
+    tmp = tmp_path_factory.mktemp("curate_cli")
+    return _create_and_index(tmp, "curidx", _corpus_rows()), str(tmp / "out")
+
+
+def _plans_of(spark, fn):
+    """Physical plan descriptions of the SQL executions *fn* runs,
+    read from the status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = {e.executionId() for e in executions()}
+    fn()
+    return [e.physicalPlanDescription() for e in executions()
+            if e.executionId() not in before]
+
+
+def _python_plans(plans):
+    return [p for p in plans if "ArrowEvalPython" in p or "BatchEvalPython" in p]
 
 
 def test_curate_cli_report_and_outputs(spark, curated, capsys):
@@ -178,30 +208,73 @@ def test_curate_checkpoints_every_stage(spark, curated):
     from toshokan_spark.pipeline import curate
 
     cat_root, _ = curated
-    jss = spark._jsparkSession
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    store = jss.sharedState().statusStore()
-
-    def execution_ids():
-        bus.waitUntilEmpty()
-        execs = store.executionsList()
-        return {execs.apply(i).executionId() for i in range(execs.size())}
-
     spark.catalog.clearCache()  # start from an empty CacheManager
-    before = execution_ids()
-    curate(spark, FsCatalog(cat_root), "curidx", source_field="source",
-           dedup_method="minhash", tail_rate=0.5, seq_len=64)
-    bus.waitUntilEmpty()
-    assert jss.sharedState().cacheManager().isEmpty()
-    execs = store.executionsList()
-    plans = [
-        execs.apply(i).physicalPlanDescription()
-        for i in range(execs.size())
-        if execs.apply(i).executionId() not in before
-    ]
+    plans = _plans_of(spark, lambda: curate(
+        spark, FsCatalog(cat_root), "curidx", source_field="source",
+        dedup_method="minhash", tail_rate=0.5, seq_len=64))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert plans, "curate ran no SQL execution"
     assert not [p for p in plans if "InMemoryRelation" in p]
     assert max(len(p) for p in plans) < 64 * 1024
+
+
+#: ``CurateResult.counts`` of a default minhash pass over the e2e
+#: corpus, recorded once from the code before stage counts were
+#: observed (a pass then ran 64 Spark jobs and one Python UDF)
+DEFAULT_MINHASH_COUNTS = {
+    "ingested": 44, "canonicalized": 44, "exact_kept": 43,
+    "near_dup_docs": 42, "quality_kept": 42, "ccnet_kept": 36,
+    "split_sizes": {"train": 36}, "packed_rows": 36,
+}
+#: the same, recorded the same way, with one more document holding
+#: code points Python's unicodedata has not assigned (Kirat Rai)
+UNASSIGNED_MINHASH_COUNTS = dict(
+    DEFAULT_MINHASH_COUNTS, ingested=45, canonicalized=45, exact_kept=44)
+KIRAT_RAI = {"doc_id": 99, "source": "web",
+             "text": "kirat \U00016d67\U00016d67 rai"}
+#: Spark jobs a default pass over the e2e corpus may run: one per
+#: stage checkpoint and shuffle stage, none only to count
+CURATE_JOB_BUDGET = 50
+
+
+def test_default_curate_runs_no_python_step_and_no_count_job(spark, curated):
+    """Counter test (no wall clock): the stage counts ride the
+    checkpoints' own jobs, and on text with no unassigned code point
+    the pass composes NFC on the JVM, so no SQL execution plans a
+    Python evaluation node."""
+    from test_segment_schema import _count_jobs
+
+    from toshokan_spark.catalog import FsCatalog
+    from toshokan_spark.pipeline import curate
+
+    cat_root, _ = curated
+    out = {}
+
+    def run():
+        out["jobs"] = _count_jobs(spark, lambda: out.setdefault("res", curate(
+            spark, FsCatalog(cat_root), "curidx", source_field="source",
+            dedup_method="minhash")))
+
+    plans = _plans_of(spark, run)
+    assert out["res"].counts == DEFAULT_MINHASH_COUNTS
+    assert out["jobs"] <= CURATE_JOB_BUDGET, out["jobs"]
+    assert not _python_plans(plans)
+
+
+def test_curate_text_with_unassigned_code_point_takes_the_udf(spark, tmp_path):
+    """A document holding a code point Python's unicodedata has not
+    assigned sends NFC to the Python UDF, and the pass returns what it
+    returned before the JVM path existed."""
+    from toshokan_spark.catalog import FsCatalog
+    from toshokan_spark.pipeline import curate
+
+    cat_root = _create_and_index(tmp_path, "kirat", _corpus_rows() + [KIRAT_RAI])
+    out = {}
+    plans = _plans_of(spark, lambda: out.setdefault("res", curate(
+        spark, FsCatalog(cat_root), "kirat", source_field="source",
+        dedup_method="minhash")))
+    assert out["res"].counts == UNASSIGNED_MINHASH_COUNTS
+    assert _python_plans(plans)
 
 
 def test_curate_cli_repeat_and_curriculum(spark, curated, capsys):

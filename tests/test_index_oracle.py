@@ -13,6 +13,10 @@ documented semantics, independently of ``query_sql.py``:
   keep their position, so a phrase never spans one;
 * a phrase with slop N matches when its words occur in order with at
   most N extra positions between the first and the last;
+* a phrase prefix matches when its words but the last occur at
+  consecutive positions and the next token starts with the last word,
+  analyzed like the field's tokens (an over-long token starts with
+  nothing);
 * ``whitespace``-tokenized text is split on whitespace runs and keeps
   its case;
 * a raw field's term or phrase is whole-value equality, its prefix a
@@ -29,7 +33,8 @@ documented semantics, independently of ``query_sql.py``:
   value is false.
 
 Only the AST subset with an exact SQL translation is drawn: term,
-phrase (with slop), prefix, range, comparison and exists leaves, and
+phrase (with slop), prefix, phrase prefix, range, comparison and
+exists leaves, and
 unqualified terms, under bool must/should/must_not, half of them
 inside a time-field range.
 """
@@ -56,6 +61,7 @@ from toshokan_spark.plans.ast import (
     BoolQuery,
     Cmp,
     Phrase,
+    PhrasePrefix,
     Prefix,
     RangeQ,
     Term,
@@ -72,7 +78,7 @@ TAGS = ["t0", "t1", "t2", "東京"]
 SEPS = [" ", "-", ", ", "/", " — "]
 #: segment days; the third segment is written after ``tag`` is added
 SEGMENT_DAYS = [(1, 2), (2, 3, 4), (4, 5)]
-WS_WORDS = ["Foo", "foo", "bar-baz", "QUX.", "x.foo", "東京", "a1"]
+WS_WORDS = ["Foo", "foo", "bar-baz", "QUX.", "x.foo", "東京", "a1", "A", "b"]
 IPS = ["10.0.0.1", "10.0.0.7", "::ffff:10.0.0.7", "192.168.1.20", "2001:db8::1",
        "2001:db8::ff", "not-an-ip"]
 TAG_VALUES = ["x", "y", "big data", "Zürich", "t1"]
@@ -155,6 +161,10 @@ def oracle_index(spark, tmp_path_factory):
         "seq_match", _seq_match,
         [duckdb.list_type(VARCHAR), duckdb.list_type(VARCHAR), BIGINT], BOOLEAN,
     )
+    db.create_function(
+        "prefix_match", _prefix_match,
+        [duckdb.list_type(VARCHAR), duckdb.list_type(VARCHAR), VARCHAR, BOOLEAN], BOOLEAN,
+    )
     db.execute(
         "CREATE TABLE raw (id BIGINT, ts TIMESTAMP, level VARCHAR, msg VARCHAR, "
         "score DOUBLE, ok BOOLEAN, tag VARCHAR, ws VARCHAR, ipk VARCHAR, "
@@ -226,6 +236,20 @@ def _seq_match(tokens, words, slop) -> bool:
     return any(
         all(a < b for a, b in zip(c, c[1:])) and c[-1] - c[0] + 1 - len(c) <= slop
         for c in itertools.product(*spots)
+    )
+
+
+def _prefix_match(tokens, words, prefix, limited) -> bool:
+    """*words* at consecutive positions of *tokens*, the next token
+    starting with *prefix*; with *limited*, an over-long token is not
+    indexed and starts with nothing."""
+    if tokens is None:
+        return None
+    k = len(words)
+    return any(
+        tokens[i:i + k] == words and tokens[i + k].startswith(prefix)
+        and not (limited and len(tokens[i + k].encode()) > 40)
+        for i in range(len(tokens) - k)
     )
 
 
@@ -307,6 +331,17 @@ def _leaf(node) -> str:
         if f == "ip":
             return f"ipk = {_value(f, node.text)}"
         return f"{f} = {_value(f, node.text)}"
+    if isinstance(node, PhrasePrefix):
+        if f in ("msg", "ws"):
+            words = _words(node.text) if f == "msg" else node.text.split()
+            if not words:
+                return "FALSE"
+            col = "pos" if f == "msg" else "wstok"
+            return (f"prefix_match({col}, {_list(words[:-1])}, {_lit(words[-1])}, "
+                    f"{'TRUE' if f == 'msg' else 'FALSE'})")
+        if f == "tags":
+            return f"len(list_filter(tags, t -> starts_with(t, {_lit(node.text)}))) > 0"
+        return f"starts_with({f}, {_lit(node.text)})"
     if isinstance(node, Prefix):
         if f == "msg":
             return f"len(list_filter(tok, t -> starts_with(t, {_lit(node.text.lower())}))) > 0"
@@ -357,6 +392,8 @@ def to_text(node) -> str:
         return f"{f}:{node.text}"
     if isinstance(node, Phrase):
         return f'{f}:"{node.text}"' + (f"~{node.slop}" if node.slop else "")
+    if isinstance(node, PhrasePrefix):
+        return f'{f}:"{node.text}"*'
     if isinstance(node, Prefix):
         return f"{f}:{node.text}*"
     if isinstance(node, Cmp):
@@ -393,6 +430,15 @@ def _cmp(field):
 
 _phrase_text = st.lists(st.sampled_from(WORDS), min_size=1, max_size=3).map(" ".join)
 _ws_text = st.lists(st.sampled_from(WS_WORDS), min_size=1, max_size=3).map(" ".join)
+
+
+def _phrase_prefix(field, words, prefixes):
+    return st.builds(
+        lambda lead, p: PhrasePrefix((field,), " ".join(lead + [p])),
+        st.lists(st.sampled_from(words), max_size=2), st.sampled_from(prefixes),
+    )
+
+
 #: unqualified literals: words of every text field and of _dynamic,
 #: numbers, booleans and addresses
 _unqualified_text = st.sampled_from(
@@ -410,6 +456,10 @@ _leaves = st.one_of(
     st.builds(Term, st.just(("tags",)), st.sampled_from([v for v in TAG_VALUES if " " not in v])),
     st.builds(Phrase, st.just(("tags",)), st.sampled_from(TAG_VALUES)),
     st.builds(Prefix, st.just(("tags",)), st.sampled_from(["b", "Z", "t", "x"])),
+    _phrase_prefix("msg", WORDS, ["sp", "T", "ca", "Zü", "東", "дан", "q", "x"]),
+    _phrase_prefix("ws", WS_WORDS, ["Fo", "fo", "b", "bar", "x.", "東", "A", "Q"]),
+    st.builds(PhrasePrefix, st.sampled_from([("tags",), ("level",), ("tag",)]),
+              st.sampled_from(["b", "Z", "t", "I", "ER", "東"])),
     st.builds(Term, st.just(("ip",)), _ips),
     st.builds(Prefix, st.just(("msg",)), st.sampled_from(["sp", "T", "ca", "Zü", "東", "дан", "q"])),
     st.builds(Term, st.sampled_from([("level",), ("tag",)]),
@@ -462,6 +512,7 @@ def _check_all(spark, catalog, db):
     @example(Phrase(("ws",), "Foo foo"))
     @example(Phrase(("ws",), "foo a1"))
     @example(Phrase(("msg",), "query join", 1))
+    @example(PhrasePrefix(("ws",), "A b"))
     def check(node):
         text = to_text(node)
         assert parse_query(text) == node, text

@@ -253,9 +253,10 @@ def plans7b(spark, sf_dir):
 
 
 def test_profiling_passes_are_narrow(plans7b):
-    """normalize_text (one Arrow UDF + JVM regex chain) and
-    script_profile (pure JVM regex counting) are per-row maps: one
-    documents scan, zero exchanges."""
+    """normalize_text (ICU NFC through ``reflect`` — the Arrow UDF
+    when the text holds an unassigned code point — plus a JVM regex
+    chain) and script_profile (pure JVM regex counting) are per-row
+    maps: one documents scan, zero exchanges."""
     for name in ("normalize_text", "script_profile"):
         a = plans7b[name]
         assert a["scans"] == 1, (name, a)

@@ -192,6 +192,7 @@ RENDERED_QUERIES = [
     'body:"table spark"~3',    # order matters even with slop
     'toks:"big data"',         # phrase on a text ARRAY (per element)
     'ws:"A b"',                # whitespace tokenizer phrase
+    'ws:"A b"*',               # ...and phrase prefix
     'body:"spark tab"*',       # phrase prefix (boundary regex)
     'body:"spark t"*',
     'sev:"IN"*',               # raw: whole-value startswith
@@ -329,6 +330,7 @@ RECORDED_IDS = {
     'body:"table spark"~3': [4],
     'toks:"big data"': [1],
     'ws:"A b"': [],
+    'ws:"A b"*': [],
     'body:"spark tab"*': [1, 5, 6],
     'body:"spark t"*': [1, 5, 6],
     'sev:"IN"*': [1, 4],
@@ -387,12 +389,12 @@ RECORDED_IDS = {
 }
 
 #: recorded answers that were wrong, with the right ones. The Column
-#: backend matched a slop-0 phrase on a whitespace-tokenized field
-#: with a regex over the LOWERCASED value, so a phrase holding an
-#: uppercase word never matched; whitespace tokens keep their case,
-#: and "A b" is adjacent in rows 1, 4 and 5. The DuckDB oracle
-#: (tests/test_index_oracle.py) found it.
-CORRECTED_IDS = {'ws:"A b"': [1, 4, 5]}
+#: backend matched a slop-0 phrase and a phrase prefix on a
+#: whitespace-tokenized field with a regex over the LOWERCASED value,
+#: so one holding an uppercase word never matched; whitespace tokens
+#: keep their case, and "A b" is adjacent in rows 1, 4 and 5. The
+#: DuckDB oracle (tests/test_index_oracle.py) found both.
+CORRECTED_IDS = {'ws:"A b"': [1, 4, 5], 'ws:"A b"*': [1, 4, 5]}
 
 
 def test_rendered_queries_match_column_backend(spark, mixed_df):
@@ -455,6 +457,42 @@ def test_render_respects_shadow_columns(spark):
             compile_query(q, cfg, set(df.columns))).collect())
             for df in (bare, shadowed)]
         assert got == [want, want], q
+
+
+@pytest.mark.parametrize("shadow", [False, True])
+def test_phrases_keep_over_long_token_positions(spark, shadow):
+    """An over-long (>40-byte) token is not indexed but keeps its
+    position, on an ``en_stem`` field as on a ``default`` one, through
+    the shadow stems (``shadow``) and through the registered stemmer:
+    a phrase never spans it, a slop counts it and a phrase prefix
+    never matches it."""
+    from toshokan_spark.functions.tokenizers import tokenize
+    from toshokan_spark.ingest import tokens_col
+
+    cfg = IndexConfig(
+        name="long", path="",
+        fields=[
+            FieldConfig(name="id", type="number", number_type="i64"),
+            FieldConfig(name="t", type="text", tokenizer="en_stem"),
+            FieldConfig(name="d", type="text"),
+        ])
+    long = "x" * 41
+    texts = [(1, f"alpha {long} beta"), (2, "alpha beta"),
+             (3, f"running {long} {long} fast dog"), (4, None),
+             (5, f"{long} alpha beta")]
+    df = spark.createDataFrame(
+        [(i, t, t) for i, t in texts], "id long, t string, d string")
+    if shadow:
+        df = df.withColumn(tokens_col("t"), tokenize(F.col("t"), "en_stem"))
+    for q, want in (('"alpha beta"', [2, 5]), ('"alpha beta"~1', [1, 2, 5]),
+                    ('"running fast"', []), ('"running fast"~2', [3]),
+                    ('"fast dog"', [3]), ('"alpha be"*', [2, 5]),
+                    ('"alpha x"*', []), ('"running fa"*', [])):
+        for field in ("t", "d"):
+            c = F.coalesce(compile_query(f"{field}:{q}", cfg, set(df.columns)),
+                           F.lit(False))
+            got = sorted(r.id for r in df.filter(c).collect())
+            assert got == want, (field, q, got)
 
 
 def test_render_raises_on_syntax_error():

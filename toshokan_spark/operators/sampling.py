@@ -65,6 +65,11 @@ def sample_by_hash(
     return df.filter(sample_key(F.col(key_col), seed) < threshold)
 
 
+#: :func:`leakage_safe_split`'s split names and fractions when none
+#: are given
+DEFAULT_SPLIT_FRACTIONS = {"train": 0.9, "valid": 0.05, "test": 0.05}
+
+
 def leakage_safe_split(
     docs: DataFrame,
     cluster_labels: DataFrame,
@@ -93,7 +98,7 @@ def leakage_safe_split(
     Scale: one broadcast-or-shuffle left join on the id plus a narrow
     hash projection — no window, no collect; cluster geometry is
     whatever the dedup stage already computed."""
-    fractions = fractions or {"train": 0.9, "valid": 0.05, "test": 0.05}
+    fractions = fractions or DEFAULT_SPLIT_FRACTIONS
     total = sum(fractions.values())
     if abs(total - 1.0) > 1.0 / SAMPLE_BUCKETS:
         raise ValueError(f"fractions must sum to 1, got {total}")

@@ -13,7 +13,9 @@ ANSI-ish SQL so the DuckDB oracle can verify values bit-for-bit.
 
 from __future__ import annotations
 
+import functools
 import logging
+import unicodedata
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -700,9 +702,15 @@ def unigram_logprob(
     pass, then a frequency join keyed on the token. At 100 TB the
     frequency table is vocabulary-sized — cap it to the top-K tokens
     with an OOV floor and broadcast, leaving the corpus side a narrow
-    pass; uncapped, AQE picks the join side. The per-doc sum runs in
-    ``decimal(38,18)`` so partition order cannot drift the rounded
-    result (same rationale as sampling.source_mixture).
+    pass; uncapped, it is the build side of a shuffled hash join (a
+    hash table per partition). The strategy is pinned by a hint:
+    left to AQE, the join broadcast whichever side's shuffle stage
+    finished first (the token stream or the table, both under the
+    broadcast threshold at small scale), so the row order into the
+    per-document aggregate, and its shuffle bytes, changed from run
+    to run. The per-doc sum runs in ``decimal(38,18)`` so partition
+    order cannot drift the rounded result (same rationale as
+    sampling.source_mixture).
     """
     from toshokan_spark.operators.util import spread
 
@@ -721,7 +729,8 @@ def unigram_logprob(
     )
     freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     total = freq.agg(F.sum("c").alias("t"))
-    scored = toks.join(freq, "w").crossJoin(F.broadcast(total))
+    scored = toks.join(freq.hint("shuffle_hash"), "w").crossJoin(
+        F.broadcast(total))
     lp = F.log(F.col("c") / F.col("t").cast("double"))
     return (
         scored.groupBy(F.col("id").alias(id_col))
@@ -791,8 +800,79 @@ def zipf_profile(
     )
 
 
+#: the JVM class :func:`normalize_text` composes NFC with, through
+#: ``reflect``; ICU4J ships with Spark (``pyspark/jars``)
+ICU_NORMALIZER = "com.ibm.icu.text.Normalizer"
+
+#: class name -> whether it loads on the driver's JVM (checked once)
+_CLASS_LOADS: "dict[str, bool]" = {}
+
+
+def _icu_loads(spark) -> bool:
+    """True when :data:`ICU_NORMALIZER` loads on *spark*'s JVM. A
+    session without a py4j gateway (Spark Connect) reads False."""
+    name = ICU_NORMALIZER
+    if name not in _CLASS_LOADS:
+        try:
+            spark.sparkContext._jvm.java.lang.Class.forName(name)
+            _CLASS_LOADS[name] = True
+        except Exception:  # missing class, or no JVM to ask
+            _CLASS_LOADS[name] = False
+    return _CLASS_LOADS[name]
+
+
+@functools.lru_cache(maxsize=1)
+def _unassigned_regex() -> str:
+    """A Java regex matching one code point that Python's
+    ``unicodedata`` reports unassigned (category ``Cn``): the 698 Cn
+    ranges of its Unicode 14 table, built once from the table itself,
+    so the guard follows the fallback's own Unicode version.
+
+    A flat class of that many ranges costs Java one test per range
+    for every character it rejects (~8.5 s for 4 M ASCII characters
+    on 4 cores), so the ranges are bisected: each half is entered
+    behind a one-range lookahead over its span, and a leaf class holds
+    at most 32 ranges — about 20 tests per character (0.23 s for the
+    same input, 0.64 s for CJK text)."""
+    ranges, start = [], None
+    for cp in range(0x110001):
+        cn = cp < 0x110000 and unicodedata.category(chr(cp)) == "Cn"
+        if cn and start is None:
+            start = cp
+        elif not cn and start is not None:
+            ranges.append((start, cp - 1))
+            start = None
+
+    def x(cp: int) -> str:
+        return f"\\x{{{cp:X}}}"
+
+    def span(rs) -> str:
+        return f"(?=[{x(rs[0][0])}-{x(rs[-1][1])}])"
+
+    def bisect(rs) -> str:
+        if len(rs) <= 32:
+            return "[" + "".join(
+                x(a) if a == b else f"{x(a)}-{x(b)}" for a, b in rs
+            ) + "]"
+        lo, hi = rs[: len(rs) // 2], rs[len(rs) // 2:]
+        return f"(?:{span(lo)}{bisect(lo)}|{span(hi)}{bisect(hi)})"
+
+    return bisect(ranges)
+
+
+def has_unassigned(col: Column) -> Column:
+    """True when *col* holds a code point Python's ``unicodedata``
+    reports unassigned — the text on which JVM and Python NFC may
+    disagree (see :func:`normalize_text`)."""
+    return col.rlike(_unassigned_regex())
+
+
 def normalize_text(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    *,
+    _unassigned: "int | None" = None,
 ) -> DataFrame:
     """Ingest-side text canonicalization: Unicode NFC composition,
     control-character strip, whitespace-run collapse, edge trim —
@@ -802,26 +882,54 @@ def normalize_text(
     runs, or stray control bytes). Returns
     ``(id, text_norm, changed)``.
 
-    NFC is the module's one Arrow-batched Python step besides the
-    LM passes — the JVM exposes no normalizer function — and it is a
-    pure per-row map (no shuffle, distributes with the scan). The
-    control strip uses an explicit byte-range class (``\\x00-\\x08``
+    NFC is a pure per-row map (no shuffle, distributes with the scan)
+    with two paths, chosen on the driver before anything is planned:
+
+    * the JVM: ICU4J's ``Normalizer.compose`` called through
+      ``reflect`` (projected once per row — Catalyst treats
+      ``reflect`` as non-deterministic);
+    * an Arrow-batched Python UDF over ``unicodedata``.
+
+    ICU carries a newer Unicode version (16) than Python's table (14):
+    the two agree on every code point Python has assigned, but newly
+    assigned characters (20 decomposable ones in Todhri, Tulu-Tigalari,
+    Gurung Khema and Kirat Rai, and new combining marks, which ICU
+    alone reorders) compose differently. So the JVM path runs only
+    when the ICU class loads on the session's JVM (checked once) AND
+    no input text holds a code point ``unicodedata`` reports
+    unassigned (:func:`has_unassigned`); otherwise the UDF runs. The
+    guard is a bounded ``isEmpty`` probe (it stops at the first such
+    row), skipped when the caller passes ``_unassigned``, the count
+    of such rows observed on a job it runs anyway (``pipeline.curate``
+    reads it off its first checkpoint). A plan holding the UDF starts
+    Python workers even over zero rows, so the choice is per call,
+    never per row.
+
+    The control strip uses an explicit byte-range class (``\\x00-\\x08``
     etc.) rather than ``\\p{Cc}`` so Java regex and RE2 (the oracle)
     compile the identical automaton; DuckDB's ``nfc_normalize``
     mirrors the composition."""
     from pyspark.sql.types import StringType
 
-    # no type annotations on the UDF: the module's PEP-563 annotations
-    # + function-local pandas import would leave them unresolvable for
-    # pandas_udf's signature inspection
-    def _nfc_fn(s):
-        import unicodedata
+    text = F.col(text_col)
+    jvm = _icu_loads(df.sparkSession)
+    if jvm and _unassigned is None:
+        _unassigned = 0 if df.filter(has_unassigned(text)).isEmpty() else 1
+    if jvm and _unassigned == 0:
+        nfc = F.when(text.isNotNull(), F.reflect(
+            F.lit(ICU_NORMALIZER), F.lit("compose"), text, F.lit(False)))
+        df = df.select(F.col(id_col), text, nfc.alias("__nfc"))
+        composed = F.col("__nfc")
+    else:
+        # no type annotations on the UDF: the module's PEP-563
+        # annotations + function-local pandas import would leave them
+        # unresolvable for pandas_udf's signature inspection
+        def _nfc_fn(s):
+            return s.map(
+                lambda t: unicodedata.normalize("NFC", t) if t is not None else None
+            )
 
-        return s.map(
-            lambda t: unicodedata.normalize("NFC", t) if t is not None else None
-        )
-
-    _nfc = F.pandas_udf(_nfc_fn, StringType())
+        composed = F.pandas_udf(_nfc_fn, StringType())(text)
 
     # Unicode space separators (NBSP, ogham/en/em spaces, line and
     # paragraph separators, narrow NBSP, ideographic space) mapped to
@@ -835,7 +943,7 @@ def normalize_text(
         F.regexp_replace(
             F.regexp_replace(
                 F.regexp_replace(
-                    _nfc(F.col(text_col)),
+                    composed,
                     "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]",
                     "",
                 ),
@@ -849,7 +957,7 @@ def normalize_text(
     return df.select(
         F.col(id_col),
         cleaned.alias("text_norm"),
-        (cleaned != F.col(text_col)).alias("changed"),
+        (cleaned != text).alias("changed"),
     )
 
 

@@ -10,13 +10,20 @@ Every stage is one of the repo's existing operators; this module only
 sequences them and carries the id/text/source column mapping, so the
 scale properties are the operators' own (bucketed joins, broadcast
 model tables, no windows beyond cluster-sized ones). Every stage
-frame is materialized with an eager ``localCheckpoint()``: the stage
-count reads the checkpoint, later stages plan over a bare RDD scan
-instead of re-analyzing (and re-printing, per SQL execution) the whole
-pipeline above them, AQE still runs each stage's own shuffles, and the
-blocks are freed by the ContextCleaner once the frame is dropped —
-nothing is registered in the session's CacheManager, so there is
-nothing to unpersist.
+frame is materialized with an eager ``localCheckpoint()``: later
+stages plan over a bare RDD scan instead of re-analyzing (and
+re-printing, per SQL execution) the whole pipeline above them, AQE
+still runs each stage's own shuffles, and the blocks are freed by the
+ContextCleaner once the frame is dropped — nothing is registered in
+the session's CacheManager, so there is nothing to unpersist.
+
+The stage count is an ``Observation`` at the top of the checkpointed
+frame, filled by the checkpoint's own job: no job runs only to count.
+The first checkpoint also observes how many texts hold a code point
+Python's ``unicodedata`` reports unassigned, which decides the NFC
+path of :func:`~toshokan_spark.operators.text.normalize_text` without
+a probe job; on text without one, a default pass starts no Python
+worker.
 """
 
 from __future__ import annotations
@@ -24,7 +31,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: internal columns the indexer adds that curation must not see
@@ -40,6 +47,17 @@ def _logical(df: DataFrame) -> DataFrame:
         and not any(c.startswith(p) for p in _INTERNAL_PREFIXES)
     ]
     return df.select(*keep)
+
+
+def _checkpoint(df: DataFrame, **metrics: Column) -> "tuple[DataFrame, dict]":
+    """Eager ``localCheckpoint()`` of *df* and the named aggregates
+    (the row count ``n`` by default) observed on that same job."""
+    obs = Observation()
+    metrics = metrics or {"n": F.count(F.lit(1))}
+    out = df.observe(
+        obs, *[c.alias(k) for k, c in metrics.items()]
+    ).localCheckpoint()
+    return out, obs.get
 
 
 @dataclass
@@ -180,8 +198,14 @@ def curate(
                 ).alias("url")
             )
     # explicit projection — internals never leak
-    raw = full.select(*sel).localCheckpoint()
-    stage("ingested", raw.count())
+    raw, seen = _checkpoint(
+        full.select(*sel),
+        n=F.count(F.lit(1)),
+        unassigned=F.count_if(textops.has_unassigned(F.col("text"))),
+    )
+    stage("ingested", seen["n"])
+    # the gates below only drop rows, so this count bounds theirs
+    unassigned = seen["unassigned"]
 
     # 0. URL front gate (FineWeb/C4): domain blocklist then
     # canonical-URL dedup — whole sites and re-crawled URLs drop
@@ -193,9 +217,9 @@ def curate(
             dom = spark.createDataFrame(
                 [(d,) for d in blocked_domains], "domain string"
             )
-            raw = web.domain_filter(raw, dom, url_col="url",
-                                    mode="block").localCheckpoint()
-            stage("domain_kept", raw.count())
+            raw, seen = _checkpoint(
+                web.domain_filter(raw, dom, url_col="url", mode="block"))
+            stage("domain_kept", seen["n"])
         # null URLs bypass dedup entirely (ADVICE r12): a null
         # canonical_url is "unknown provenance", not "duplicate of
         # every other unknown" — url_dedup's GROUP BY would pool
@@ -208,25 +232,23 @@ def curate(
         keepers = web.url_dedup(with_url).select(
             F.col("keeper_id").alias("doc_id")
         )
-        raw = (
+        raw, seen = _checkpoint(
             with_url.join(keepers, "doc_id", "left_semi")
             .unionByName(without_url)
             .drop("url")
-            .localCheckpoint()
         )
-        stage("url_kept", raw.count())
+        stage("url_kept", seen["n"])
 
     # 1. canonicalize (NFC, control strip, whitespace collapse)
-    norm = textops.normalize_text(raw)
-    docs = raw.drop("text").join(
+    norm = textops.normalize_text(raw, _unassigned=unassigned)
+    docs, seen = _checkpoint(raw.drop("text").join(
         norm.select("doc_id", F.col("text_norm").alias("text")), "doc_id"
-    ).localCheckpoint()
-    stage("canonicalized", docs.count())
+    ))
+    stage("canonicalized", seen["n"])
 
     # 2. exact dedup (min id per content hash)
-    exact = dedup.deduplicate_exact(docs).localCheckpoint()
-    n_exact = exact.count()
-    stage("exact_kept", n_exact)
+    exact, seen = _checkpoint(dedup.deduplicate_exact(docs))
+    stage("exact_kept", seen["n"])
 
     # 3. near-dup clusters over the exact-deduped set — the split
     # stage's leakage fence
@@ -242,15 +264,15 @@ def curate(
         raise ValueError(
             f"dedup_method must be 'jaccard' or 'minhash', got {dedup_method!r}"
         )
-    labels = dedup.duplicate_clusters(pairs).localCheckpoint()
-    stage("near_dup_docs", labels.count())
+    labels, seen = _checkpoint(dedup.duplicate_clusters(pairs))
+    stage("near_dup_docs", seen["n"])
 
     # 4. Gopher quality gate
     flags = textops.gopher_rules(exact)
-    quality = exact.join(
+    quality, seen = _checkpoint(exact.join(
         flags.filter(F.col("passes")).select("doc_id"), "doc_id"
-    ).localCheckpoint()
-    stage("quality_kept", quality.count())
+    ))
+    stage("quality_kept", seen["n"])
 
     # 4b. optional model-based quality filter (classifier gate)
     if quality_model_path is not None:
@@ -258,10 +280,10 @@ def curate(
         gated = textops.hashed_linear_score(
             quality, weights, dim=quality_model_dim
         )
-        quality = quality.join(
+        quality, seen = _checkpoint(quality.join(
             gated.filter(F.col("label")).select("doc_id"), "doc_id"
-        ).localCheckpoint()
-        stage("classifier_kept", quality.count())
+        ))
+        stage("classifier_kept", seen["n"])
 
     # 4b'. self-trained classifier gate (the DCLM loop in one
     # pipeline): positives = the seed query's matches, train the
@@ -298,11 +320,11 @@ def curate(
             if train_quality_threshold is None
             else F.col("prob") >= train_quality_threshold
         )
-        quality = quality.join(
+        quality, seen = _checkpoint(quality.join(
             scored.filter(keep).select("doc_id"),
             "doc_id",
-        ).localCheckpoint()
-        stage("trained_classifier_kept", quality.count())
+        ))
+        stage("trained_classifier_kept", seen["n"])
 
     # 4c. optional rank-fusion ensemble gate (threshold on the
     # fused normalized rank; signals mirror the quality_ensemble
@@ -322,13 +344,13 @@ def curate(
             quality,
             [("len", F.length(t)), ("div", div), ("mwl", -mwl)],
         )
-        quality = quality.join(
+        quality, seen = _checkpoint(quality.join(
             fused.filter(
                 F.col("ensemble") >= ensemble_threshold
             ).select("doc_id"),
             "doc_id",
-        ).localCheckpoint()
-        stage("ensemble_kept", quality.count())
+        ))
+        stage("ensemble_kept", seen["n"])
 
     # 5. CCNet tail thinning (head+middle whole, hash-sampled tail)
     selected = textops.ccnet_select(
@@ -346,20 +368,26 @@ def curate(
         )
         lw = textops.dsir_log_weights(kept, target, dim=dsir_dim)
         kept = kept.join(lw.select("doc_id", "log_weight"), "doc_id")
-    kept = kept.localCheckpoint()
-    stage("ccnet_kept", kept.count())
+    kept, seen = _checkpoint(kept)
+    stage("ccnet_kept", seen["n"])
     if dsir_target_query is not None:
-        stage("dsir_scored", kept.count())
+        # DSIR weights joined before that checkpoint: the same count
+        stage("dsir_scored", seen["n"])
 
-    # 7. leakage-safe split: hash the near-dup CLUSTER id
-    splits = sampling.leakage_safe_split(
-        kept.select("doc_id", "source"), labels, fractions, seed=seed
-    ).localCheckpoint()
-    sizes = {
-        r["split"]: r["n"]
-        for r in splits.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    stage("split_sizes", sizes)
+    # 7. leakage-safe split: hash the near-dup CLUSTER id; one
+    # observed count per split name, empty splits left out
+    fractions = fractions or sampling.DEFAULT_SPLIT_FRACTIONS
+    names = list(fractions)
+    splits, seen = _checkpoint(
+        sampling.leakage_safe_split(
+            kept.select("doc_id", "source"), labels, fractions, seed=seed
+        ),
+        **{f"s{i}": F.count_if(F.col("split") == name)
+           for i, name in enumerate(names)},
+    )
+    stage("split_sizes", {
+        name: seen[f"s{i}"] for i, name in enumerate(names) if seen[f"s{i}"]
+    })
 
     # 8. optional epoch repetition of the train split (data-
     # constrained regime): temperature mixture -> repeat plan ->
@@ -383,11 +411,11 @@ def curate(
         )
         # copies of a doc are distinct training instances for
         # ordering/packing purposes
-        train = train.withColumn(
+        train, seen = _checkpoint(train.withColumn(
             "inst_id",
             F.concat_ws("#", F.col("doc_id").cast("string"), F.col("copy")),
-        ).localCheckpoint()
-        stage("expanded_rows", train.count())
+        ))
+        stage("expanded_rows", seen["n"])
         order_col = "inst_id"
     else:
         order_col = "doc_id"
@@ -413,8 +441,8 @@ def curate(
     packed = sampling.pack_training_sequences(
         train, seq_len=seq_len, order_col=order_col
     )
-    packed = packed.localCheckpoint()
-    stage("packed_rows", packed.count())
+    packed, seen = _checkpoint(packed)
+    stage("packed_rows", seen["n"])
 
     res.documents = kept.join(splits.select("doc_id", "split"), "doc_id") \
         .localCheckpoint()

@@ -198,11 +198,35 @@ def _elements_sql(col_sql: str, tokenizer: str) -> str:
     return f"transform({col_sql}, __e -> {_tok_sql('__e', tokenizer)})"
 
 
+def _stem_positions_sql(stems_sql: str, col_sql: str) -> str:
+    """The stems of an `en_stem` value at their token positions, from
+    its shadow stems column (which drops over-long tokens): each
+    over-long token of the `default` position stream stays ``''`` and
+    every other position takes the next stem, so a phrase never spans
+    an over-long token. Text without one (the common case) reads the
+    shadow column as it is."""
+    pos = _default_positions_sql(col_sql)
+    holders = "filter(sequence(0, size(__p) - 1), __j -> get(__p, __j) = '')"
+    placed = (
+        f"transform(__p, (__x, __i) -> CASE WHEN __x = '' THEN '' ELSE "
+        f"get({stems_sql}, __i - size(filter(__h, __k -> __k < __i))) END)"
+    )
+    return (
+        f"element_at(transform(array({pos}), __p -> "
+        f"CASE WHEN size(__p) = size({stems_sql}) THEN {stems_sql} ELSE "
+        f"element_at(transform(array({holders}), __h -> {placed}), 1) "
+        f"END), 1)"
+    )
+
+
 def _element_positions_sql(col_sql: str, tokenizer: str) -> str:
     """Per-element token streams of an array column for positional
-    matching: `default` elements keep their positions."""
+    matching: `default` and `en_stem` elements keep their positions."""
     if tokenizer == "default":
         return f"transform({col_sql}, __e -> {_default_positions_sql('__e')})"
+    if tokenizer == "en_stem":
+        return (f"toshokan_en_stem_elements(transform({col_sql}, "
+                f"__e -> {_default_positions_sql('__e')}))")
     return _elements_sql(col_sql, tokenizer)
 
 
@@ -582,6 +606,27 @@ class QueryCompiler:
             return f"array_contains({t.tokens}, {_s(toks[0])})"
         return self._adjacency(t, toks)
 
+    def _positions(self, t: _SqlTarget) -> str:
+        """The analyzed token stream of a scalar text target with its
+        positions: an over-long (unindexed) token of a `default` or
+        `en_stem` value keeps its place as ``''``."""
+        if t.tokenizer == "default":
+            return _default_positions_sql(t.col)
+        if t.tokenizer == "en_stem":
+            if _is_column(t.tokens):
+                return _stem_positions_sql(t.tokens, t.col)
+            return f"toshokan_en_stem({_default_positions_sql(t.col)})"
+        return t.tokens
+
+    def _guarded(self, t: _SqlTarget, words: list, fold: str) -> str:
+        """*fold* behind the stored tokens' containment test of every
+        word, which rules out most rows before any split."""
+        if not words or not _is_column(t.tokens):
+            return fold
+        guard = " AND ".join(
+            f"array_contains({t.tokens}, {_s(w)})" for w in words)
+        return f"{guard} AND {fold}"
+
     def _adjacency(self, t: _SqlTarget, words: list,
                    slop: int = 0) -> str:
         """Phrase semantics: analyzed words adjacent (or within
@@ -598,8 +643,9 @@ class QueryCompiler:
           the raw text can miss "connections terminating" for
           "connection terminate"), for whitespace tokens (they keep
           case and punctuation) and for any nonzero slop. It runs over
-          `default` tokens with their positions, and per element of a
-          text array: the flattened array loses element boundaries."""
+          the tokens with their positions (:meth:`_positions`), and per
+          element of a text array: the flattened array loses element
+          boundaries."""
         if slop == 0 and (t.tokenizer == "default" or t.kind == "dynamic"):
             pat = (
                 f"(^|{_NON_ALNUM_RE})"
@@ -613,16 +659,10 @@ class QueryCompiler:
         if t.kind == "text" and t.array:
             return (f"exists({_element_positions_sql(t.col, t.tokenizer)}, "
                     f"__el -> {_token_seq_match_sql('__el', words, slop)})")
-        if t.tokenizer != "default":
+        if t.tokenizer == "whitespace":
             return _token_seq_match_sql(t.tokens, words, slop)
-        fold = _token_seq_match_sql(
-            _default_positions_sql(t.col), words, slop)
-        if not _is_column(t.tokens):
-            return fold
-        # the stored tokens rule out most rows before any split
-        guard = " AND ".join(
-            f"array_contains({t.tokens}, {_s(w)})" for w in words)
-        return f"{guard} AND {fold}"
+        return self._guarded(t, words, _token_seq_match_sql(
+            self._positions(t), words, slop))
 
     def _render_term(self, node: Term) -> str:
         if node.field is None:
@@ -716,11 +756,14 @@ class QueryCompiler:
         the LAST matched as a prefix. Leading words analyze with the
         field's tokenizer; the prefix is case-folded only, never
         stemmed (the Lucene rule — a stemmed prefix would double-stem
-        against stemmed index tokens). Word-boundary regex WITHOUT the
-        trailing boundary for non-stemmed scalars, the positional
-        prefix chain for stemmed fields and arrays, startswith for raw
-        fields (the whole value is one token). Unqualified, it fans
-        out over the indexed text fields."""
+        against stemmed index tokens); on a whitespace field it keeps
+        its case, like the field's tokens. The positional prefix chain
+        over the tokens with their positions (an over-long token keeps
+        its place and starts with no prefix), per element of an array;
+        a word-boundary regex WITHOUT the trailing boundary over
+        `_dynamic` values; startswith for raw fields (the whole value
+        is one token). Unqualified, it fans out over the indexed text
+        fields."""
         if node.field is None:
             return _any([
                 f"coalesce(({self._render_phrase_prefix(PhrasePrefix((f.name,), node.text))}), false)"
@@ -738,14 +781,15 @@ class QueryCompiler:
         raw_words = [w for w in node.text.split() if w]
         if not raw_words:
             return "false"
+        ws = t.kind == "text" and t.tokenizer == "whitespace"
         lead = analyze_term(" ".join(raw_words[:-1]), t.tokenizer)
-        pfx_toks = analyze_term(raw_words[-1], "default")
+        pfx_toks = analyze_term(raw_words[-1],
+                                "whitespace" if ws else "default")
         if not pfx_toks:
             return "false"
         prefix = pfx_toks[-1]
         lead = lead + pfx_toks[:-1]
-        stemmed = t.tokenizer == "en_stem"
-        if not stemmed and not (t.kind == "text" and t.array):
+        if t.kind == "dynamic" and t.tokenizer != "en_stem":
             words = lead + [prefix]
             pat = (
                 f"(^|{_NON_ALNUM_RE})"
@@ -757,8 +801,8 @@ class QueryCompiler:
             body = _token_seq_prefix_match_sql("__el", lead, prefix)
             return (f"coalesce(exists({_element_positions_sql(t.col, t.tokenizer)}, "
                     f"__el -> {body}), false)")
-        return (f"coalesce(({_token_seq_prefix_match_sql(t.tokens, lead, prefix)}), "
-                f"false)")
+        chain = _token_seq_prefix_match_sql(self._positions(t), lead, prefix)
+        return f"coalesce(({self._guarded(t, lead, chain)}), false)"
 
     def _analyzed_probe(self, t: _SqlTarget, text: str) -> str:
         """Normalize a prefix/fuzzy probe the way the field's index
