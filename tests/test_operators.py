@@ -3406,8 +3406,9 @@ def test_manifest_stats_old_manifest_falls_back(spark, _stats_index):
 
 
 def test_manifest_stats_survives_merge(spark, _stats_index):
-    """Compaction combines the additive stats exactly — counts add,
-    decimal sums add — so the panel is unchanged across a merge."""
+    """A merge re-observes the additive stats from its own rows —
+    the counts and decimal sums of the inputs' rows — so the panel is
+    unchanged across a merge."""
     from toshokan_spark.maintenance import merge_segments
     from toshokan_spark.search import manifest_stats
 
@@ -3959,6 +3960,55 @@ def test_swap_never_clears_tombstones_past_uncovered_segments(spark, _stats_inde
     assert [x.id for x in cat.deletes("mstats")] == [d.id]  # still pending
 
 
+def test_stale_swap_is_refused(tmp_path):
+    """Two merges from one snapshot both swap out the same segments:
+    the second finds them gone and must refuse, or the manifest would
+    hold both outputs and show every row twice."""
+    from toshokan_spark.catalog import CatalogError, FsCatalog, SegmentEntry
+    from toshokan_spark.config import FieldConfig, IndexConfig
+
+    cat = FsCatalog(str(tmp_path / "cat"))
+    cat.create_index(IndexConfig(
+        name="swap", path=str(tmp_path / "data"),
+        fields=[FieldConfig(name="id", type="number")]))
+
+    def seg(sid, n):
+        return SegmentEntry(id=sid, file_name=f"seg-{sid}", num_rows=n,
+                            created_at_ms=0)
+
+    cat.commit_segment("swap", seg("a", 5))
+    cat.commit_segment("swap", seg("b", 5))
+    cat.swap_segments("swap", ["a", "b"], seg("x", 10))
+    with pytest.raises(CatalogError, match="no longer manifested"):
+        cat.swap_segments("swap", ["a", "b"], seg("y", 10))
+    assert [(s.id, s.num_rows) for s in cat.segments("swap")] == [("x", 10)]
+
+
+def test_merge_losing_the_swap_deletes_its_output(spark, _stats_index, monkeypatch):
+    """A merge whose swap is refused (a concurrent merge already
+    replaced its inputs) deletes the segment it built: no
+    unmanifested data is left behind, and the inputs stay as they
+    were."""
+    import os
+
+    from toshokan_spark.catalog import CatalogError
+    from toshokan_spark.maintenance import merge_segments
+
+    cat, cfg = _stats_index
+    before = cat.segments("mstats")
+
+    def refused(*_args, **_kwargs):
+        raise CatalogError("segments are no longer manifested")
+
+    monkeypatch.setattr(cat, "swap_segments", refused)
+    with pytest.raises(CatalogError, match="no longer manifested"):
+        merge_segments(spark, cat, "mstats")
+    monkeypatch.undo()
+    assert cat.segments("mstats") == before
+    on_disk = sorted(n for n in os.listdir(cfg.path) if n.startswith("seg-"))
+    assert on_disk == sorted(s.file_name for s in before)
+
+
 def test_query_on_alter_added_field_matches_nothing(spark, _stats_index):
     """A field appended by alter, before any new-schema segment
     exists, compiles to a typed NULL: predicates on it match nothing
@@ -4249,8 +4299,9 @@ def test_manifest_histogram_width_mismatch_and_deletes_fall_back(
 def test_manifest_histogram_merge_combines_bins_additively(
     spark, _hist_index
 ):
-    """A plain (no-delete) merge adds bin counts across inputs —
-    the panel is unchanged across compaction."""
+    """A plain (no-delete) merge re-counts the bins over its own
+    rows, which are the inputs' rows — the panel is unchanged across
+    compaction."""
     from toshokan_spark.maintenance import merge_segments
     from toshokan_spark.search import manifest_histogram
 

@@ -426,7 +426,7 @@ def test_zone_map_pruning_on_number_fields(spark, catalog, tmp_path):
         for d in search(spark, catalog, "zm", "tenant_id:>107", limit=10)
     ] == [108, 109]
 
-    # merge combines zone maps exactly (min of mins, max of maxes)
+    # a merge re-observes its zone maps from the merged rows
     merge_segments(spark, catalog, "zm")
     (merged,) = catalog.segments("zm")
     assert merged.field_stats["tenant_id"] == [0, 109]
@@ -630,14 +630,13 @@ def test_token_bloom_pruning_on_tokenized_text(spark, catalog, tmp_path):
     got = search(spark, catalog, "blm", "body:alpha", limit=10)
     assert len(got) == 2
 
-    # merge unions same-geometry blooms without rereading data
+    # a merge folds its blooms from the merged data, like a commit
     merge_segments(spark, catalog, "blm")
     (merged,) = catalog.segments("blm")
-    if merged.token_blooms:  # same geometry -> OR'd bloom carried over
-        from toshokan_spark.functions.bloom import bloom_might_contain
-        bl = merged.token_blooms["body"]
-        assert bloom_might_contain(bl, "alpha") and bloom_might_contain(bl, "omega")
-        assert not bloom_might_contain(bl, "nosuchtoken")
+    from toshokan_spark.functions.bloom import bloom_might_contain
+    bl = merged.token_blooms["body"]
+    assert bloom_might_contain(bl, "alpha") and bloom_might_contain(bl, "omega")
+    assert not bloom_might_contain(bl, "nosuchtoken")
     assert len(search(spark, catalog, "blm", "body:omega", limit=10)) == 1
 
 

@@ -495,6 +495,30 @@ def test_phrases_keep_over_long_token_positions(spark, shadow):
             assert got == want, (field, q, got)
 
 
+def test_dynamic_phrase_prefix_never_matches_over_long_token(spark):
+    """A phrase prefix over ``_dynamic`` values runs the positional
+    chain of a ``default`` text field: the prefix never matches the
+    start of an over-long (>40-byte) token, which is not indexed."""
+    cfg = IndexConfig(
+        name="dyn", path="",
+        fields=[FieldConfig(name="id", type="number", number_type="i64"),
+                FieldConfig(name="d", type="text")])
+    long = "x" * 41
+    df = spark.createDataFrame(
+        [(1, f"hello {long}", {"extra": f'"hello {long}"'}),
+         (2, "hello xy", {"extra": '"hello xy"'}),
+         (3, "Hello, X-ray", {"extra": '"Hello, X-ray"'}),
+         (4, None, None)],
+        "id long, d string, _dynamic map<string,string>")
+    for q, want in (('"hello x"*', [2, 3]), ('x*', [2, 3]),
+                    ('"hello"*', [1, 2, 3]), ('"xy hello"*', [])):
+        for field in ("d", "extra"):
+            c = F.coalesce(compile_query(f"{field}:{q}", cfg, set(df.columns)),
+                           F.lit(False))
+            got = sorted(r.id for r in df.filter(c).collect())
+            assert got == want, (field, q, got)
+
+
 def test_render_raises_on_syntax_error():
     from toshokan_spark.query_sql import render_query_sql
 

@@ -1,11 +1,12 @@
-"""Commit-time segment description in one grouped pass.
+"""Segment description in one grouped pass.
 
-Every committed segment is described by its BM25 stats sidecar (one
-``groupBy(field, term)`` over all scalar text fields) and its token
-blooms (scalar fields observed during the sidecar write, array fields
-by one aggregate). The reference implementations below are the
-per-field formulations those replaced; the sidecar rows and every
-bloom must equal theirs."""
+Every segment, committed or merged, is described by its BM25 stats
+sidecar (one ``groupBy(field, term)`` over all scalar text fields)
+and its token blooms (scalar fields observed during the sidecar
+write, array fields by one aggregate). The reference implementations
+below are the per-field formulations those replaced; the sidecar rows
+and every bloom must equal theirs, and a merge must describe its
+output exactly as a commit of the same rows would."""
 
 import base64
 import json
@@ -74,12 +75,12 @@ def _lines(spark, shape, batch, n=40):
 #: the histogram field's aggregate stage and collect. The per-field
 #: formulation ran 17.
 WRITE_SEGMENT_JOBS = 6
-#: jobs a two-segment merge runs on either shape: the data write, the
-#: schema read and the stats sidecar's two; blooms are OR'd from the
-#: inputs. The per-field formulation ran 10 on the events shape (its
-#: write sat behind a day-directory repartition) and 9 on the
-#: documents shape.
-MERGE_JOBS = {"events": 4, "documents": 4}
+#: jobs a two-segment merge runs on either shape: the merge builds its
+#: segment through the commit's path (indexer.build_segment), so it
+#: runs the same jobs. Combining the inputs' blooms and histograms
+#: instead saved the histogram's two, at the cost of a second,
+#: merge-only describe path.
+MERGE_JOBS = WRITE_SEGMENT_JOBS
 
 
 @pytest.mark.parametrize("shape", ["events", "documents"])
@@ -102,7 +103,7 @@ def test_commit_and_merge_job_budgets(spark, tmp_path, shape):
     assert len(segs) == 2 and all(text in s.token_blooms for s in segs)
     assert _count_jobs(
         spark, lambda: merge_segments(spark, catalog, shape)
-    ) == MERGE_JOBS[shape]
+    ) == MERGE_JOBS
     (merged,) = catalog.segments(shape)
     assert merged.num_rows == 80 and text in merged.token_blooms
 
@@ -190,10 +191,11 @@ EDGE_BATCHES = [
 ]
 
 
-def _index_edge(spark, catalog, tmp_path, name, batches):
+def _index_edge(spark, catalog, tmp_path, name, batches, **config):
     from toshokan_spark.indexer import index_batch
 
-    cfg = IndexConfig(name=name, path=str(tmp_path / "data" / name), fields=list(EDGE_FIELDS))
+    cfg = IndexConfig(name=name, path=str(tmp_path / "data" / name),
+                      **{"fields": list(EDGE_FIELDS), **config})
     create_index(catalog, cfg)
     for i, rows in enumerate(batches):
         p = tmp_path / f"{name}-{i}.jsonl"
@@ -230,7 +232,6 @@ def _assert_sidecar_matches_reference(spark, cfg, seg):
 
 def test_sidecar_rows_and_blooms_equal_per_field_reference(spark, tmp_path):
     from toshokan_spark.catalog import FsCatalog
-    from toshokan_spark.functions.bloom import merge_blooms
 
     catalog = FsCatalog(str(tmp_path / "catalog"))
     cfg = _index_edge(spark, catalog, tmp_path, "edge", EDGE_BATCHES)
@@ -242,10 +243,47 @@ def test_sidecar_rows_and_blooms_equal_per_field_reference(spark, tmp_path):
     assert set(segs[0].token_blooms) == {"body", "ws", "stem", "tags", "notes"}
 
     merged = merge_segments(spark, catalog, "edge")
-    _assert_sidecar_matches_reference(spark, cfg, merged)
-    # a merge ORs same-geometry input blooms and drops the others
-    want = {n: merge_blooms([s.token_blooms[n] for s in segs]) for n in segs[0].token_blooms}
-    assert merged.token_blooms == {n: b for n, b in want.items() if b is not None}
+    written = _assert_sidecar_matches_reference(spark, cfg, merged)
+    # a merge folds its blooms from the merged data, like a commit
+    assert merged.token_blooms == _reference_blooms(cfg, written)
+    assert set(merged.token_blooms) == {"body", "ws", "stem", "tags", "notes"}
+
+
+#: the manifest fields that describe a segment's content
+DESCRIBE_FIELDS = ("num_rows", "min_day", "max_day", "field_stats", "field_sums",
+                   "field_histograms", "token_blooms", "schema")
+
+
+@pytest.mark.parametrize("delete", [False, True])
+def test_merge_describes_like_a_commit_of_the_survivors(spark, tmp_path, delete):
+    """The merged entry's description equals that of a write_segment
+    of the rows the merge keeps, with and without a pending delete."""
+    from toshokan_spark.catalog import FsCatalog
+    from toshokan_spark.search import read_segments
+
+    catalog = FsCatalog(str(tmp_path / "catalog"))
+    fields = [FieldConfig(name="id", type="number", histogram_bin=2),
+              FieldConfig(name="ts", type="datetime"), *EDGE_FIELDS[1:]]
+    batches = [[{**r, "ts": f"2024-01-0{r['id'] % 3 + 1}T0{r['id']}:00:00Z"} for r in b]
+               for b in EDGE_BATCHES]
+    cfg = _index_edge(spark, catalog, tmp_path, "edge", batches,
+                      fields=fields, time_field="ts")
+    segs = catalog.segments("edge")
+    rows = read_segments(spark, [join_path(cfg.path, s.file_name) for s in segs],
+                         schemas=[s.schema for s in segs])
+    if delete:
+        catalog.add_delete("edge", "id:4 OR id:6")
+        rows = rows.filter(~F.col("id").isin(4, 6))
+    ref_cfg = IndexConfig(name="ref", path=str(tmp_path / "data" / "ref"),
+                          fields=fields, time_field="ts")
+    create_index(catalog, ref_cfg)
+    ref = write_segment(catalog, ref_cfg, rows)
+
+    merged = merge_segments(spark, catalog, "edge")
+    assert merged.num_rows == (5 if delete else 7)
+    assert merged.field_histograms and merged.min_day and merged.token_blooms
+    assert ({k: getattr(merged, k) for k in DESCRIBE_FIELDS}
+            == {k: getattr(ref, k) for k in DESCRIBE_FIELDS})
 
 
 def test_vocabulary_over_cap_records_no_bloom(spark, tmp_path, monkeypatch):

@@ -174,13 +174,13 @@ class SegmentEntry:
     #: match-all queries: at 10k segments over 100 TB that is one JSON
     #: read and zero data scans. Sums are decimal(38,6) folds
     #: serialized as strings so the JSON round-trip is exact; they
-    #: combine across segments (and merges) by plain Decimal addition,
-    #: order-free. None = old manifest, fall back to scanning.
+    #: combine across segments by plain Decimal addition, order-free.
+    #: None = old manifest, fall back to scanning.
     field_sums: Optional[dict] = None
     #: per-configured-NUMBER-field fixed-width histogram recorded at
     #: write time (``{"value": {"w": 50.0, "bins": {"0.0": 12, ...}}}``
     #: — bin keys are repr(float) of the floor(v/w)*w lower bound,
-    #: counts exact ints). Additive across segments and merges like
+    #: counts exact ints). Additive across segments like
     #: ``field_sums``; a match-all numeric-histogram panel at the
     #: recorded width is then a MANIFEST-ONLY read. None = field not
     #: configured (``FieldConfig.histogram_bin``) or old manifest.
@@ -664,9 +664,20 @@ class FsCatalog:
         + retry like commit_segment. ``clear_delete_ids`` drops the
         tombstones the merge MATERIALIZED in the same atomic write —
         deletes recorded after the merge read its snapshot survive the
-        swap and stay pending (the CAS re-read preserves them)."""
+        swap and stay pending (the CAS re-read preserves them).
+
+        Raises :class:`CatalogError` when any of ``remove_ids`` is no
+        longer manifested: another merge from the same snapshot already
+        replaced it, and adding this output too would show its rows
+        twice."""
         for _ in range(self.CAS_RETRIES):
             ver, segs, dels = self._read_versioned_full(name)
+            missing = set(remove_ids) - {s.id for s in segs}
+            if missing:
+                raise CatalogError(
+                    f"swap on {name!r}: segments {sorted(missing)} are no "
+                    f"longer manifested (a concurrent merge replaced them)"
+                )
             out = [s for s in segs if s.id not in set(remove_ids)]
             if add is not None:
                 # a list swaps several in atomically (the cluster-by

@@ -34,9 +34,8 @@ Design points:
   words) is provably absent. OR branches prune only via tokens
   required by every branch; ``must_not`` never prunes.
 
-Merge: two blooms with identical geometry union by bitwise OR (no
-data reread); mismatched geometries drop the merged bloom rather
-than rebuild (conservative, and compaction already rewrites data).
+Merge: a merged segment is built like a commit, so its blooms are
+folded from its own distinct tokens, sized to the merged vocabulary.
 """
 
 from __future__ import annotations
@@ -166,21 +165,6 @@ def bloom_might_contain(bloom: dict, token: str) -> bool:
     """Driver-side single-token probe (tests / ad-hoc); the pruning
     loop uses :func:`bloom_absent_any`."""
     return not bloom_absent_any(bloom, [token])
-
-
-def merge_blooms(blooms: list[dict | None]) -> dict | None:
-    """Union of same-geometry blooms by bitwise OR; None when any
-    input lacks a bloom or geometries differ (conservative)."""
-    if not blooms or any(b is None for b in blooms):
-        return None
-    m, k = blooms[0]["m"], blooms[0]["k"]
-    if any(b["m"] != m or b["k"] != k for b in blooms):
-        return None
-    acc = bytearray(base64.b64decode(blooms[0]["b64"]))
-    for b in blooms[1:]:
-        for i, byte in enumerate(base64.b64decode(b["b64"])):
-            acc[i] |= byte
-    return {"m": m, "k": k, "b64": base64.b64encode(bytes(acc)).decode()}
 
 
 def required_term_tokens(node, field: str, tokenizer: str) -> set[str]:

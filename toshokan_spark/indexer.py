@@ -11,8 +11,8 @@ memory management.
 
 Scale notes (100 TB):
 * the write is a single narrow stage (parse -> coerce -> write) into
-  one flat directory per segment, ``seg-X/part-*.parquet``; no
-  shuffle unless ``target_files`` asks for a file count. Time pruning
+  one flat directory per segment, ``seg-X/part-*.parquet``, one file
+  per input partition (callers shape partitions first). Time pruning
   needs no directory layout: the manifest records each segment's day
   range and time zone map, and rows are sorted by the time field
   inside each file, so parquet row-group min/max skip within a file;
@@ -48,42 +48,11 @@ def text_stat_fields(config: IndexConfig) -> list[tuple[str, str]]:
     ]
 
 
-def zone_map_cols(
-    config: IndexConfig, columns: set
-) -> list[tuple[str, str]]:
-    """(field_name, source_column) pairs eligible for zone maps —
-    shared by the commit-time observed write (here) and the merge's
-    survivor re-observation (maintenance.merge_segments): scalar
-    NUMBER and raw-tokenizer TEXT fields as themselves, IP fields
-    through their order-preserving ``__ipkey__`` shadow, plus the
-    sub-day time-field epoch map."""
-    from toshokan_spark.ingest import ipkey_col
-
-    stat_cols: list[tuple[str, str]] = []
-    for f in config.fields:
-        if f.array:
-            continue
-        if f.type == "number" and f.name in columns:
-            stat_cols.append((f.name, f.name))
-        elif f.type == "text" and f.tokenizer == "raw" and f.name in columns:
-            stat_cols.append((f.name, f.name))
-        elif f.type == "ip" and ipkey_col(f.name) in columns:
-            stat_cols.append((f.name, ipkey_col(f.name)))
-    if config.time_field and config.time_field in columns:
-        # SUB-DAY time zone map (epoch micros): the day range prunes
-        # at day granularity, but a streaming index commits many
-        # segments per day — a five-minute query should drop the other
-        # micro-batches of the same day at the manifest too
-        stat_cols.append((config.time_field, config.time_field))
-    return stat_cols
-
-
 def plain_stat_value(v):
     """Manifest-JSON form of an observed zone-map bound: u64 columns
     are decimal(20,0) — Decimal is not JSON-serializable and int keeps
     the full range exactly; timestamps (naive UTC under the session
-    timezone) become epoch MICROS — exact, ordered, and
-    min/max-combinable at merge."""
+    timezone) become epoch MICROS — exact and ordered."""
     from datetime import datetime, timezone
     from decimal import Decimal
 
@@ -151,7 +120,6 @@ def index_batch(
     index_name: str,
     jsonl_path: Optional[str] = None,
     lines: Optional[DataFrame] = None,
-    target_files: Optional[int] = None,
 ) -> Optional[SegmentEntry]:
     """Ingest one batch into a new segment; returns the manifest entry
     (None for an empty batch)."""
@@ -161,14 +129,13 @@ def index_batch(
             raise ValueError("need jsonl_path or lines")
         lines = spark.read.text(jsonl_path)
     typed = ingest_projection(lines, config)
-    return write_segment(catalog, config, typed, target_files=target_files)
+    return write_segment(catalog, config, typed)
 
 
 def write_segment(
     catalog: FsCatalog,
     config: IndexConfig,
     typed: DataFrame,
-    target_files: Optional[int] = None,
     batch_id: Optional[str] = None,
 ) -> Optional[SegmentEntry]:
     if batch_id is not None and catalog.has_batch(config.name, batch_id):
@@ -177,9 +144,7 @@ def write_segment(
         # the exactly-once upgrade over the reference's at-least-once
         # contract (`kafka_source.rs:380-394`, SURVEY §2.7)
         return None
-    built = build_segment(
-        catalog, config, typed, target_files=target_files, batch_id=batch_id
-    )
+    built = build_segment(catalog, config, typed, batch_id=batch_id)
     if built is None:
         return None
     entry, seg_path, seg_name = built
@@ -196,16 +161,17 @@ def build_segment(
     catalog: FsCatalog,
     config: IndexConfig,
     typed: DataFrame,
-    target_files: Optional[int] = None,
     batch_id: Optional[str] = None,
 ) -> "Optional[tuple[SegmentEntry, str, str]]":
-    """Write a new segment's data + stats and DESCRIBE it (zone maps,
-    day range, additive sums, histograms, BM25 stats, token blooms)
-    WITHOUT manifesting it — returns ``(entry, seg_path, seg_name)``,
-    or None for an empty batch (the data is cleaned up). Callers pick
-    the commit: :func:`write_segment` appends via ``commit_segment``;
-    the cluster-by compaction (`maintenance.cluster_merge_segments`)
-    builds several and swaps them in atomically."""
+    """Write a new segment's data + stats and DESCRIBE it (row count,
+    day range, zone maps, additive sums, histograms, BM25 stats, token
+    blooms, schema) WITHOUT manifesting it — returns ``(entry,
+    seg_path, seg_name)``, or None for an empty batch (the data is
+    cleaned up). Every segment is written and described here: commits,
+    merges and range-clustered merges alike, one file per partition of
+    *typed*. Callers pick the commit: :func:`write_segment` appends via
+    ``commit_segment``; the merges (`maintenance._rewrite`) swap their
+    output in for the segments they read."""
     seg_id = uuid7()
     seg_name = f"seg-{seg_id}"
     # scheme-preserving join: the same URI drives the Spark write
@@ -217,8 +183,6 @@ def build_segment(
     # never read — SURVEY §1.1) is live here: the day range observed
     # below prunes whole segments at the manifest
     timed = bool(config.time_field) and config.time_field in df.columns
-    if target_files:
-        df = df.repartition(target_files)
     if timed:
         # cluster rows by time WITHIN each task's output file (no
         # extra shuffle): parquet records per-row-group min/max for
@@ -242,7 +206,24 @@ def build_segment(
     # exact space the compiled predicate compares in.
     from pyspark.sql import Observation
 
-    stat_cols = zone_map_cols(config, set(df.columns))
+    from toshokan_spark.ingest import ipkey_col
+
+    stat_cols: list[tuple[str, str]] = []
+    for f in config.fields:
+        if f.array:
+            continue
+        if f.type == "number" and f.name in df.columns:
+            stat_cols.append((f.name, f.name))
+        elif f.type == "text" and f.tokenizer == "raw" and f.name in df.columns:
+            stat_cols.append((f.name, f.name))
+        elif f.type == "ip" and ipkey_col(f.name) in df.columns:
+            stat_cols.append((f.name, ipkey_col(f.name)))
+    if timed:
+        # SUB-DAY time zone map (epoch micros): the day range prunes
+        # at day granularity, but a streaming index commits many
+        # segments per day — a five-minute query should drop the other
+        # micro-batches of the same day at the manifest too
+        stat_cols.append((config.time_field, config.time_field))
     aggs = [F.count(F.lit(1)).alias("__n")]
     if timed:
         tcol = F.col(config.time_field)
@@ -304,7 +285,7 @@ def build_segment(
 
     # fixed-width histogram stats for configured number fields — the
     # distribution twin of field_sums (manifest-only match-all
-    # histogram panels); exact counts, additive across merges
+    # histogram panels); exact counts, additive across segments
     field_histograms = compute_field_histograms(config, written)
 
     # token Bloom filters for TOKENIZED text fields — the term-query
@@ -355,7 +336,7 @@ def compute_field_histograms(config, df) -> "dict | None":
     distribution stats (`catalog.SegmentEntry.field_histograms`).
 
     One bucket-count-sized groupBy+collect per configured field at
-    commit/merge time (two Spark jobs each); the
+    segment build time (two Spark jobs each); the
     bucket expression is byte-identical to
     ``search.histogram_agg``'s, so the manifest-served panel is
     value-identical to the scan-served one by construction. Bin keys

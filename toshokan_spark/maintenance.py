@@ -10,9 +10,14 @@ Reference parity:
   them all, rewrites as ONE segment, atomically swaps manifest rows,
   best-effort deletes old data (`merge.rs:19-73`)
 
-Compaction on Spark is read -> coalesce -> write; there is no shuffle
-(coalesce narrows partitions) and query answers are invariant under it
-(asserted by tests, mirroring `tests/merge.rs:54-97`).
+Compaction on Spark is read -> drop deleted rows -> coalesce ->
+``indexer.build_segment``; there is no shuffle (coalesce narrows
+partitions) and query answers are invariant under it (asserted by
+tests, mirroring `tests/merge.rs:54-97`). A merged segment is written
+and described by the same code as a committed one: its manifest entry
+is observed from its own rows, never combined from the inputs'.
+Plain and range-clustered merges share one rewrite, swap and cleanup
+path (:func:`_rewrite`).
 """
 
 from __future__ import annotations
@@ -23,7 +28,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from toshokan_spark.catalog import FsCatalog, SegmentEntry, uuid7
+from toshokan_spark.catalog import FsCatalog, SegmentEntry
 from toshokan_spark.config import IndexConfig
 from toshokan_spark.storage import join_path
 
@@ -50,12 +55,19 @@ def merge_segments(
     spark: SparkSession,
     catalog: FsCatalog,
     index_name: str,
-    rows_per_file: int = DEFAULT_ROWS_PER_FILE,
     max_segments: int | None = None,
 ) -> SegmentEntry | None:
     """Compact manifested segments into one (``None`` when pending
     deletes wiped every covered row — the merge then materializes as
     pure segment removal).
+
+    The merge reads the chosen segments, drops the rows pending
+    deletes match (the merge IS the physical delete), coalesces to
+    ``ceil(rows / DEFAULT_ROWS_PER_FILE)`` files and builds the result
+    through :func:`indexer.build_segment`, like a commit: the output
+    is re-described from its own rows (row count, day range, zone
+    maps, sums, histograms, BM25 stats, token blooms, schema), never
+    combined from the inputs' metadata.
 
     ``max_segments`` enables size-tiered compaction: only the N
     smallest segments merge (the reference always merges everything,
@@ -81,242 +93,66 @@ def merge_segments(
             raise MergeError("max_segments must be >= 2")
         segs = sorted(segs, key=lambda s: (s.num_rows, s.id))[:max_segments]
     config = catalog.get_index(index_name)
-    paths = [join_path(config.path, s.file_name) for s in segs]
+    df = _survivors(spark, config, segs, deletes)
+    nfiles = max(1, math.ceil(sum(s.num_rows for s in segs) / DEFAULT_ROWS_PER_FILE))
+    entries = _rewrite(catalog, config, all_segs, deletes, segs, [df.coalesce(nfiles)])
+    return entries[0] if entries else None
 
-    from toshokan_spark.search import read_segments
 
-    df = read_segments(spark, paths, schemas=[s.schema for s in segs])
-    # materialize pending delete tombstones while rewriting (the merge
-    # IS the physical delete): survivors only. Tombstones clear from
-    # the manifest ONLY when this merge covered every segment — a
-    # tiered (partial) merge applies the filter to what it rewrites
-    # but leaves the tombstone pending for the untouched segments
-    # (predicate filtering is idempotent, so re-application is safe).
+def _paths(config: IndexConfig, segs) -> "list[str]":
+    return [join_path(config.path, s.file_name) for s in segs]
+
+
+def _survivors(spark, config: IndexConfig, segs, deletes):
+    """The rows of *segs* that no pending delete matches, read in one
+    scan (the rewrite IS the physical delete)."""
+    from toshokan_spark.search import apply_deletes, read_segments
+
+    df = read_segments(spark, _paths(config, segs), schemas=[s.schema for s in segs])
+    if not deletes:
+        return df
+    return df.filter(apply_deletes(F.lit(True), config, set(df.columns), deletes))
+
+
+def _rewrite(catalog, config, all_segs, deletes, segs, frames) -> "list[SegmentEntry]":
+    """Replace *segs* (chosen from the snapshot's *all_segs*) with one
+    segment per non-empty frame of *frames*, each built by
+    :func:`indexer.build_segment`, in ONE atomic ``swap_segments``
+    (`merge.rs:63-66`). The snapshot's *deletes*, which the frames
+    already filtered out, clear in the same write only when the
+    rewrite covered every segment: a tiered (partial) merge leaves
+    them pending for the untouched segments (predicate filtering is
+    idempotent, so re-application is safe), and the swap re-checks
+    coverage against concurrent commits. On any failure the built,
+    unmanifested output is deleted; after the swap the old data is
+    deleted best effort (leaks tolerated, `merge.rs:68-71`)."""
+    from toshokan_spark.indexer import build_segment, stats_path
+
     covers_all = {s.id for s in segs} == {s.id for s in all_segs}
-    n_obs = None
-    sum_fields: list = []
-    if deletes:
-        from pyspark.sql import Observation
-
-        from toshokan_spark.search import apply_deletes
-
-        pred = apply_deletes(
-            F.lit(True), config, set(df.columns), deletes
-        )
-        df = df.filter(pred)
-        n_obs = Observation(f"merge_rows_{index_name}")
-        # the SURVIVORS are flowing through this write anyway — ride
-        # the same observed pass to re-record the additive stats
-        # ([non-null count, decimal(38,6)-exact sum], exactly the
-        # shape indexer.write_segment records) so the manifest-stats
-        # fast path survives a GDPR delete + ONE merge instead of
-        # falling back to scans until a second, delete-free merge.
-        sum_fields = [
-            f.name
-            for f in config.fields
-            if f.type == "number" and not f.array and f.name in df.columns
-        ]
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for name in sum_fields:
-            aggs += [
-                F.count(F.col(name)).alias(f"__cnt_{name}"),
-                F.sum(F.col(name).cast("decimal(38,6)")).alias(
-                    f"__sum_{name}"
-                ),
-            ]
-        # survivor zone maps too (same eligible set as
-        # indexer.write_segment): the input-combined maps bound the
-        # PRE-delete values, and manifest_stats serves min/max as
-        # ANSWERS, not just prune bounds — they must be exact again.
-        from toshokan_spark.indexer import zone_map_cols
-
-        for name, src in zone_map_cols(config, set(df.columns)):
-            aggs += [
-                F.min(src).alias(f"__lo_{name}"),
-                F.max(src).alias(f"__hi_{name}"),
-            ]
-        df = df.observe(n_obs, *aggs)
-    total = sum(s.num_rows for s in segs)
-    nfiles = max(1, math.ceil(total / rows_per_file))
-
-    seg_id = uuid7()
-    seg_name = f"seg-{seg_id}"
-    seg_path = join_path(config.path, seg_name)
-    out = df.coalesce(nfiles)
-    if config.time_field and config.time_field in df.columns:
-        # the within-file time sort survives compaction (same
-        # row-group-skipping rationale as the segment write,
-        # indexer.py) — without it a merge would silently degrade
-        # time-range scans over merged segments
-        out = out.sortWithinPartitions(config.time_field)
-    out.write.mode("error").parquet(seg_path)
-
-    obs_row = None
-    if n_obs is not None:
-        # the write already ran (stats recompute below reads it back);
-        # the observation holds the SURVIVOR count + additive stats
-        obs_row = n_obs.get
-        total = int(obs_row["__n"])
-        if total == 0:
-            # the tombstones wiped everything this merge covered:
-            # materialize the wipe as segment REMOVAL — old segments
-            # out, nothing in, tombstones cleared if fully covered
-            st0 = catalog.data_storage(config)
-            st0.delete_tree(seg_path)
-            from toshokan_spark.indexer import stats_path as _sp
-
-            catalog.swap_segments(
-                index_name,
-                [s.id for s in segs],
-                None,
-                clear_delete_ids=(
-                    [d.id for d in deletes] if covers_all else None
-                ),
-            )
-            for s_, p_ in zip(segs, paths):
-                st0.delete_tree(p_)
-                st0.delete_tree(_sp(config, s_.file_name))
-            return None
-    # carry the day-range stats through compaction (conservative: any
-    # input without stats leaves the merged range unknown)
-    min_day = max_day = None
-    if all(s.min_day and s.max_day for s in segs):
-        min_day = min(s.min_day for s in segs)
-        max_day = max(s.max_day for s in segs)
-    # zone maps combine exactly under union: min of mins, max of maxes
-    # — but only when EVERY input recorded the field (a missing map
-    # means unknown values, so the merged map must stay conservative)
-    field_stats = None
-    if deletes:
-        # input-combined maps bound PRE-delete values; re-record from
-        # the survivors (observed during the write) — manifest_stats
-        # serves min/max as ANSWERS, not just prune bounds, so they
-        # must be exact again after the materialization
-        from toshokan_spark.indexer import plain_stat_value, zone_map_cols
-
-        field_stats = {
-            name: [
-                plain_stat_value(obs_row[f"__lo_{name}"]),
-                plain_stat_value(obs_row[f"__hi_{name}"]),
-            ]
-            for name, _src in zone_map_cols(config, set(df.columns))
-            if obs_row[f"__lo_{name}"] is not None
-        } or None
-    elif all(s.field_stats for s in segs):
-        names = set(segs[0].field_stats)
-        for s in segs[1:]:
-            names &= set(s.field_stats)
-        field_stats = {
-            n: [
-                min(s.field_stats[n][0] for s in segs),
-                max(s.field_stats[n][1] for s in segs),
-            ]
-            for n in names
-        } or None
-    # additive stats combine exactly under union: counts add, decimal
-    # sums add (order-free) — same conservative rule as the zone maps
-    field_sums = None
-    if deletes:
-        # additive stats of the INPUTS count rows the rewrite dropped —
-        # re-record from the SURVIVORS, observed during the write
-        # itself (zero extra scans): the manifest-stats fast path
-        # answers again right after a delete + one merge. Zone maps
-        # stay input-derived: too-wide bounds never wrong-prune.
-        field_sums = {
-            name: [
-                int(obs_row[f"__cnt_{name}"]),
-                str(obs_row[f"__sum_{name}"])
-                if obs_row[f"__sum_{name}"] is not None
-                else "0",
-            ]
-            for name in sum_fields
-        } or None
-    elif all(s.field_sums for s in segs):
-        from decimal import Decimal
-
-        names = set(segs[0].field_sums)
-        for s in segs[1:]:
-            names &= set(s.field_sums)
-        field_sums = {
-            n: [
-                sum(s.field_sums[n][0] for s in segs),
-                str(sum(Decimal(s.field_sums[n][1]) for s in segs)),
-            ]
-            for n in names
-        } or None
-    # histogram stats: additive bin combine when every input recorded
-    # the field at the SAME width; a delete-materializing merge
-    # re-records from the survivors (the field_sums rule — commit-time
-    # bins count rows the rewrite dropped)
-    from toshokan_spark.indexer import compute_field_histograms
-
-    # one read of the merged segment serves the stats recompute below
-    # and records the schema searches build its scan from
-    written = spark.read.parquet(seg_path)
-    field_histograms = None
-    if deletes:
-        field_histograms = compute_field_histograms(config, written)
-    elif all(s.field_histograms for s in segs):
-        names = set(segs[0].field_histograms)
-        for s in segs[1:]:
-            names &= set(s.field_histograms)
-        combined: dict = {}
-        for n in names:
-            widths = {s.field_histograms[n]["w"] for s in segs}
-            if len(widths) != 1:
-                continue  # width drift (alter) — conservative drop
-            bins: dict = {}
-            for s in segs:
-                for k, v in s.field_histograms[n]["bins"].items():
-                    bins[k] = bins.get(k, 0) + v
-            combined[n] = {"w": widths.pop(), "bins": bins}
-        field_histograms = combined or None
-
-    # recompute the merged segment's BM25 stats before it is
-    # manifested (stats follow data through compaction)
-    from toshokan_spark.indexer import stats_path, write_segment_stats
-
-    write_segment_stats(config, seg_name, written)
-
-    # token blooms union by bitwise OR when every input recorded the
-    # field with the same geometry; otherwise the merged segment drops
-    # the bloom (conservative — no bloom means no pruning, never a
-    # wrong prune). No data reread either way.
-    from toshokan_spark.functions.bloom import merge_blooms
-
-    token_blooms = None
-    if all(s.token_blooms for s in segs):
-        names = set(segs[0].token_blooms)
-        for s in segs[1:]:
-            names &= set(s.token_blooms)
-        merged = {
-            n: merge_blooms([s.token_blooms[n] for s in segs]) for n in names
-        }
-        token_blooms = {n: b for n, b in merged.items() if b is not None} or None
-
-    entry = SegmentEntry(
-        id=seg_id, file_name=seg_name, num_rows=total,
-        created_at_ms=int(time.time() * 1000),
-        min_day=min_day, max_day=max_day, field_stats=field_stats,
-        token_blooms=token_blooms, field_sums=field_sums,
-        field_histograms=field_histograms, schema=written.schema.jsonValue(),
-    )
-    # one atomic manifest write: new in, old out (`merge.rs:63-66`);
-    # tombstones this merge materialized clear in the same write
-    catalog.swap_segments(
-        index_name,
-        [s.id for s in segs],
-        entry,
-        clear_delete_ids=(
-            [d.id for d in deletes] if deletes and covers_all else None
-        ),
-    )
-    # best-effort old-data delete; leaks tolerated (`merge.rs:68-71`)
     st = catalog.data_storage(config)
-    for s, p in zip(segs, paths):
+    built: list = []
+    try:
+        for frame in frames:
+            b = build_segment(catalog, config, frame)
+            if b is not None:
+                built.append(b)
+        catalog.swap_segments(
+            config.name,
+            [s.id for s in segs],
+            [entry for entry, _p, _n in built],
+            clear_delete_ids=(
+                [d.id for d in deletes] if deletes and covers_all else None
+            ),
+        )
+    except Exception:
+        for _entry, seg_path, seg_name in built:
+            st.delete_tree(seg_path)
+            st.delete_tree(stats_path(config, seg_name))
+        raise
+    for s, p in zip(segs, _paths(config, segs)):
         st.delete_tree(p)
         st.delete_tree(stats_path(config, s.file_name))
-    return entry
+    return [entry for entry, _p, _n in built]
 
 
 def cluster_merge_segments(
@@ -325,7 +161,6 @@ def cluster_merge_segments(
     index_name: str,
     cluster_by: str,
     n_clusters: int = 4,
-    rows_per_file: int = DEFAULT_ROWS_PER_FILE,
     exact_bounds: bool = True,
 ) -> "list[SegmentEntry]":
     """Range-clustered compaction: rewrite the WHOLE index into
@@ -344,32 +179,23 @@ def cluster_merge_segments(
     Delta/Iceberg's ``OPTIMIZE ... ZORDER BY`` with one dimension,
     where a plain range partition strictly beats a Z-curve.
 
-    Mechanics: one snapshot drives everything (the merge discipline);
-    pending deletes materialize into the rewrite (it covers every
-    segment, so tombstones clear in the same swap); split bounds are
-    the exact ``percentile_disc`` cuts of ``cluster_by``
-    (``exact_bounds=False`` switches to ``approx_percentile`` — the
-    100 TB default, bounds only steer placement so approximation is
-    harmless); the survivor frame is persisted once and each cluster
-    filters + writes through :func:`indexer.build_segment`, which
-    re-records zone maps, day ranges, additive sums, histograms, BM25
-    stats and token blooms per cluster; ONE atomic ``swap_segments``
+    Mechanics: the merge's rewrite path (one snapshot; pending deletes
+    materialize into the rewrite, which covers every segment, so
+    tombstones clear in the same swap); split bounds are the exact
+    ``percentile_disc`` cuts of ``cluster_by`` (``exact_bounds=False``
+    switches to ``approx_percentile`` — the 100 TB default, bounds
+    only steer placement so approximation is harmless); the survivor
+    frame is persisted once and each cluster filters, repartitions
+    to its file count and is built by :func:`indexer.build_segment`,
+    which describes it like any commit; ONE atomic ``swap_segments``
     manifests all clusters and retires every input."""
-    from toshokan_spark.indexer import build_segment, stats_path
-    from toshokan_spark.search import apply_deletes, read_segments
-
     _ver, segs, deletes = catalog.snapshot(index_name)
     if not segs:
         raise MergeError("no segments to cluster")
     if n_clusters < 2:
         raise MergeError("n_clusters must be >= 2")
     config = catalog.get_index(index_name)
-    paths = [join_path(config.path, s.file_name) for s in segs]
-    df = read_segments(spark, paths, schemas=[s.schema for s in segs])
-    if deletes:
-        df = df.filter(
-            apply_deletes(F.lit(True), config, set(df.columns), deletes)
-        )
+    df = _survivors(spark, config, segs, deletes)
     if cluster_by not in df.columns:
         raise MergeError(f"unknown cluster field {cluster_by!r}")
 
@@ -390,59 +216,28 @@ def cluster_merge_segments(
         bounds = sorted(set(bounds))  # duplicate cuts on skew collapse
         total_rows = sum(s.num_rows for s in segs)
         per_cluster_files = max(
-            1, math.ceil(total_rows / max(1, len(bounds) + 1) / rows_per_file)
+            1, math.ceil(total_rows / (len(bounds) + 1) / DEFAULT_ROWS_PER_FILE)
         )
-        new_entries: "list[SegmentEntry]" = []
-        new_paths: "list[str]" = []
         col = F.col(cluster_by)
-        for i in range(len(bounds) + 1):
-            part = df
-            if i > 0:
-                part = part.filter(col >= F.lit(bounds[i - 1]))
-            if i < len(bounds):
-                cond = col < F.lit(bounds[i])
-                if i == 0:
-                    # nulls sort into the FIRST cluster (they fail
-                    # every bound test and would otherwise vanish)
-                    cond = cond | col.isNull()
-                part = part.filter(cond)
-            built = build_segment(
-                catalog, config, part, target_files=per_cluster_files
-            )
-            if built is None:
-                continue  # empty cluster (duplicate-heavy bound)
-            entry, seg_path, _seg_name = built
-            new_entries.append(entry)
-            new_paths.append(seg_path)
-        if not new_entries:
-            # deletes wiped everything: pure removal, like merge
-            catalog.swap_segments(
-                index_name,
-                [s.id for s in segs],
-                None,
-                clear_delete_ids=[d.id for d in deletes] if deletes else None,
-            )
-        else:
-            catalog.swap_segments(
-                index_name,
-                [s.id for s in segs],
-                new_entries,
-                clear_delete_ids=[d.id for d in deletes] if deletes else None,
-            )
-    except Exception:
-        # failed mid-build: remove any unmanifested cluster data
-        st = catalog.data_storage(config)
-        for p in list(locals().get("new_paths") or []):
-            st.delete_tree(p)
-        raise
+
+        def clusters():
+            for i in range(len(bounds) + 1):
+                part = df
+                if i > 0:
+                    part = part.filter(col >= F.lit(bounds[i - 1]))
+                if i < len(bounds):
+                    cond = col < F.lit(bounds[i])
+                    if i == 0:
+                        # nulls sort into the FIRST cluster (they fail
+                        # every bound test and would otherwise vanish)
+                        cond = cond | col.isNull()
+                    part = part.filter(cond)
+                # an empty cluster (duplicate-heavy bound) builds nothing
+                yield part.repartition(per_cluster_files)
+
+        return _rewrite(catalog, config, segs, deletes, segs, clusters())
     finally:
         df.unpersist()
-    # best-effort old-data delete; leaks tolerated (`merge.rs:68-71`)
-    st = catalog.data_storage(config)
-    for s, p in zip(segs, paths):
-        st.delete_tree(p)
-        st.delete_tree(stats_path(config, s.file_name))
-    return new_entries
 
 
 def _newest_mtime(st, path: str, depth: int = 6) -> float | None:

@@ -759,11 +759,10 @@ class QueryCompiler:
         against stemmed index tokens); on a whitespace field it keeps
         its case, like the field's tokens. The positional prefix chain
         over the tokens with their positions (an over-long token keeps
-        its place and starts with no prefix), per element of an array;
-        a word-boundary regex WITHOUT the trailing boundary over
-        `_dynamic` values; startswith for raw fields (the whole value
-        is one token). Unqualified, it fans out over the indexed text
-        fields."""
+        its place and starts with no prefix), per element of an array,
+        for text fields and `_dynamic` values alike; startswith for raw
+        fields (the whole value is one token). Unqualified, it fans out
+        over the indexed text fields."""
         if node.field is None:
             return _any([
                 f"coalesce(({self._render_phrase_prefix(PhrasePrefix((f.name,), node.text))}), false)"
@@ -781,7 +780,7 @@ class QueryCompiler:
         raw_words = [w for w in node.text.split() if w]
         if not raw_words:
             return "false"
-        ws = t.kind == "text" and t.tokenizer == "whitespace"
+        ws = t.tokenizer == "whitespace"
         lead = analyze_term(" ".join(raw_words[:-1]), t.tokenizer)
         pfx_toks = analyze_term(raw_words[-1],
                                 "whitespace" if ws else "default")
@@ -789,14 +788,6 @@ class QueryCompiler:
             return "false"
         prefix = pfx_toks[-1]
         lead = lead + pfx_toks[:-1]
-        if t.kind == "dynamic" and t.tokenizer != "en_stem":
-            words = lead + [prefix]
-            pat = (
-                f"(^|{_NON_ALNUM_RE})"
-                + f"{_NON_ALNUM_RE}+".join(re.escape(w) for w in words)
-            )
-            return (f"coalesce(lower({t.col}) RLIKE {_s(pat)}, "
-                    f"false)")
         if t.kind == "text" and t.array:
             body = _token_seq_prefix_match_sql("__el", lead, prefix)
             return (f"coalesce(exists({_element_positions_sql(t.col, t.tokenizer)}, "
