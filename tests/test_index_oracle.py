@@ -79,6 +79,10 @@ SEPS = [" ", "-", ", ", "/", " — "]
 #: segment days; the third segment is written after ``tag`` is added
 SEGMENT_DAYS = [(1, 2), (2, 3, 4), (4, 5)]
 WS_WORDS = ["Foo", "foo", "bar-baz", "QUX.", "x.foo", "東京", "a1", "A", "b"]
+#: raw levels and whitespace words holding a quote or a backslash: the
+#: compiled query carries them as hex string literals
+QUOTED_LEVELS = ["it's", "C:\\tmp\\new", "\\u00e9'"]
+QUOTED_WS = ["it's", "x\\y"]
 IPS = ["10.0.0.1", "10.0.0.7", "::ffff:10.0.0.7", "192.168.1.20", "2001:db8::1",
        "2001:db8::ff", "not-an-ip"]
 TAG_VALUES = ["x", "y", "big data", "Zürich", "t1"]
@@ -111,14 +115,14 @@ def _rows(rng, segment, days, with_tag):
         row = {
             "id": segment * 1000 + i,
             "ts": f"2024-01-{day:02d}T{rng.randrange(24):02d}:{rng.randrange(60):02d}:00Z",
-            "level": rng.choice(LEVELS),
+            "level": rng.choice(LEVELS + QUOTED_LEVELS),
             "msg": "".join(
                 w + rng.choice(SEPS)
                 for w in rng.choices(WORDS, k=rng.randint(1, 6))
             ).rstrip(" ,-/—"),
             "score": rng.randrange(-400, 400) / 8,
             "ok": rng.random() < 0.5,
-            "ws": " ".join(rng.choices(WS_WORDS, k=rng.randint(1, 4))),
+            "ws": " ".join(rng.choices(WS_WORDS + QUOTED_WS, k=rng.randint(1, 4))),
             "ip": rng.choice(IPS),
             "tags": rng.sample(TAG_VALUES, rng.randint(0, 3)),
             "note": " ".join(rng.choices(WORDS[:-1] + DYN_WORDS, k=rng.randint(1, 3))),
@@ -467,6 +471,10 @@ _leaves = st.one_of(
     st.builds(Phrase, st.sampled_from([("level",), ("tag",)]), st.sampled_from(LEVELS + TAGS)),
     st.builds(Prefix, st.sampled_from([("level",), ("tag",)]),
               st.sampled_from(["I", "ER", "Ün", "t", "東", "info"])),
+    st.builds(Term, st.just(("level",)), st.sampled_from(QUOTED_LEVELS)),
+    st.builds(Term, st.just(("ws",)), st.sampled_from(QUOTED_WS)),
+    st.builds(Prefix, st.sampled_from([("level",), ("ws",)]),
+              st.sampled_from(["it'", "C:\\t", "x\\y"])),
     st.builds(Term, st.just(("id",)), _ids),
     st.builds(Term, st.just(("score",)), _scores),
     st.builds(Term, st.just(("ok",)), st.sampled_from(["true", "false"])),
@@ -500,6 +508,22 @@ _time_bounded = st.builds(
 QUERIES = _trees | _time_bounded
 
 
+def _check_one(spark, catalog, db, node):
+    text = to_text(node)
+    assert parse_query(text) == node, text
+    want = {r[0] for r in db.execute(
+        f"SELECT id FROM docs WHERE {to_sql(node)} AND NOT COALESCE({DELETE_SQL}, FALSE)"
+    ).fetchall()}
+    got = [r.id for r in search_df(spark, catalog, NAME, text, limit=None).select("id").collect()]
+    assert len(got) == len(set(got)), text
+    assert set(got) == want, (text, sorted(set(got) ^ want)[:10])
+
+
+#: quoted values the default parser and the legacy one
+#: (``spark.sql.parser.escapedStringLiterals``) must read alike
+LEGACY_EXAMPLES = [Term(("level",), "it's"), Term(("ws",), "x\\y")]
+
+
 def _check_all(spark, catalog, db):
     @settings(
         max_examples=EXAMPLES, derandomize=True, deadline=None, database=None,
@@ -513,15 +537,10 @@ def _check_all(spark, catalog, db):
     @example(Phrase(("ws",), "foo a1"))
     @example(Phrase(("msg",), "query join", 1))
     @example(PhrasePrefix(("ws",), "A b"))
+    @example(LEGACY_EXAMPLES[0])
+    @example(LEGACY_EXAMPLES[1])
     def check(node):
-        text = to_text(node)
-        assert parse_query(text) == node, text
-        want = {r[0] for r in db.execute(
-            f"SELECT id FROM docs WHERE {to_sql(node)} AND NOT COALESCE({DELETE_SQL}, FALSE)"
-        ).fetchall()}
-        got = [r.id for r in search_df(spark, catalog, NAME, text, limit=None).select("id").collect()]
-        assert len(got) == len(set(got)), text
-        assert set(got) == want, (text, sorted(set(got) ^ want)[:10])
+        _check_one(spark, catalog, db, node)
 
     check()
 
@@ -545,3 +564,15 @@ def test_search_matches_duckdb_before_and_after_merge(oracle_index):
     ).fetchone()[0]
     assert merged.num_rows == live
     _check_all(spark, catalog, db)
+
+
+def test_quoted_values_match_duckdb_in_legacy_parser_mode(oracle_index):
+    spark, catalog, db = oracle_index
+    conf = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        for node in LEGACY_EXAMPLES:
+            _check_one(spark, catalog, db, node)
+    finally:
+        spark.conf.set(conf, before)

@@ -297,3 +297,36 @@ def test_vocabulary_over_cap_records_no_bloom(spark, tmp_path, monkeypatch):
     assert seg.token_blooms == _reference_blooms(cfg, written)
     # only the fields with a single distinct token keep a bloom
     assert set(seg.token_blooms) == {"ws", "stem", "tags"}
+
+
+@pytest.mark.parametrize("step", ["commit", "merge"])
+def test_failed_describe_deletes_its_segment(spark, tmp_path, monkeypatch, step):
+    """A step after the data write that raises (here the histograms)
+    leaves no seg-* directory behind and no manifest change."""
+    import os
+
+    from toshokan_spark import indexer
+    from toshokan_spark.catalog import FsCatalog
+
+    catalog = FsCatalog(str(tmp_path / "catalog"))
+    cfg = IndexConfig(name="docs", path=str(tmp_path / "data"), fields=list(DOC_FIELDS))
+    create_index(catalog, cfg)
+    for batch in (1, 2) if step == "merge" else ():
+        write_segment(catalog, cfg, ingest_projection(_lines(spark, "docs", batch), cfg))
+    kept = sorted(s.file_name for s in catalog.segments("docs"))
+    version = catalog.versions("docs")[-1] if catalog.versions("docs") else None
+
+    def boom(*_a, **_k):
+        raise RuntimeError("histograms failed")
+
+    monkeypatch.setattr(indexer, "compute_field_histograms", boom)
+    with pytest.raises(RuntimeError, match="histograms failed"):
+        if step == "merge":
+            merge_segments(spark, catalog, "docs")
+        else:
+            write_segment(catalog, cfg, ingest_projection(_lines(spark, "docs", 3), cfg))
+    on_disk = sorted(d for d in os.listdir(tmp_path / "data") if d.startswith("seg-"))
+    assert on_disk == kept
+    stats_dir = tmp_path / "data" / "_stats"
+    assert not stats_dir.exists() or sorted(os.listdir(stats_dir)) == kept
+    assert (catalog.versions("docs")[-1] if catalog.versions("docs") else None) == version

@@ -2206,6 +2206,7 @@ def main(argv: list[str] | None = None) -> int:
         # the REAL tokenizer expressions — a pure-Python shadow would
         # drift from what queries and stats actually see.
         from toshokan_spark.functions.tokenizers import tokenize
+        from toshokan_spark.literals import literal_relation
         from pyspark.sql import functions as SF
 
         config = catalog.get_index(a.index)
@@ -2224,7 +2225,7 @@ def main(argv: list[str] | None = None) -> int:
             tok = fmap[a.field_or_text].tokenizer or "default"
             text = a.text
         spark = _spark()
-        row = spark.createDataFrame([(text,)], "t string").select(
+        row = literal_relation(spark, [(text,)], "t string").select(
             tokenize(SF.col("t"), tok).alias("tokens")
         ).first()
         print(json.dumps({"tokenizer": tok, "tokens": row["tokens"]},

@@ -250,84 +250,93 @@ def build_segment(
 
     df.write.mode("error").parquet(seg_path)
 
-    r = obs.get
-    num_rows = int(r["__n"])
-    if num_rows == 0:
-        # empty-batch suppression (`index.rs:164-170`)
-        catalog.data_storage(config).delete_tree(seg_path)
-        return None
+    # from here on the directory is this call's own: any step that
+    # raises (the stats sidecar, the histograms, the blooms) deletes
+    # it and the sidecar before the error propagates
+    try:
+        r = obs.get
+        num_rows = int(r["__n"])
+        if num_rows == 0:
+            # empty-batch suppression (`index.rs:164-170`)
+            catalog.data_storage(config).delete_tree(seg_path)
+            return None
 
-    min_day = max_day = None
-    if timed and r["__dlo"] is not None:
-        min_day, max_day = str(r["__dlo"]), str(r["__dhi"])
+        min_day = max_day = None
+        if timed and r["__dlo"] is not None:
+            min_day, max_day = str(r["__dlo"]), str(r["__dhi"])
 
-    _plain = plain_stat_value
-    stats = {
-        name: [_plain(r[f"__lo_{name}"]), _plain(r[f"__hi_{name}"])]
-        for name, _ in stat_cols
-        if r[f"__lo_{name}"] is not None
-    }
-    field_stats = stats or None
+        _plain = plain_stat_value
+        stats = {
+            name: [_plain(r[f"__lo_{name}"]), _plain(r[f"__hi_{name}"])]
+            for name, _ in stat_cols
+            if r[f"__lo_{name}"] is not None
+        }
+        field_stats = stats or None
 
-    field_sums = {
-        name: [
-            int(r[f"__cnt_{name}"]),
-            str(r[f"__sum_{name}"]) if r[f"__sum_{name}"] is not None else "0",
-        ]
-        for name in sum_fields
-    } or None
+        field_sums = {
+            name: [
+                int(r[f"__cnt_{name}"]),
+                str(r[f"__sum_{name}"]) if r[f"__sum_{name}"] is not None else "0",
+            ]
+            for name in sum_fields
+        } or None
 
-    # stats are derived data: write them BEFORE the manifest commit so
-    # a manifested segment always has its stats sibling. The read's
-    # schema is recorded on the entry, so searches never infer it.
-    written = df.sparkSession.read.parquet(seg_path)
-    observed = write_segment_stats(config, seg_name, written, observe_blooms=True)
+        # stats are derived data: write them BEFORE the manifest commit so
+        # a manifested segment always has its stats sibling. The read's
+        # schema is recorded on the entry, so searches never infer it.
+        written = df.sparkSession.read.parquet(seg_path)
+        observed = write_segment_stats(config, seg_name, written, observe_blooms=True)
 
-    # fixed-width histogram stats for configured number fields — the
-    # distribution twin of field_sums (manifest-only match-all
-    # histogram panels); exact counts, additive across segments
-    field_histograms = compute_field_histograms(config, written)
+        # fixed-width histogram stats for configured number fields — the
+        # distribution twin of field_sums (manifest-only match-all
+        # histogram panels); exact counts, additive across segments
+        field_histograms = compute_field_histograms(config, written)
 
-    # token Bloom filters for TOKENIZED text fields — the term-query
-    # analog of the zone maps above (raw fields already have string
-    # zone maps): scalar fields fold what the stats write observed (no
-    # job), array fields run one aggregate each; either buys
-    # manifest-level segment skipping for every future term query
-    # (functions/bloom.py has the sizing/caps/conservatism story)
-    from toshokan_spark.functions.bloom import build_token_bloom
+        # token Bloom filters for TOKENIZED text fields — the term-query
+        # analog of the zone maps above (raw fields already have string
+        # zone maps): scalar fields fold what the stats write observed (no
+        # job), array fields run one aggregate each; either buys
+        # manifest-level segment skipping for every future term query
+        # (functions/bloom.py has the sizing/caps/conservatism story)
+        from toshokan_spark.functions.bloom import build_token_bloom
 
-    # eligible: every text field EXCEPT scalar raw (those have string
-    # zone maps); raw ARRAYS are included — they had no pruning tier
-    # at all (zone maps skip arrays), and a raw term is its own token
-    token_blooms: dict = {}
-    for f in config.fields:
-        if (
-            f.type == "text"
-            and (f.tokenizer != "raw" or f.array)
-            and f.name in written.columns
-        ):
-            b = build_token_bloom(
-                written, f.name, f.tokenizer, is_array=f.array,
-                observed=observed.get(f.name),
-            )
-            if b is not None:
-                token_blooms[f.name] = b
+        # eligible: every text field EXCEPT scalar raw (those have string
+        # zone maps); raw ARRAYS are included — they had no pruning tier
+        # at all (zone maps skip arrays), and a raw term is its own token
+        token_blooms: dict = {}
+        for f in config.fields:
+            if (
+                f.type == "text"
+                and (f.tokenizer != "raw" or f.array)
+                and f.name in written.columns
+            ):
+                b = build_token_bloom(
+                    written, f.name, f.tokenizer, is_array=f.array,
+                    observed=observed.get(f.name),
+                )
+                if b is not None:
+                    token_blooms[f.name] = b
 
-    entry = SegmentEntry(
-        id=seg_id,
-        file_name=seg_name,
-        num_rows=num_rows,
-        created_at_ms=int(time.time() * 1000),
-        batch_id=batch_id,
-        min_day=min_day,
-        max_day=max_day,
-        field_stats=field_stats,
-        token_blooms=token_blooms or None,
-        field_sums=field_sums,
-        field_histograms=field_histograms,
-        schema=written.schema.jsonValue(),
-    )
-    return entry, seg_path, seg_name
+        entry = SegmentEntry(
+            id=seg_id,
+            file_name=seg_name,
+            num_rows=num_rows,
+            created_at_ms=int(time.time() * 1000),
+            batch_id=batch_id,
+            min_day=min_day,
+            max_day=max_day,
+            field_stats=field_stats,
+            token_blooms=token_blooms or None,
+            field_sums=field_sums,
+            field_histograms=field_histograms,
+            schema=written.schema.jsonValue(),
+        )
+        return entry, seg_path, seg_name
+    except BaseException:
+        st = catalog.data_storage(config)
+        st.delete_tree(seg_path)
+        st.delete_tree(stats_path(config, seg_name))
+        raise
 
 
 def compute_field_histograms(config, df) -> "dict | None":

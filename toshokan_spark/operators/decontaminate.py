@@ -27,6 +27,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from toshokan_spark.literals import literal_relation
 from toshokan_spark.operators.dedup import _shingles_from_words, words_col
 
 
@@ -199,9 +200,10 @@ def semantic_decontaminate(
     bench_vec_col = bench_vec_col or vec_col
     bench = []
     n_zero = 0
-    for r in benchmark.select(
+    bsel = benchmark.select(
         F.col(bench_id_col).alias("bid"), F.col(bench_vec_col).alias("bv")
-    ).collect():
+    )
+    for r in bsel.collect():
         v = [float(x) for x in r["bv"]]
         if not any(x != 0.0 for x in v):
             n_zero += 1
@@ -239,7 +241,9 @@ def semantic_decontaminate(
         )
         picked = base.select("id", best.alias("__b"))
     else:
-        b_df = corpus.sparkSession.createDataFrame(bench, ["bid", "bv"])
+        bid_t = bsel.schema["bid"].dataType.simpleString()
+        b_df = literal_relation(
+            corpus.sparkSession, bench, f"bid {bid_t}, bv array<double>")
         scored = base.crossJoin(F.broadcast(b_df)).select(
             "id",
             F.struct(

@@ -36,13 +36,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    IntegerType,
     LongType,
     StructField,
     StructType,
 )
 from pyspark.sql.window import Window
 
+from toshokan_spark.literals import literal_relation
 from toshokan_spark.operators.util import finalize_cached, spread
 
 # ---------------------------------------------------------------------------
@@ -1717,36 +1717,13 @@ def duplicate_clusters(
                 StructField("cluster_id", id_type),
             ]
         )
-        if (
-            items
-            and len(items) <= 65536
-            and isinstance(id_type, (LongType, IntegerType))
-            and all(
-                isinstance(x, int) for kv in items for x in kv
-            )
-        ):
-            # integral label table as a LITERAL relation (the
-            # _literal_frame recipe): createDataFrame parallelizes a
-            # pickled RDD whose broadcast build runs its own collect
-            # job; a literal LocalRelation broadcasts straight from
-            # the driver. Capped at 64k pairs so the parsed expression
-            # stays small — larger graphs fall back to the RDD, whose
-            # one extra job is noise at that size.
-            body = ",".join(f"struct({d}L,{c}L)" for d, c in items)
-            local = (
-                spark.range(1)
-                .select(F.expr(f"inline(array({body}))"))
-                .select(
-                    F.col("col1").cast(id_type).alias("doc_id"),
-                    F.col("col2").cast(id_type).alias("cluster_id"),
-                )
-            )
-        else:
-            # createDataFrame parallelizes an RDD with UNKNOWN size
-            # stats, so the final label join would plan a sort-merge
-            # exchange of all_ids; the label table is bounded by
-            # local_threshold — broadcast it explicitly
-            local = spark.createDataFrame(items, schema)
+        # the label table as a literal relation, which broadcasts
+        # straight from the driver; createDataFrame (above
+        # literals.LITERAL_CAP values) parallelizes an RDD with UNKNOWN
+        # size stats, so the final label join would plan a sort-merge
+        # exchange of all_ids: the table is bounded by
+        # local_threshold, so broadcast it explicitly either way
+        local = literal_relation(spark, items, schema)
         return F.broadcast(local)
 
     def _finish_local(edge_df: DataFrame) -> DataFrame:

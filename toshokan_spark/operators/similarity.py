@@ -22,8 +22,16 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
+from toshokan_spark.literals import literal_relation, sql_literal
 from toshokan_spark.operators.dedup import cosine_sim, dot_product, sq_norm
 from toshokan_spark.operators.util import finalize_cached, spread
 
@@ -389,14 +397,11 @@ def _l2_to_literal(vec: Column, c: list[float]) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _arr_sql(c: "list[float]") -> str:
-    return "array(" + ",".join(repr(float(x)) + "D" for x in c) + ")"
-
-
 def _l2_sql(vec_sql: str, c: "list[float]") -> str:
     """SQL text of _l2_to_literal(vec, c)."""
+    arr = sql_literal([float(x) for x in c], ArrayType(DoubleType()))
     return (
-        f"aggregate(zip_with({vec_sql}, {_arr_sql(c)}, "
+        f"aggregate(zip_with({vec_sql}, {arr}, "
         "(a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)), "
         "0.0D, (acc, v) -> acc + v)"
     )
@@ -795,6 +800,21 @@ def kcenter_select(
     DuckDB oracle replays every round argmax exactly."""
     spark = corpus.sparkSession
     slim = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    schema = StructType([
+        StructField("rank", LongType()),
+        StructField(id_col, slim.schema["id"].dataType),
+        StructField("__dd", DoubleType()),
+    ])
+
+    def result(sel):
+        # (rank-1, id, squared distance) picks -> (rank, id, dist); sqrt
+        # and round as COLUMN expressions (the kmeans discipline) so
+        # the rounding engine matches the oracle's, not Python's
+        # banker's round
+        return literal_relation(
+            spark, [(rk + 1, _id, dd) for rk, _id, dd in sel], schema
+        ).select("rank", id_col, F.round(F.sqrt("__dd"), 6).alias("dist"))
+
     probe = (
         slim.limit(local_threshold + 1).collect()
         if local_threshold and local_threshold > 0
@@ -804,16 +824,13 @@ def kcenter_select(
         import numpy as np
 
         if not probe:
-            return spark.createDataFrame(
-                [], f"rank long, {id_col} long, dist double"
-            )
-        ids = np.array([r.id for r in probe], dtype=np.int64)
+            return result([])
+        probe.sort(key=lambda r: r.id)
+        ids = [r.id for r in probe]
         V = np.array(
             [[float(x) for x in r.v] for r in probe], dtype=np.float64
         )
-        order = np.argsort(ids, kind="stable")
-        ids, V = ids[order], V[order]
-        sel = [(0, int(ids[0]), 0.0)]
+        sel = [(0, ids[0], 0.0)]
         alive = np.ones(len(ids), dtype=bool)
         alive[0] = False
         dmin = _seqfold_sq_l2_local(V, V[0])
@@ -826,25 +843,15 @@ def kcenter_select(
             # exactly the distributed orderBy(dd desc, id asc) head.
             masked = np.where(alive, dmin, -np.inf)
             i = int(np.argmax(masked))
-            sel.append((len(sel), int(ids[i]), float(dmin[i])))
+            sel.append((len(sel), ids[i], float(dmin[i])))
             alive[i] = False
             dmin = np.minimum(dmin, _seqfold_sq_l2_local(V, V[i]))
-        return (
-            spark.createDataFrame(
-                [(rk + 1, _id, dd) for rk, _id, dd in sel],
-                f"rank long, {id_col} long, __dd double",
-            )
-            .select(
-                "rank", id_col, F.round(F.sqrt("__dd"), 6).alias("dist")
-            )
-        )
+        return result(sel)
     e = spread(slim).persist()
     try:
         seed = e.orderBy(F.col("id").asc()).limit(1).collect()
         if not seed:
-            return corpus.sparkSession.createDataFrame(
-                [], f"rank long, {id_col} long, dist double"
-            )
+            return result([])
         selected = [(0, seed[0].id, [float(x) for x in seed[0].v], 0.0)]
         for _ in range(k - 1):
             cents = [(rk, v) for rk, _id, v, _d in selected]
@@ -862,19 +869,7 @@ def kcenter_select(
             selected.append(
                 (len(selected), r.id, [float(x) for x in r.v], float(r.dd))
             )
-        spark = corpus.sparkSession
-        # sqrt+round as COLUMN expressions (the kmeans discipline) so
-        # the rounding engine matches the oracle's, not Python's
-        # banker's round
-        return (
-            spark.createDataFrame(
-                [(rk + 1, _id, dd) for rk, _id, _v, dd in selected],
-                f"rank long, {id_col} long, __dd double",
-            )
-            .select(
-                "rank", id_col, F.round(F.sqrt("__dd"), 6).alias("dist")
-            )
-        )
+        return result([(rk, _id, dd) for rk, _id, _v, dd in selected])
     finally:
         e.unpersist()
 

@@ -20,8 +20,10 @@ import unicodedata
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 from pyspark.sql.window import Window
 
+from toshokan_spark.literals import literal_relation, sql_literal
 from toshokan_spark.operators.dedup import poly_hash, words_col
 
 _LOG = logging.getLogger(__name__)
@@ -168,7 +170,7 @@ def langid_model(spark, dim: int = 4096, hash_family: str = "poly") -> DataFrame
         for lang, words in sorted(LANG_LEXICONS.items())
         for word in words
     ]
-    df = spark.createDataFrame(rows, "lang string, f string")
+    df = literal_relation(spark, rows, "lang string, f string")
     idx = _feature_idx(F.col("f"), dim, hash_family)
     return (
         df.select("lang", idx.alias("idx"), F.lit(1.0).alias("w"))
@@ -1191,29 +1193,6 @@ def hashed_linear_score(
     )
 
 
-def _literal_frame(spark, wmap: dict, schema) -> DataFrame:
-    """A model-sized (idx, w) frame as a LITERAL plan node: one SQL
-    ``inline(array(struct...))`` expression parsed in a single
-    ``F.expr`` trip. ``createDataFrame`` would parallelize a pickled
-    RDD whose broadcast costs a collect job per training round; a
-    literal relation broadcasts straight from the driver. Doubles are
-    rendered with ``repr`` (shortest round-trip form) and the ``D``
-    suffix, so the parsed values are bit-identical."""
-    if not wmap:
-        return spark.createDataFrame([], schema)
-    rows = ",".join(
-        f"struct({int(i)}L,{float(v)!r}D)" for i, v in wmap.items()
-    )
-    return (
-        spark.range(1)
-        .select(F.expr(f"inline(array({rows}))"))
-        .select(
-            F.col("col1").cast(schema["idx"].dataType).alias("idx"),
-            F.col("col2").alias("w"),
-        )
-    )
-
-
 def train_hashed_classifier(
     df: DataFrame,
     label_col: str = "y",
@@ -1260,11 +1239,11 @@ def train_hashed_classifier(
     rows — model-sized by construction — so each round COLLECTS it
     and applies ``w ← w − lr·g`` in Python (bit-identical doubles:
     the update is two IEEE ops either way), feeding the next round a
-    literal weight frame (:func:`_literal_frame` — an inline-array
-    SQL literal, NOT a parallelized RDD, whose broadcast would cost a
-    collect job per round). The former in-plan update paid a persist
-    + count + localCheckpoint (two jobs) per round just to keep the
-    lineage flat; collecting the model is the same O(dim) driver
+    literal weight frame (:func:`~toshokan_spark.literals.literal_relation`
+    — an inline-array SQL literal, NOT a parallelized RDD, whose
+    broadcast would cost a collect job per round). The former in-plan
+    update paid a persist + count + localCheckpoint (two jobs) per
+    round just to keep the lineage flat; collecting the model is the same O(dim) driver
     state the checkpointed frame already implied. Measured at sf0.1:
     29 -> 19 jobs; wall 4.1-4.8 s vs 4.6-5.9 s same-session A/B
     (within the noise band — the win is the job count and one fewer
@@ -1299,7 +1278,8 @@ def train_hashed_classifier(
                     F.lit(0.0).alias("wsum"),
                 )
             else:
-                w_lit = F.broadcast(_literal_frame(spark, wmap, w_schema))
+                w_lit = F.broadcast(
+                    literal_relation(spark, wmap.items(), w_schema))
                 scored = (
                     base.join(w_lit, "idx", "left")
                     .groupBy("id", "y")
@@ -1330,18 +1310,24 @@ def train_hashed_classifier(
                 )
                 .collect()
             )
-            if wmap is None:
-                # mirrors the former first-round plan: w = -lr * g
-                wmap = {row["idx"]: (-lr) * row["g"] for row in grad_rows}
-            else:
-                # mirrors the former grad-left-join-w update: the new
-                # weight set is exactly grad's idx set (grad covers
-                # every idx occurring in base, so nothing is lost)
-                wmap = {
-                    row["idx"]: wmap.get(row["idx"], 0.0) - lr * row["g"]
-                    for row in grad_rows
-                }
-        return _literal_frame(spark, wmap or {}, w_schema)
+            # the new weight set is exactly grad's idx set (grad covers
+            # every idx occurring in base, so nothing is lost). A null
+            # gradient (every doc reaching the idx had a non-finite
+            # label, whose decimal cast is null) gives a null weight,
+            # which the next round's join reads as 0.0
+            prev, wmap = wmap, {}
+            for row in grad_rows:
+                idx, g = row["idx"], row["g"]
+                if g is None:
+                    wmap[idx] = None
+                elif prev is None:
+                    # mirrors the former first-round plan: w = -lr * g
+                    wmap[idx] = (-lr) * g
+                else:
+                    # mirrors the former grad-left-join-w update
+                    w0 = prev.get(idx)
+                    wmap[idx] = (0.0 if w0 is None else w0) - lr * g
+        return literal_relation(spark, (wmap or {}).items(), w_schema)
     finally:
         base.unpersist()
 
@@ -1440,8 +1426,12 @@ def dsir_log_weights(
         ct_arr[int(r["idx"])] = int(r["ct"])
     tr = sum(cr_arr)
     tt = sum(ct_arr)
-    cr_lit = F.expr("array(" + ",".join(map(str, cr_arr)) + ")")
-    ct_lit = F.expr("array(" + ",".join(map(str, ct_arr)) + ")")
+    # INT elements, as an unsuffixed literal array parses, unless a
+    # count needs BIGINT
+    cnt_t = ArrayType(
+        IntegerType() if max(cr_arr + ct_arr) < 1 << 31 else LongType())
+    cr_lit = F.expr(sql_literal(cr_arr, cnt_t))
+    ct_lit = F.expr(sql_literal(ct_arr, cnt_t))
     pos = (F.col("idx") + F.lit(1)).cast("int")
     lr = (
         F.log(
@@ -1883,11 +1873,9 @@ def bpe_merge_table(spark, merges: "list[tuple[str, str, int]]") -> DataFrame:
     """The learned merges as a 1-row-per-merge frame
     ``(rank, merge_left, merge_right, pair_count)`` — the shape the
     driver oracle checks and a tokenizer would persist."""
-    return spark.createDataFrame(
-        [
-            (i + 1, a, b, c)
-            for i, (a, b, c) in enumerate(merges)
-        ],
+    return literal_relation(
+        spark,
+        [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
         "rank long, merge_left string, merge_right string, pair_count long",
     )
 

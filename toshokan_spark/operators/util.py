@@ -7,6 +7,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from toshokan_spark.literals import sql_literal
 
 _LOG = logging.getLogger(__name__)
 
@@ -344,36 +347,6 @@ def grouped_prefix(
         raise
 
 
-def _sql_lit(v) -> "str | None":
-    """Render a collected Python scalar as a bit-exact SQL literal —
-    the one-``F.expr``-trip trick of ``text._literal_frame``: a
-    driver-side map built from thousands of ``F.lit``/``create_map``
-    Column calls costs one py4j round trip PER node (measured ~13 s of
-    pure driver time for a 20-group × 64-bucket offset map), where a
-    rendered string parses in a single trip. Returns None for types
-    without an exact rendering (callers fall back to the join path).
-    Doubles use ``repr`` (shortest round-trip form) + the ``D``
-    suffix, so parsed values are bit-identical; strings are
-    backslash-escaped for Spark's default (non-legacy) literal
-    parser."""
-    import math
-
-    if isinstance(v, bool):
-        return None
-    if isinstance(v, int):
-        return f"{v}L"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "CAST('NaN' AS DOUBLE)"
-        if math.isinf(v):
-            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-        return f"{v!r}D"
-    if isinstance(v, str):
-        s = v.replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{s}'"
-    return None
-
-
 def _grouped_prefix_body(
     df, group_col, proxy, order_cols, *, value, n_coarse, accuracy,
     rank_col, cumsum_col, materialize, nulls_last, cached,
@@ -402,7 +375,7 @@ def _grouped_prefix_body(
         return _grouped_prefix_rank(
             d, group_col, order_cols, value=value, rank_col=rank_col,
             cumsum_col=cumsum_col, materialize=materialize,
-            cached=cached, total_col=total_col,
+            cached=cached, total_col=total_col, cols=df.columns,
         )
 
     qs = [i / n_coarse for i in range(1, n_coarse)]
@@ -422,7 +395,7 @@ def _grouped_prefix_body(
         # group→bounds map — the former createDataFrame(rows)
         # broadcast side parallelized a pickled RDD whose broadcast
         # cost its own collect job, where a literal map is a plain
-        # expression in the data pass (the _literal_frame rationale).
+        # expression in the data pass (see literals.sql_literal).
         rows = bounds.collect()
         # cap the floor by the number of REQUESTED boundaries (len(qs)
         # = n_coarse - 1): at n_coarse=2 a group has one boundary, so
@@ -441,43 +414,20 @@ def _grouped_prefix_body(
                     "mode buys no parallelism there",
                     r[group_col], distinct, floor,
                 )
-        gdt = df.schema[group_col].dataType
-        bdt = bounds.schema["__bounds"].dataType
-        entries = []
-        for r in rows:
-            if r[group_col] is None:
-                # the former inner join on group_col dropped
-                # null-group rows; the literal path mirrors that with
-                # an explicit filter below, so a null key never enters
-                # the map (ANSI map literals reject it anyway)
-                continue
-            gl = _sql_lit(r[group_col])
-            bs = r["__bounds"]
-            if bs is None:
-                arr = "NULL"
-            else:
-                parts = [_sql_lit(x) for x in bs]
-                arr = (
-                    f"array({','.join(parts)})"
-                    if all(p is not None for p in parts)
-                    else None
-                )
-            if gl is None or arr is None:
-                entries = []
-                break  # unrenderable type: keep the join path
-            entries.append(f"{gl},{arr}")
-        if entries:
-            # ONE parsed expression (see _sql_lit) — the CAST pins the
-            # exact key/element types so element_at and the boundary
-            # comparisons see the same types the joined column had
-            bmap = F.expr(
-                f"CAST(map({','.join(entries)}) AS "
-                f"MAP<{gdt.simpleString()},{bdt.simpleString()}>)"
-            )
-            bounds_arr = F.element_at(bmap, F.col(group_col))
+        # the former inner join on group_col dropped null-group rows;
+        # the literal path mirrors that with an explicit filter below,
+        # so a null key never enters the map
+        bmap = {r[group_col]: r["__bounds"] for r in rows
+                if r[group_col] is not None}
+        mtype = T.MapType(df.schema[group_col].dataType,
+                          bounds.schema["__bounds"].dataType)
+        try:
+            bmap_sql = sql_literal(bmap, mtype)
+        except ValueError:
+            bmap_sql = None  # an unrenderable group/boundary type: the join path
+        if bmap_sql is not None:
+            bounds_arr = F.element_at(F.expr(bmap_sql), F.col(group_col))
             attach_literal = True
-        # no non-null groups at all (empty input) or an unrenderable
-        # group/boundary type: fall through to the lazy join
     if attach_literal:
         base = df.filter(F.col(group_col).isNotNull())
     else:
@@ -505,18 +455,26 @@ def _grouped_prefix_body(
     return _grouped_prefix_rank(
         d, group_col, order_cols, value=value, rank_col=rank_col,
         cumsum_col=cumsum_col, materialize=materialize, cached=cached,
-        total_col=total_col,
+        total_col=total_col, cols=df.columns,
     )
 
 
 def _grouped_prefix_rank(
     d, group_col, order_cols, *, value, rank_col, cumsum_col,
-    materialize, cached, total_col,
+    materialize, cached, total_col, cols,
 ):
     """Stages 3–5 of :func:`grouped_prefix`, given the coarse-bucketed
     frame *d* (carrying ``__coarse``): per-(group, coarse) window,
-    per-bucket totals, broadcast offsets, global rank/cumsum."""
+    per-bucket totals, broadcast offsets, global rank/cumsum. Every
+    path ends in one projection: the input columns *cols* in their
+    order, then *rank_col*, *total_col* and *cumsum_col*."""
     from pyspark.sql.window import Window
+
+    out_cols = [*cols, rank_col]
+    if total_col is not None:
+        out_cols.append(total_col)
+    if value is not None:
+        out_cols.append(cumsum_col)
 
     wr = Window.partitionBy(group_col, "__coarse").orderBy(*order_cols)
     d = d.withColumn("__lrank", F.row_number().over(wr))
@@ -548,73 +506,51 @@ def _grouped_prefix_rank(
             or all(isinstance(r["__vsum"], int) for r in rows)
         )
         if literal_ok:
-            gdt = d.schema[group_col].dataType
-            gsql = gdt.simpleString()
+            # per group: coarse bucket -> preceding-bucket offsets, and
+            # the group total; the join path's inner equi-join dropped
+            # null-group rows, mirrored by the filter below
             per: dict = {}
             for r in rows:
-                if r[group_col] is None:
-                    # the join path's inner equi-join dropped
-                    # null-group rows; mirrored by the filter below
-                    continue
-                per.setdefault(r[group_col], {})[r["__coarse"]] = r
-            # rendered as SQL text, one F.expr parse per map — NOT
-            # per-node Column calls (see _sql_lit)
-            cnt_entries, tot_entries, sum_entries = [], [], []
+                if r[group_col] is not None:
+                    per.setdefault(r[group_col], {})[r["__coarse"]] = r
+            off_cnt, off_sum, totals = {}, {}, {}
             for g, sub in per.items():
-                gl = _sql_lit(g)
-                if gl is None:
-                    literal_ok = False
-                    break
                 run_c, run_v = 0, 0
-                inner_cnt, inner_sum = [], []
+                off_cnt[g], off_sum[g] = {}, {}
                 for c in sorted(sub):
-                    inner_cnt.append(f"{c},{run_c}L")
-                    if value is not None:
-                        inner_sum.append(f"{c},{run_v}L")
+                    off_cnt[g][c], off_sum[g][c] = run_c, run_v
                     run_c += sub[c]["__cnt"]
                     if value is not None:
                         run_v += sub[c]["__vsum"]
-                cnt_entries.append(f"{gl},map({','.join(inner_cnt)})")
-                if total_col is not None:
-                    tot_entries.append(f"{gl},{run_c}L")
-                if value is not None:
-                    sum_entries.append(f"{gl},map({','.join(inner_sum)})")
+                totals[g] = run_c
+            gdt = d.schema[group_col].dataType
+            per_coarse = T.MapType(gdt, T.MapType(T.IntegerType(), T.LongType()))
+            try:
+                cnt_sql = sql_literal(off_cnt, per_coarse)
+                tot_sql = (None if total_col is None else
+                           sql_literal(totals, T.MapType(gdt, T.LongType())))
+                sum_sql = None if value is None else sql_literal(off_sum, per_coarse)
+            except ValueError:
+                literal_ok = False  # an unrenderable group type
         if literal_ok:
-            def _mapexpr(items, vsql):
-                return F.expr(
-                    f"CAST(map({','.join(items)}) AS MAP<{gsql},{vsql}>)"
-                )
-
+            # one F.expr parse per map, not per-node Column calls
             gk, ck = F.col(group_col), F.col("__coarse")
-            off_cnt = F.element_at(
-                F.element_at(
-                    _mapexpr(cnt_entries, "MAP<INT,BIGINT>"), gk
-                ),
-                ck,
-            )
             out = d.filter(gk.isNotNull()).withColumn(
-                rank_col, (off_cnt + F.col("__lrank")).cast("long")
+                rank_col,
+                (F.element_at(F.element_at(F.expr(cnt_sql), gk), ck)
+                 + F.col("__lrank")).cast("long"),
             )
-            if total_col is not None:
-                out = out.withColumn(
-                    total_col,
-                    F.element_at(_mapexpr(tot_entries, "BIGINT"), gk),
-                )
-            if value is not None:
+            if tot_sql is not None:
+                out = out.withColumn(total_col, F.element_at(F.expr(tot_sql), gk))
+            if sum_sql is not None:
                 out = out.withColumn(
                     cumsum_col,
-                    F.element_at(
-                        F.element_at(
-                            _mapexpr(sum_entries, "MAP<INT,BIGINT>"), gk
-                        ),
-                        ck,
-                    )
+                    F.element_at(F.element_at(F.expr(sum_sql), gk), ck)
                     + F.col("__lsum"),
-                ).drop("__lsum")
-            out = out.drop("__coarse", "__lrank")
-            return finalize_cached(out, *cached)
-        # fall through (empty input or float value sums): the lazy
-        # broadcast-join path below is the semantics of record
+                )
+            return finalize_cached(out.select(*out_cols), *cached)
+        # empty input, float value sums or an unrenderable group type:
+        # the lazy broadcast-join path below is the semantics of record
     a, b = tot.alias("a"), tot.alias("b")
     preceding = F.col("b.__coarse") < F.col("a.__coarse")
     if total_col is None:
@@ -657,10 +593,8 @@ def _grouped_prefix_rank(
         rank_col, (F.col("__off_cnt") + F.col("__lrank")).cast("long")
     )
     if value is not None:
-        out = out.withColumn(
-            cumsum_col, F.col("__off_sum") + F.col("__lsum")
-        ).drop("__lsum", "__off_sum")
-    out = out.drop("__coarse", "__lrank", "__off_cnt")
+        out = out.withColumn(cumsum_col, F.col("__off_sum") + F.col("__lsum"))
+    out = out.select(*out_cols)
     if not materialize:
         return out
     return finalize_cached(out, *cached)

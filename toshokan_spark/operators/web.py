@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from toshokan_spark.literals import literal_relation
+
 #: query parameters that carry tracking state, not content identity —
 #: the strip set used by the common web-curation stacks (utm_* click
 #: attribution, Facebook/Google/Microsoft click ids, Mailchimp email
@@ -361,7 +363,7 @@ def pagerank(
         )
         del probe
         spark = edges.sparkSession
-        return spark.createDataFrame(out_rows, "node long, rank_e12 long")
+        return literal_relation(spark, out_rows, "node long, rank_e12 long")
     del probe
     # the loop-invariant frames (edges, out-degrees, node set) are
     # read EVERY iteration — persist once or each round would rescan

@@ -34,6 +34,8 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from toshokan_spark.literals import literal_relation
+
 #: internal columns the indexer adds that curation must not see
 _INTERNAL_PREFIXES = ("__tokens__",)
 _INTERNAL_COLS = ("_dynamic",)
@@ -214,8 +216,8 @@ def curate(
         from toshokan_spark.operators import web
 
         if blocked_domains:
-            dom = spark.createDataFrame(
-                [(d,) for d in blocked_domains], "domain string"
+            dom = literal_relation(
+                spark, [(d,) for d in blocked_domains], "domain string"
             )
             raw, seen = _checkpoint(
                 web.domain_filter(raw, dom, url_col="url", mode="block"))

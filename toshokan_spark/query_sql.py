@@ -39,7 +39,6 @@ paths and over-long phrases :class:`CompileError`.
 
 from __future__ import annotations
 
-import math
 import re
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -47,6 +46,7 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType
 
 from toshokan_spark.config import DYNAMIC_FIELD_NAME, IndexConfig
 from toshokan_spark.functions.datetime_ import MAX_TS_SECONDS, MIN_TS_SECONDS
@@ -58,6 +58,7 @@ from toshokan_spark.functions.tokenizers import (
     analyze_term,
 )
 from toshokan_spark.ingest import ipkey_col, tokens_col
+from toshokan_spark.literals import sql_literal
 from toshokan_spark.plans.ast import (
     All,
     BoolQuery,
@@ -75,8 +76,12 @@ from toshokan_spark.plans.ast import (
 )
 
 _NON_ALNUM_RE = r"[^\p{L}\p{N}]"
-#: the `default` tokenizer split pattern (tokenizers._NON_ALNUM)
-_NON_ALNUM_SPLIT = r"[^\p{L}\p{N}]+"
+#: the literal types the compiler renders (literals.sql_literal)
+_STR, _DBL = StringType(), DoubleType()
+#: the `default` tokenizer split pattern (tokenizers._NON_ALNUM) and
+#: the whitespace one, as SQL literals
+_NON_ALNUM_SPLIT = sql_literal(r"[^\p{L}\p{N}]+", _STR)
+_WS_SPLIT = sql_literal(r"\s+", _STR)
 
 #: expression-size guard: the compiled phrase match chains O(k)
 #: slice/array_position nodes; beyond this a pathological query would
@@ -139,27 +144,12 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _s(text: str) -> str:
-    """Single-quote a SQL string literal (backslash escapes on)."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _dbl(v: float) -> str:
-    """A DOUBLE literal (plain ``5.0`` would parse as DECIMAL; NaN and
-    the infinities have no numeric literal and cast from text)."""
-    if math.isnan(v):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(v):
-        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-    return f"CAST({v!r} AS DOUBLE)"
-
-
 def _tok_sql(col_sql: str, tokenizer: str) -> str:
     """SQL text of ``tokenize(col, tokenizer)`` — the exact chain of
     functions/tokenizers.py, the stemmer as a named function."""
     if tokenizer in ("default", "en_stem"):
         toks = (
-            f"transform(filter(split({col_sql}, {_s(_NON_ALNUM_SPLIT)}, -1), "
+            f"transform(filter(split({col_sql}, {_NON_ALNUM_SPLIT}, -1), "
             f"__t -> length(__t) > 0 AND octet_length(__t) <= "
             f"{TOKEN_BYTE_LIMIT}), __t -> lower(__t))"
         )
@@ -171,7 +161,7 @@ def _tok_sql(col_sql: str, tokenizer: str) -> str:
         )
     if tokenizer == "whitespace":
         return (
-            f"filter(split({col_sql}, {_s(chr(92) + 's+')}, -1), "
+            f"filter(split({col_sql}, {_WS_SPLIT}, -1), "
             f"__t -> length(__t) > 0)"
         )
     raise AssertionError(tokenizer)
@@ -182,7 +172,7 @@ def _default_positions_sql(col_sql: str) -> str:
     token is not indexed but keeps its place, as ``''`` (which no
     query word equals), so a phrase never spans it."""
     return (
-        f"transform(filter(split({col_sql}, {_s(_NON_ALNUM_SPLIT)}, -1), "
+        f"transform(filter(split({col_sql}, {_NON_ALNUM_SPLIT}, -1), "
         f"__t -> length(__t) > 0), __t -> CASE WHEN octet_length(__t) <= "
         f"{TOKEN_BYTE_LIMIT} THEN lower(__t) ELSE '' END)"
     )
@@ -252,7 +242,7 @@ def _token_seq_match_sql(toks: str, words: list, slop: int) -> str:
     k = len(words)
     slop = min(max(slop, 0), MAX_SLOP)
     if k == 1:
-        return f"array_contains({toks}, {_s(words[0])})"
+        return f"array_contains({toks}, {sql_literal(words[0], _STR)})"
     if k > MAX_PHRASE_WORDS:
         raise CompileError(
             f"phrase has {k} words; the compiled match is capped at "
@@ -265,7 +255,7 @@ def _token_seq_match_sql(toks: str, words: list, slop: int) -> str:
         return (f"exists(array({toks}), __tk -> "
                 f"{_token_seq_match_sql('__tk', words, slop)})")
     n = f"size({toks})"
-    rest = "array(" + ",".join(_s(w) for w in words[1:]) + ")"
+    rest = "array(" + ",".join(sql_literal(w, _STR) for w in words[1:]) + ")"
     lim = k - 1 + slop
     # slice() is 1-based: the window [acc+1 .. limit] (0-based)
     # starts at acc+2; its length is capped at size(toks), which
@@ -281,7 +271,7 @@ def _token_seq_match_sql(toks: str, words: list, slop: int) -> str:
         f"ELSE CAST(-1 AS BIGINT) END"
     )
     init = (
-        f"CASE WHEN get({toks}, __i) = {_s(words[0])} "
+        f"CASE WHEN get({toks}, __i) = {sql_literal(words[0], _STR)} "
         f"THEN CAST(__i AS BIGINT) ELSE CAST(-1 AS BIGINT) END"
     )
     match_at = (
@@ -296,7 +286,7 @@ def _token_seq_match_sql(toks: str, words: list, slop: int) -> str:
     # overwhelming majority of rows (the inverted-index discipline:
     # intersect postings first, verify positions on candidates only).
     guard = " AND ".join(
-        f"array_contains({toks}, {_s(w)})" for w in words)
+        f"array_contains({toks}, {sql_literal(w, _STR)})" for w in words)
     return (
         f"CASE WHEN {n} >= {k} AND {guard} THEN "
         f"coalesce(exists(sequence(0, {n} - {k}), __i -> {match_at}), "
@@ -312,7 +302,7 @@ def _token_seq_prefix_match_sql(toks: str, words: list,
     :func:`_token_seq_match_sql` with one startswith step appended."""
     if not words:
         return (f"coalesce(exists({toks}, __t2 -> "
-                f"startswith(__t2, {_s(prefix)})), false)")
+                f"startswith(__t2, {sql_literal(prefix, _STR)})), false)")
     k = len(words)
     if k + 1 > MAX_PHRASE_WORDS:
         raise CompileError(
@@ -320,7 +310,7 @@ def _token_seq_prefix_match_sql(toks: str, words: list,
             f"{MAX_PHRASE_WORDS}"
         )
     if len(words) > 1:
-        rest = "array(" + ",".join(_s(w) for w in words[1:]) + ")"
+        rest = "array(" + ",".join(sql_literal(w, _STR) for w in words[1:]) + ")"
     else:
         # an empty literal array() is ARRAY<VOID>; the fold needs
         # string elements
@@ -336,13 +326,13 @@ def _token_seq_prefix_match_sql(toks: str, words: list,
         f"ELSE CAST(-1 AS BIGINT) END"
     )
     init = (
-        f"CASE WHEN get({toks}, __i) = {_s(words[0])} "
+        f"CASE WHEN get({toks}, __i) = {sql_literal(words[0], _STR)} "
         f"THEN CAST(__i AS BIGINT) ELSE CAST(-1 AS BIGINT) END"
     )
     last = f"aggregate({rest}, {init}, (__acc, __w) -> {step})"
     match_at = (
         f"coalesce(({last} >= 0) AND startswith("
-        f"get({toks}, CAST({last} + 1 AS INT)), {_s(prefix)}), false)"
+        f"get({toks}, CAST({last} + 1 AS INT)), {sql_literal(prefix, _STR)}), false)"
     )
     return (
         f"CASE WHEN {n} >= {k + 1} THEN "
@@ -477,35 +467,36 @@ class QueryCompiler:
         default to `raw`."""
         m = _q(map_col)
         dotted = ".".join(path)
-        col = f"{m}[{_s(dotted)}]"
+        col = f"{m}[{sql_literal(dotted, _STR)}]"
         if len(path) > 1:
             rest = "$." + ".".join(path[1:])
-            col = (f"coalesce({col}, "
-                   f"get_json_object({m}[{_s(path[0])}], {_s(rest)}))")
+            head = sql_literal(path[0], _STR)
+            col = (f"coalesce({col}, get_json_object("
+                   f"{m}[{head}], {sql_literal(rest, _STR)}))")
         return _SqlTarget(kind="dynamic", col=col, tokenizer=tokenizer,
                           tokens=_tok_sql(col, tokenizer))
 
     # -- literal coercion -----------------------------------------------
     def _typed_lit(self, t: _SqlTarget, lit: str) -> Optional[str]:
         if t.kind in ("text", "dynamic"):
-            return _s(lit)
+            return sql_literal(lit, _STR)
         if t.kind == "number":
             n = _num(lit)
             if n is None:
                 return None
             if t.number_type == "f64":
-                return _dbl(float(n))
+                return sql_literal(float(n), _DBL)
             if t.number_type == "u64":
                 # decimal(20,0) column; the literal goes through text
                 # (an int >= 2^63 is no BIGINT)
                 if isinstance(n, int) and 0 <= n <= (1 << 64) - 1:
-                    return f"CAST({_s(str(n))} AS DECIMAL(20,0))"
+                    return f"CAST({sql_literal(str(n), _STR)} AS DECIMAL(20,0))"
                 if not isinstance(n, int):
-                    return _dbl(float(n))
+                    return sql_literal(float(n), _DBL)
                 return None
             if float(n).is_integer():
                 return f"CAST({int(n)} AS BIGINT)"
-            return _dbl(float(n))
+            return sql_literal(float(n), _DBL)
         if t.kind == "boolean":
             low = lit.strip().lower()
             if low in ("true", "false"):
@@ -522,7 +513,7 @@ class QueryCompiler:
             return f"TIMESTAMP '{txt}'"
         if t.kind == "ip":
             try:
-                return _s(ip_literal_key(lit))
+                return sql_literal(ip_literal_key(lit), _STR)
             except ValueError:
                 return None
         raise AssertionError(t.kind)
@@ -597,13 +588,13 @@ class QueryCompiler:
         scan as an EqualNullSafe source filter."""
         if t.tokenizer == "raw":
             if t.kind == "text" and t.array:
-                return f"array_contains({t.col}, {_s(text)})"
-            return f"{t.col} <=> {_s(text)}"
+                return f"array_contains({t.col}, {sql_literal(text, _STR)})"
+            return f"{t.col} <=> {sql_literal(text, _STR)}"
         toks = analyze_term(text, t.tokenizer)
         if not toks:
             return "false"
         if len(toks) == 1:
-            return f"array_contains({t.tokens}, {_s(toks[0])})"
+            return f"array_contains({t.tokens}, {sql_literal(toks[0], _STR)})"
         return self._adjacency(t, toks)
 
     def _positions(self, t: _SqlTarget) -> str:
@@ -624,7 +615,7 @@ class QueryCompiler:
         if not words or not _is_column(t.tokens):
             return fold
         guard = " AND ".join(
-            f"array_contains({t.tokens}, {_s(w)})" for w in words)
+            f"array_contains({t.tokens}, {sql_literal(w, _STR)})" for w in words)
         return f"{guard} AND {fold}"
 
     def _adjacency(self, t: _SqlTarget, words: list,
@@ -654,8 +645,8 @@ class QueryCompiler:
             )
             if t.kind == "text" and t.array:
                 return (f"exists({t.col}, "
-                        f"__e -> lower(__e) RLIKE {_s(pat)})")
-            return f"lower({t.col}) RLIKE {_s(pat)}"
+                        f"__e -> lower(__e) RLIKE {sql_literal(pat, _STR)})")
+            return f"lower({t.col}) RLIKE {sql_literal(pat, _STR)}"
         if t.kind == "text" and t.array:
             return (f"exists({_element_positions_sql(t.col, t.tokenizer)}, "
                     f"__el -> {_token_seq_match_sql('__el', words, slop)})")
@@ -688,8 +679,8 @@ class QueryCompiler:
         if t.tokenizer == "raw" and t.kind == "text":
             # whole-value equality; a raw ARRAY matches on some element
             if t.array:
-                return f"array_contains({t.col}, {_s(node.text)})"
-            return f"{t.col} <=> {_s(node.text)}"
+                return f"array_contains({t.col}, {sql_literal(node.text, _STR)})"
+            return f"{t.col} <=> {sql_literal(node.text, _STR)}"
         # analyze with the FIELD's tokenizer (tantivy QueryParser
         # behavior) — on an en_stem field the phrase words are stemmed
         # to match the stemmed index tokens
@@ -740,7 +731,7 @@ class QueryCompiler:
             arr = _tok_sql("__v", "default")
             return (
                 f"coalesce(exists({vals}, __v -> "
-                f"array_contains({arr}, {_s(toks[0])})), false)"
+                f"array_contains({arr}, {sql_literal(toks[0], _STR)})), false)"
             )
         pat = (
             f"(^|{_NON_ALNUM_RE})"
@@ -748,7 +739,7 @@ class QueryCompiler:
             + f"({_NON_ALNUM_RE}|$)"
         )
         return (f"coalesce(exists({vals}, __v -> "
-                f"lower(__v) RLIKE {_s(pat)}), false)")
+                f"lower(__v) RLIKE {sql_literal(pat, _STR)}), false)")
 
     def _render_phrase_prefix(self, node: PhrasePrefix) -> str:
         """match-phrase-prefix (ES autocomplete; see
@@ -774,8 +765,8 @@ class QueryCompiler:
         if t.tokenizer == "raw":
             if t.kind == "text" and t.array:
                 return (f"coalesce(exists({t.col}, __e -> "
-                        f"startswith(__e, {_s(node.text)})), false)")
-            return (f"coalesce(startswith({t.col}, {_s(node.text)}), "
+                        f"startswith(__e, {sql_literal(node.text, _STR)})), false)")
+            return (f"coalesce(startswith({t.col}, {sql_literal(node.text, _STR)}), "
                     f"false)")
         raw_words = [w for w in node.text.split() if w]
         if not raw_words:
@@ -821,7 +812,7 @@ class QueryCompiler:
                 lp = node.text.lower()
                 parts.append(
                     f"coalesce(exists({vals}, __v -> exists({arr}, "
-                    f"__t3 -> startswith(__t3, {_s(lp)}))), false)"
+                    f"__t3 -> startswith(__t3, {sql_literal(lp, _STR)}))), false)"
                 )
             return _any(parts)
         t = self.resolve(node.field)
@@ -830,11 +821,11 @@ class QueryCompiler:
         p = self._analyzed_probe(t, node.text)
         if t.tokenizer == "raw":
             if t.kind == "text" and t.array:
-                m = f"exists({t.col}, __e -> startswith(__e, {_s(p)}))"
+                m = f"exists({t.col}, __e -> startswith(__e, {sql_literal(p, _STR)}))"
             else:
-                m = f"startswith({t.col}, {_s(p)})"
+                m = f"startswith({t.col}, {sql_literal(p, _STR)})"
         else:
-            m = f"exists({t.tokens}, __t -> startswith(__t, {_s(p)}))"
+            m = f"exists({t.tokens}, __t -> startswith(__t, {sql_literal(p, _STR)}))"
         return f"coalesce(({m}), false)"
 
     def _render_fuzzy(self, node: Fuzzy) -> str:
@@ -857,14 +848,14 @@ class QueryCompiler:
         if t.tokenizer == "raw":
             if t.kind == "text" and t.array:
                 m = (f"exists({t.col}, "
-                     f"__e -> levenshtein(__e, {_s(p)}) <= {d})")
+                     f"__e -> levenshtein(__e, {sql_literal(p, _STR)}) <= {d})")
             else:
-                m = f"levenshtein({t.col}, {_s(p)}) <= {d}"
+                m = f"levenshtein({t.col}, {sql_literal(p, _STR)}) <= {d}"
         else:
             m = (
                 f"exists({t.tokens}, __t -> "
                 f"abs(length(__t) - {len(p)}) <= {d} "
-                f"AND levenshtein(__t, {_s(p)}) <= {d})"
+                f"AND levenshtein(__t, {sql_literal(p, _STR)}) <= {d})"
             )
         return f"coalesce(({m}), false)"
 
@@ -887,7 +878,7 @@ class QueryCompiler:
                 parts.append(
                     f"coalesce(exists({vals}, __v -> "
                     f"exists({arr}, __t3 -> __t3 RLIKE "
-                    f"{_s(anchored)})), false)"
+                    f"{sql_literal(anchored, _STR)})), false)"
                 )
             return _any(parts)
         t = self.resolve(node.field)
@@ -904,7 +895,7 @@ class QueryCompiler:
         No index structure prunes a regexp, so it composes with OTHER
         clauses' pushdown rather than bringing its own."""
         t = self.resolve(node.field)
-        pat = _s("^(?:" + node.pattern + ")$")
+        pat = sql_literal("^(?:" + node.pattern + ")$", _STR)
         if t.kind in ("text", "dynamic"):
             if t.tokenizer == "raw":
                 if t.kind == "text" and t.array:
@@ -929,9 +920,9 @@ class QueryCompiler:
                           if b is not None]
             if bounds_num and all(b is not None for b in bounds_num):
                 target = f"try_cast({t.col} AS DOUBLE)"
-                mk = lambda b: _dbl(float(_num(b)))  # noqa: E731
+                mk = lambda b: sql_literal(float(_num(b)), _DBL)  # noqa: E731
             else:
-                mk = _s
+                mk = lambda b: sql_literal(b, _STR)  # noqa: E731
         else:
             mk = lambda b: self._typed_lit(t, b)  # noqa: E731
 

@@ -40,7 +40,8 @@ from toshokan_spark.catalog import FsCatalog
 from toshokan_spark.config import DYNAMIC_FIELD_NAME, IndexConfig
 from toshokan_spark.ingest import is_internal
 from toshokan_spark.query import time_bounds
-from toshokan_spark.query_sql import compile_query_fast, sql_expr
+from toshokan_spark.literals import literal_relation, sql_literal
+from toshokan_spark.query_sql import _DBL, _STR, _q, compile_query_fast, sql_expr
 from toshokan_spark.plans.ast import parse_query
 
 
@@ -1011,11 +1012,12 @@ def manifest_stats(
         T.StructField("n_values", T.LongType(), False),
         T.StructField("min_v", T.DoubleType(), True),
         T.StructField("max_v", T.DoubleType(), True),
-        T.StructField("sum_dec", T.DecimalType(38, 6), True),
+        # the 6-place decimal sum rides as its exact text
+        T.StructField("sum_txt", T.StringType(), True),
     ])
-    one = spark.createDataFrame(
-        [(n_hits, n_values, min_v, max_v, total)], schema
-    )
+    one = literal_relation(
+        spark, [(n_hits, n_values, min_v, max_v, str(total))], schema
+    ).withColumn("sum_dec", F.col("sum_txt").cast(T.DecimalType(38, 6)))
     return one.select(
         "n_hits",
         "n_values",
@@ -1507,7 +1509,7 @@ def filters_agg(
         for n in names
     ]
     one = df.agg(*aggs)
-    stack = ", ".join(f"'{n}', `{n}`" for n in names)
+    stack = ", ".join(f"{sql_literal(n, _STR)}, {_q(n)}" for n in names)
     return one.select(
         F.expr(f"stack({len(names)}, {stack}) AS (bucket, n_hits)")
     )
@@ -1753,7 +1755,7 @@ def adjacency_matrix_agg(
         for key, p in cells
     ]
     one = df.agg(*aggs)
-    stack = ", ".join(f"'{key}', `{key}`" for key, _ in cells)
+    stack = ", ".join(f"{sql_literal(key, _STR)}, {_q(key)}" for key, _ in cells)
     return one.select(
         F.expr(f"stack({len(cells)}, {stack}) AS (bucket, n_hits)")
     )
@@ -1866,7 +1868,7 @@ def manifest_histogram(
             T.StructField("n_hits", T.LongType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return literal_relation(spark, rows, schema)
 
 
 def percentile_ranks_agg(
@@ -1889,7 +1891,8 @@ def percentile_ranks_agg(
     ]
     one = hits.agg(*aggs)
     stack = ", ".join(
-        f"{float(v)!r}D, `__le_{i}`" for i, v in enumerate(values)
+        f"{sql_literal(float(v), _DBL)}, `__le_{i}`"
+        for i, v in enumerate(values)
     )
     long = one.select(
         F.col("__n"),
@@ -2381,8 +2384,8 @@ def percolate(
     cases = []
     for qid, q in queries:
         sql = render_query_sql(q, config, cols)  # raises on bad queries
-        esc = qid.replace("\\", "\\\\").replace("'", "\\'")
-        cases.append(f"CASE WHEN coalesce(({sql}), false) THEN '{esc}' END")
+        cases.append(f"CASE WHEN coalesce(({sql}), false) "
+                     f"THEN {sql_literal(qid, _STR)} END")
     if cases:
         arr = sql_expr("array(" + ",".join(cases) + ")", docs.sparkSession)
     else:
@@ -2748,8 +2751,8 @@ def phrase_suggest(
     )
     # persist-to-unpersist span under try/finally (ADVICE r16): a
     # raise from the count, the candidate collect, or the wq
-    # createDataFrame must not leak the vocab cache entry for the
-    # session lifetime
+    # relation must not leak the vocab cache entry for the session
+    # lifetime
     try:
         vv = uni.count()  # |V| — one scalar; the action fills the cache
 
@@ -2762,23 +2765,10 @@ def phrase_suggest(
         # word.
         spark = docs.sparkSession
         lim = int(max_dist)
-        # query words as a LITERAL relation (the _literal_frame
-        # recipe): createDataFrame parallelizes a pickled RDD whose
-        # broadcast build runs its own collect job; F.lit keeps
-        # arbitrary token bytes out of SQL-text escaping
-        wq = spark.range(1).select(
-            F.inline(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).cast("int").alias("wi"),
-                            F.lit(w).alias("qw"),
-                        )
-                        for i, w in enumerate(words)
-                    ]
-                )
-            )
-        )
+        # query words as a literal relation, which broadcasts
+        # straight from the driver (literals.literal_relation)
+        wq = literal_relation(
+            spark, list(enumerate(words)), "wi int, qw string")
         cw = Window.partitionBy("wi").orderBy(
             F.col("__d").asc(), F.col("cu").desc(), F.col("w").asc()
         )
@@ -2815,9 +2805,9 @@ def phrase_suggest(
         phrases.append((pid, " ".join(ws)))
         for pos in range(len(ws) - 1):
             trans.append((pid, pos, ws[pos], ws[pos + 1]))
-    pdf = spark.createDataFrame(phrases, "pid long, phrase string")
-    tdf = spark.createDataFrame(
-        trans, "pid long, pos int, w1 string, w2 string"
+    pdf = literal_relation(spark, phrases, "pid long, phrase string")
+    tdf = literal_relation(
+        spark, trans, "pid long, pos int, w1 string, w2 string"
     )
     # restrict the corpus count tables to the candidate pairs BEFORE
     # broadcasting: the bigram table is corpus-vocabulary-sized, the
@@ -2831,19 +2821,8 @@ def phrase_suggest(
     # aggregate a third time just to re-read ≤ 20 counts)
     # literal relation for the same reason as wq above: the ≤ |firsts|
     # collected counts broadcast straight from the driver
-    uni_f = spark.range(1).select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(w).alias("w"),
-                        F.lit(cu_of[w]).cast("long").alias("cu"),
-                    )
-                    for w in firsts
-                ]
-            )
-        )
-    )
+    uni_f = literal_relation(
+        spark, [(w, cu_of[w]) for w in firsts], "w string, cu long")
     scored = (
         tdf.join(F.broadcast(bg_f), ["w1", "w2"], "left")
         .join(F.broadcast(uni_f.withColumnRenamed("w", "w1")
