@@ -37,33 +37,29 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
+    from toshokan_spark.session import local_session, session_cpus
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("toshokan_spark_bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # 222 queries in one JVM: the ContextCleaner's reference-
-        # tracking queue (broadcasts, shuffles, cached blocks) drains
-        # lazily by default and its backlog taxes late queries; a
-        # periodic full GC bounds it (see BENCH_REMEASURE_r14.json —
-        # the r13 1.14x late-suite drift reverted in a fresh session
-        # with identical code).
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .getOrCreate()
+    cpus = session_cpus()
+    spark = local_session(
+        "toshokan_spark_bench",
+        cpus,
+        {
+            "spark.sql.shuffle.partitions": str(max(cpus * 2, 8)),
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+            # 222 queries in one JVM: the ContextCleaner's reference-
+            # tracking queue (broadcasts, shuffles, cached blocks) drains
+            # lazily by default and its backlog taxes late queries; a
+            # periodic full GC bounds it (see BENCH_REMEASURE_r14.json —
+            # the r13 1.14x late-suite drift reverted in a fresh session
+            # with identical code).
+            "spark.cleaner.periodicGC.interval": "2min",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry
 

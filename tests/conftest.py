@@ -1,20 +1,21 @@
 import os
+import sys
 
 import pytest
+
+# the repo root, so tests import tools/ and __spark_entry__ as the
+# tools themselves do
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from toshokan_spark.session import local_session
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("toshokan_spark_tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    # local[4] with 8 shuffle partitions: the job budgets the tests pin
+    # were counted on this shape
+    s = local_session(
+        "toshokan_spark_tests", 4, {"spark.sql.shuffle.partitions": "8"}
     )
     yield s
     s.stop()

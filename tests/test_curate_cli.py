@@ -8,6 +8,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from tools.measure import count_jobs, plans_of
+
 
 def _corpus_rows():
     """The e2e corpus: unicode twins, a near-dup, symbol soup and 40
@@ -60,23 +62,6 @@ def curated(spark, tmp_path_factory):
     root, output dir)."""
     tmp = tmp_path_factory.mktemp("curate_cli")
     return _create_and_index(tmp, "curidx", _corpus_rows()), str(tmp / "out")
-
-
-def _plans_of(spark, fn):
-    """Physical plan descriptions of the SQL executions *fn* runs,
-    read from the status store."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        bus.waitUntilEmpty()
-        execs = store.executionsList()
-        return [execs.apply(i) for i in range(execs.size())]
-
-    before = {e.executionId() for e in executions()}
-    fn()
-    return [e.physicalPlanDescription() for e in executions()
-            if e.executionId() not in before]
 
 
 def _python_plans(plans):
@@ -209,7 +194,7 @@ def test_curate_checkpoints_every_stage(spark, curated):
 
     cat_root, _ = curated
     spark.catalog.clearCache()  # start from an empty CacheManager
-    plans = _plans_of(spark, lambda: curate(
+    plans = plans_of(spark, lambda: curate(
         spark, FsCatalog(cat_root), "curidx", source_field="source",
         dedup_method="minhash", tail_rate=0.5, seq_len=64))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -242,8 +227,6 @@ def test_default_curate_runs_no_python_step_and_no_count_job(spark, curated):
     checkpoints' own jobs, and on text with no unassigned code point
     the pass composes NFC on the JVM, so no SQL execution plans a
     Python evaluation node."""
-    from test_segment_schema import _count_jobs
-
     from toshokan_spark.catalog import FsCatalog
     from toshokan_spark.pipeline import curate
 
@@ -251,11 +234,11 @@ def test_default_curate_runs_no_python_step_and_no_count_job(spark, curated):
     out = {}
 
     def run():
-        out["jobs"] = _count_jobs(spark, lambda: out.setdefault("res", curate(
+        out["jobs"] = count_jobs(spark, lambda: out.setdefault("res", curate(
             spark, FsCatalog(cat_root), "curidx", source_field="source",
             dedup_method="minhash")))
 
-    plans = _plans_of(spark, run)
+    plans = plans_of(spark, run)
     assert out["res"].counts == DEFAULT_MINHASH_COUNTS
     assert out["jobs"] <= CURATE_JOB_BUDGET, out["jobs"]
     assert not _python_plans(plans)
@@ -270,7 +253,7 @@ def test_curate_text_with_unassigned_code_point_takes_the_udf(spark, tmp_path):
 
     cat_root = _create_and_index(tmp_path, "kirat", _corpus_rows() + [KIRAT_RAI])
     out = {}
-    plans = _plans_of(spark, lambda: out.setdefault("res", curate(
+    plans = plans_of(spark, lambda: out.setdefault("res", curate(
         spark, FsCatalog(cat_root), "kirat", source_field="source",
         dedup_method="minhash")))
     assert out["res"].counts == UNASSIGNED_MINHASH_COUNTS

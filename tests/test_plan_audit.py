@@ -1,19 +1,15 @@
-"""Plan-health gate: run tools/plan_audit.py's auditor over headline
+"""Plan-health gate: run tools/measure.py's auditor over headline
 driver queries so scan-count / pushdown / join-strategy regressions
 fail the suite loudly instead of silently shipping a 100 TB-hostile
 plan. (The audit tool existed since round 2; this wires it into CI —
 VERDICT r2 item 9.)
 """
 
-import os
 import re
-import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.plan_audit import audit  # noqa: E402
+from tools.measure import audit
 
 #: queries whose plans we pin invariants on; dedup entries are excluded
 #: from scan asserts (they return eagerly-materialized pair sets, so

@@ -1004,7 +1004,7 @@ def test_64_one_day_segments_plan_one_scan(spark, tmp_path):
 
     from toshokan_spark.catalog import FsCatalog, SegmentEntry, uuid7
 
-    from test_segment_schema import _count_jobs
+    from tools.measure import count_jobs
 
     catalog = FsCatalog(str(tmp_path / "catalog"))
     config = IndexConfig(
@@ -1048,8 +1048,8 @@ def test_64_one_day_segments_plan_one_scan(spark, tmp_path):
 
     run("level:L1")  # first-use warm-up
     # 64 paths: the listing job, then the scan
-    assert _count_jobs(spark, lambda: run("level:L1")) == 2
+    assert count_jobs(spark, lambda: run("level:L1")) == 2
     # 16 kept segments: no listing job
     bounded = "ts:[2024-01-11T00:00:00Z TO 2024-01-27T00:00:00Z} AND level:L1"
     assert len(run(bounded)) == 16
-    assert _count_jobs(spark, lambda: run(bounded)) == 1
+    assert count_jobs(spark, lambda: run(bounded)) == 1

@@ -23,7 +23,7 @@ from toshokan_spark.maintenance import create_index, merge_segments
 from toshokan_spark.operators.dedup import poly_hash
 from toshokan_spark.storage import join_path
 
-from test_segment_schema import _count_jobs
+from tools.measure import count_jobs
 
 EVENT_FIELDS = [
     FieldConfig(name="event_id", type="number", number_type="i64"),
@@ -97,11 +97,11 @@ def test_commit_and_merge_job_budgets(spark, tmp_path, shape):
     create_index(catalog, cfg)
     write_segment(catalog, cfg, ingest_projection(_lines(spark, shape, 1), cfg))  # warm-up
     typed = ingest_projection(_lines(spark, shape, 2), cfg)
-    assert _count_jobs(spark, lambda: write_segment(catalog, cfg, typed)) == WRITE_SEGMENT_JOBS
+    assert count_jobs(spark, lambda: write_segment(catalog, cfg, typed)) == WRITE_SEGMENT_JOBS
     segs = catalog.segments(shape)
     text = "message" if events else "text"
     assert len(segs) == 2 and all(text in s.token_blooms for s in segs)
-    assert _count_jobs(
+    assert count_jobs(
         spark, lambda: merge_segments(spark, catalog, shape)
     ) == MERGE_JOBS
     (merged,) = catalog.segments(shape)

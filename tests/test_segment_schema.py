@@ -7,7 +7,6 @@ without a recorded schema, and recorded schemas that conflict, fall
 back to inference."""
 
 import json
-import uuid
 from dataclasses import replace
 
 import pytest
@@ -22,6 +21,8 @@ from toshokan_spark.search import (
     search,
 )
 from toshokan_spark.storage import join_path
+
+from tools.measure import count_jobs
 
 FIELDS = [
     FieldConfig(name="id", type="number"),
@@ -88,20 +89,6 @@ def _assert_same_scan(pinned, inferred):
     assert pinned.schema == inferred.schema, (pinned.schema, inferred.schema)
     assert pinned.columns == inferred.columns
     assert _rows(pinned) == _rows(inferred)
-
-
-def _count_jobs(spark, fn):
-    """Spark jobs *fn* runs, counted through a job group."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("timed", [True, False])
@@ -283,19 +270,19 @@ def test_search_job_budgets_on_four_segment_time_index(spark, tmp_path):
     bounded = "ts:[2024-01-02T00:00:00Z TO 2024-01-02T23:59:59Z] AND level:INFO"
     for q in (bounded, "*"):
         search(spark, catalog, "budget", q, limit=10)  # first-use warm-up
-        assert _count_jobs(
+        assert count_jobs(
             spark, lambda q=q: search(spark, catalog, "budget", q, limit=10)
         ) == 1, q
     scored = lambda: scored_search_df(  # noqa: E731
         spark, catalog, "budget", "msg:alpha OR msg:gamma", "msg", limit=5
     ).collect()
     scored()
-    assert _count_jobs(spark, scored) == SCORED_JOBS
+    assert count_jobs(spark, scored) == SCORED_JOBS
     # the inference path, for contrast: one mergeSchema job reads the
     # footers of every kept segment
     ver, segs, dels = catalog.snapshot("budget")
     catalog._try_write_version("budget", ver + 1, [replace(s, schema=None) for s in segs], dels)
-    assert _count_jobs(
+    assert count_jobs(
         spark, lambda: search(spark, catalog, "budget", "*", limit=10)
     ) == 2
 

@@ -34,21 +34,19 @@ def main() -> int:
         print(f"run tools/gen_sf.py 1.0 {sf1_dir} first", file=sys.stderr)
         return 2
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("toshokan_spark_ann_recall_sf1")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    from toshokan_spark.session import local_session, session_cpus
+
+    cpus = session_cpus()
+    spark = local_session(
+        "toshokan_spark_ann_recall_sf1",
+        cpus,
+        {
+            "spark.sql.shuffle.partitions": str(max(cpus * 2, 8)),
+            "spark.driver.memory": "8g",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from toshokan_spark.operators import similarity
 

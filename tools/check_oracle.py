@@ -89,16 +89,10 @@ def main() -> int:
     only = set(argv[1:])
     record: dict[str, dict] = {}
 
-    from pyspark.sql import SparkSession
+    from toshokan_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check_oracle")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = local_session(
+        "check_oracle", conf={"spark.sql.shuffle.partitions": "16"}
     )
     import __spark_entry__ as entry
 

@@ -73,22 +73,19 @@ def main() -> int:
                   file=sys.stderr)
             return 2
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("toshokan_spark_knn_scale_probe")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    from toshokan_spark.session import local_session, session_cpus
+
+    cpus = session_cpus()
+    spark = local_session(
+        "toshokan_spark_knn_scale_probe",
+        cpus,
+        {
+            "spark.sql.shuffle.partitions": str(max(cpus * 2, 8)),
+            "spark.driver.memory": "8g",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from toshokan_spark.operators import similarity
 
@@ -165,7 +162,7 @@ def main() -> int:
     for tag, d, ratio in scales:
         run_scale(tag, d, ratio, out)
 
-    doc = {"metric": "knn_graph_scale_probe", "cpus": int(cpus),
+    doc = {"metric": "knn_graph_scale_probe", "cpus": cpus,
            "note": ("best-of-2 per config (sf4 fixed8: single run), "
                     "one session per invocation; fixed8 = the "
                     "declared-entry configuration (num_planes=8), auto "

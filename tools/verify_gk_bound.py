@@ -36,15 +36,9 @@ def main() -> int:
 
     import duckdb
 
-    from pyspark.sql import SparkSession
+    from toshokan_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("verify_gk_bound")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("verify_gk_bound")
 
     import __spark_entry__ as entry
 

@@ -47,20 +47,9 @@ from toshokan_spark.config import IndexConfig
 
 
 def _spark():
-    from pyspark.sql import SparkSession
+    from toshokan_spark.session import local_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("toshokan_spark")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # plan DEBUG strings default to a ~2 GB cap; deep self-joining
-        # lineages (dedup star-contraction) can OOM the driver just
-        # PRINTING a plan. 1 MB keeps every diagnostic readable.
-        .config("spark.sql.maxPlanStringLength", "1048576")
-        .getOrCreate()
-    )
+    return local_session("toshokan_spark")
 
 
 def main(argv: list[str] | None = None) -> int:

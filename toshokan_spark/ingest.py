@@ -321,9 +321,3 @@ def ingest_projection(
         out = out.filter(~F.col(REJECT_COL)).drop(REJECT_COL)
     return out
 
-
-def ingest_jsonl(
-    spark, path: str, config: IndexConfig, keep_rejects: bool = False
-) -> DataFrame:
-    """Batch JSONL file source (`src/commands/sources/buf_source.rs:17-49`)."""
-    return ingest_projection(spark.read.text(path), config, keep_rejects=keep_rejects)

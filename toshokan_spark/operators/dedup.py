@@ -645,33 +645,17 @@ def incremental_jaccard_matches(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(text: Column, num_hashes: int = 128, k: int = 3) -> Column:
-    """array<long> MinHash signature as a single Column (per-row HOF
-    evaluation; prefer :func:`minhash_signatures` for pipelines — see
-    its scale note).
-
-    Hash family: xxhash64(i, shingle) for i in 0..num_hashes-1 —
-    deterministic, JVM-side, 64-bit.
-    """
-    sh = shingles_col(text, k)
-
-    def one(i: int):
-        # closure (not a default arg) — a 2-param lambda would be
-        # treated as transform's (value, index) signature
-        return F.array_min(F.transform(sh, lambda s: F.xxhash64(F.lit(i), s)))
-
-    return F.array(*[one(i) for i in range(num_hashes)])
-
-
 def minhash_signatures(
     sh_df: DataFrame,
     num_hashes: int = 128,
     id_col: str = "id",
     sh_col: str = "sh",
     hash_family: str = "xxhash",
+    keep_shingles: bool = False,
 ) -> DataFrame:
     """(id, shingles) -> (id, sig array<long>) as ONE narrow
-    projection — no explode, no shuffle.
+    projection — no explode, no shuffle. ``keep_shingles`` carries the
+    shingle column through: (id, shingles, sig).
 
     Hash family: Kirsch-Mitzenmacher double hashing — two base
     xxhash64 draws per shingle, h_i = (h1 + i*h2) mod (2^31 - 1) —
@@ -688,6 +672,7 @@ def minhash_signatures(
     reference would otherwise re-run the whole hash matrix.
     """
     M = (1 << 31) - 1
+    keep = [id_col, sh_col] if keep_shingles else [id_col]
     if hash_family == "poly":
         # SQL-auditable family, Arrow-batched: the per-char fold is a
         # higher-order ``aggregate`` lambda, which Spark evaluates
@@ -699,7 +684,7 @@ def minhash_signatures(
         # 'poly_expr' keeps the pure-SQL formulation as the executable
         # spec the UDF is tested bit-equal against.
         return sh_df.select(
-            id_col,
+            *keep,
             _minhash_poly_sig_udf(num_hashes)(F.col(sh_col)).alias("sig"),
         )
     if hash_family == "poly_expr":
@@ -718,8 +703,8 @@ def minhash_signatures(
             )
         ),
     )
-    return sh_df.select(id_col, h1.alias("__h1"), h2.alias("__h2")).select(
-        id_col, sig.alias("sig")
+    return sh_df.select(*keep, h1.alias("__h1"), h2.alias("__h2")).select(
+        *keep, sig.alias("sig")
     )
 
 
@@ -770,30 +755,11 @@ def corpus_minhash_signatures(
     candidate verification needs it; at 100 TB you would persist this
     frame partitioned/bucketed by id and let the verify join read
     only the candidate ids."""
-    sh_df = staged_shingles(df, id_col, text_col, k, shingle_unit)
-    if hash_family == "poly":
-        return sh_df.select(
-            "id", "sh", _minhash_poly_sig_udf(num_hashes)(F.col("sh")).alias("sig")
-        )
-    M = (1 << 31) - 1
-    if hash_family == "poly_expr":
-        h1 = F.transform(F.col("sh"), lambda s: poly_hash(s, 31, 0))
-        h2 = F.transform(F.col("sh"), lambda s: poly_hash(s, 37, 7))
-    else:
-        h1 = F.transform(F.col("sh"), lambda s: F.pmod(F.xxhash64(s), F.lit(M)))
-        h2 = F.transform(
-            F.col("sh"), lambda s: F.pmod(F.xxhash64(F.lit(-1), s), F.lit(M))
-        )
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.zip_with(
-                F.col("__h1"), F.col("__h2"), lambda a, b: F.pmod(a + i * b, F.lit(M))
-            )
-        ),
-    )
-    return sh_df.select("id", "sh", h1.alias("__h1"), h2.alias("__h2")).select(
-        "id", "sh", sig.alias("sig")
+    return minhash_signatures(
+        staged_shingles(df, id_col, text_col, k, shingle_unit),
+        num_hashes,
+        hash_family=hash_family,
+        keep_shingles=True,
     )
 
 

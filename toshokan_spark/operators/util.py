@@ -24,16 +24,6 @@ def _size_bytes(s: str) -> int:
     return int(s)
 
 
-#: diagnostic seam (VERDICT r16 finding 2): when a list is installed
-#: here, :func:`finalize_cached` appends the EXECUTED (post-AQE) plan
-#: string of every frame it materializes — the real pre-checkpoint
-#: shape that the returned frame's own ``explain()`` can no longer
-#: show (it is a bare ``Scan ExistingRDD`` over the checkpoint).
-#: Installed only by measurement tooling (tools/profile_entry.py
-#: --plan-at); must stay ``None`` in production.
-PLAN_SINK: "list[str] | None" = None
-
-
 def finalize_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Materialize *result* now with an eager ``localCheckpoint()``,
     then release every intermediate in *cached* (frames the caller
@@ -63,17 +53,13 @@ def finalize_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
     ``local[2]``: ``dedup_ngram_jaccard`` 14 → 11 jobs;
     ``dedup_minhash_lsh``, whose intermediates are checkpointed too,
     23 → 13).
+
+    The returned frame's ``explain()`` is a bare ``Scan ExistingRDD``;
+    the executed plan behind it is the checkpoint's SQL execution in
+    the status store (``tools/measure.py --plans`` writes it out).
     """
     try:
-        out = result.localCheckpoint()
-        if PLAN_SINK is not None:
-            try:
-                PLAN_SINK.append(
-                    result._jdf.queryExecution().executedPlan().toString()
-                )
-            except Exception:  # diagnostics must never fail the query
-                pass
-        return out
+        return result.localCheckpoint()
     finally:
         for df in cached:
             df.unpersist()
